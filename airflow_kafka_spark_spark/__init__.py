@@ -16,7 +16,7 @@ Layout (SURVEY.md §7):
     plans/         the query catalog consumed by __spark_entry__ (queries +
                    DuckDB oracle SQL)
 
-All analytics run on executors via DataFrame/Window/applyInPandas — the
+All analytics run on executors via DataFrame/Window/Arrow kernels — the
 reference's driver-side pandas detour (reference spark/stock_analysis.py:153
 ``toPandas()`` inside ``foreachBatch``) is deliberately not reproduced.
 """

@@ -3,8 +3,9 @@
 Spark has no built-in EMA (it is an order-sensitive recursion, not a frame
 aggregate). The reference computes it with pandas ``ewm(span=N,
 adjust=False)`` on the driver (reference spark/stock_analysis.py:186-190);
-here the identical recurrence runs on *executors* as a grouped-map
-``applyInPandas`` kernel, parallel per key partition:
+here the identical recurrence runs on *executors*, inside the
+partition-sorted ``mapInArrow`` kernel (``operators.indicators.with_macd``)
+and the streaming state processors (``streaming.stateful``):
 
     alpha = 2 / (span + 1)
     y[0]  = x[0]
@@ -16,9 +17,11 @@ DuckDB recursive-CTE oracle, which evaluates the same expression shape.
 pandas ``ewm(adjust=False)`` computes the same recurrence to within 1 ULP
 per step (unit-tested).
 
-Scale note: state is per-key and sequential *within* a key only; keys are
-hash-distributed, so a 1000-executor cluster runs one small pandas frame
-per key concurrently. Arrow-batched transfer, no driver involvement.
+:func:`macd_recurrence_state` is the one owner of how MACD state crosses a
+boundary (Arrow batch, micro-batch, replay chunk); every caller goes
+through it. Scale note: state is per-key and sequential *within* a key
+only; keys are hash-distributed, so a 1000-executor cluster runs every
+key's recurrence concurrently, Arrow-batched, with no driver involvement.
 """
 
 from __future__ import annotations
@@ -42,9 +45,11 @@ def ema_recurrence(x: np.ndarray, span: int) -> np.ndarray:
     ``α·x + β·y`` (not pandas' divide-by-(w+α) form), so NaN-free series
     — every oracled fixture, and the streaming continuation contract —
     are bit-identical to the DuckDB recursive-CTE oracle as before.
-    Pending gap decay does NOT cross calls: a NaN run ending a batch is
-    forgotten at a ``_continue_ema`` boundary (the seed re-enters as a
-    fresh observation) — documented limit, NaN-free by contract there.
+    Pending gap decay crosses a call only through the full state triple
+    of :func:`ema_recurrence_state`. The streaming state store keeps the
+    value alone, so a NaN run ending a micro-batch is forgotten at that
+    boundary (the value re-enters as a fresh observation) — documented
+    limit, NaN-free by contract there.
     """
     return ema_recurrence_state(x, span)[0]
 
@@ -59,11 +64,11 @@ def ema_recurrence_state(
     pending_w)`` (``None`` = fresh series) and returns the outputs plus
     the terminal state. Feeding a series through in chunks with the
     carried state is bit-identical to one call over the whole array —
-    INCLUDING a NaN run straddling a chunk boundary, which the
-    prepend-seed idiom (``streaming.stateful._continue_ema``) forgets
-    by construction (its documented limit). The chunked batch kernel
-    (``operators.indicators.with_macd``) therefore carries this full
-    triple, never just the value."""
+    INCLUDING a NaN run straddling a chunk boundary. Seeding with
+    ``(v, True, 1.0)`` resumes from a stored value ``v`` alone, which
+    forgets any pending gap (the streaming state store's documented
+    limit); the chunked batch kernel (``operators.indicators.with_macd``)
+    carries the full triple instead."""
     alpha = 2.0 / (span + 1.0)
     beta = 1.0 - alpha
     out = np.empty(len(x), dtype=np.float64)
@@ -98,6 +103,28 @@ def ema_recurrence_state(
     return out, (sval, have_state, w)
 
 
+def macd_recurrence_state(
+    close: np.ndarray,
+    fast: int = 12,
+    slow: int = 26,
+    signal: int = 9,
+    state: tuple | None = None,
+) -> tuple[tuple[np.ndarray, ...], tuple]:
+    """The MACD state carry: EMA(fast), EMA(slow), line = fast − slow and
+    EMA(signal) of the line over ``close``, resumed from ``state`` — a
+    ``(fast, slow, signal)`` triple of :func:`ema_recurrence_state`
+    states, any of which may be ``None`` (``state=None`` = fresh
+    series). Returns ``(ema_fast, ema_slow, line, signal_line)`` and the
+    terminal state triple; an empty ``close`` returns the state
+    unchanged."""
+    st_fast, st_slow, st_sig = state if state is not None else (None,) * 3
+    ema_fast, st_fast = ema_recurrence_state(close, fast, st_fast)
+    ema_slow, st_slow = ema_recurrence_state(close, slow, st_slow)
+    line = ema_fast - ema_slow
+    sig, st_sig = ema_recurrence_state(line, signal, st_sig)
+    return (ema_fast, ema_slow, line, sig), (st_fast, st_slow, st_sig)
+
+
 def macd_columns(
     close: np.ndarray,
     fast: int = 12,
@@ -108,9 +135,5 @@ def macd_columns(
     spark/stock_analysis.py:186-191): EMA(fast) − EMA(slow), EMA(signal) of
     the line, and their difference. Defined from the first row (no warm-up
     NULLs — ewm adjust=False seeds with x[0])."""
-    ema_fast = ema_recurrence(close, fast)
-    ema_slow = ema_recurrence(close, slow)
-    line = ema_fast - ema_slow
-    sig = ema_recurrence(line, signal)
-    hist = line - sig
-    return line, sig, hist
+    (_, _, line, sig), _ = macd_recurrence_state(close, fast, slow, signal)
+    return line, sig, line - sig

@@ -6,13 +6,14 @@ the RSI loss==0→0 quirk, ``ewm(adjust=False)`` MACD. Execution is native:
 
 - MA5/MA20/RSI: pure Window functions — whole-stage codegen, one hash
   shuffle on the key.
-- EMA/MACD: grouped-map ``applyInArrow`` (runs on executors). Arrow-native
-  rather than pandas: the kernel touches exactly one column (close →
-  float64 numpy, zero-copy) and appends three arrays — no per-group
-  pandas DataFrame materialization, which profiling showed costs ~6× the
-  math itself at 100k rows. Because the Window step already
-  hash-partitioned the data by the same key, Catalyst satisfies the
-  groupBy's distribution without a second shuffle.
+- EMA/MACD: partition-sorted ``mapInArrow`` (runs on executors), one
+  Python call per Arrow batch rather than per group. Arrow-native rather
+  than pandas: the kernel touches exactly one column (close → float64
+  numpy, zero-copy) and appends three arrays — no per-group pandas
+  DataFrame materialization, which profiling showed costs ~6× the math
+  itself at 100k rows. Because the Window step already hash-partitioned
+  and sorted the data by the same key, Catalyst satisfies the kernel's
+  repartition and sort without a second shuffle.
 
 At 100 TB the only state is per-key and per-partition; keys (symbols /
 users) are hash-distributed across executors, so the plan scales linearly
@@ -99,9 +100,10 @@ def with_macd(
     contiguous key runs are segmented vectorized (null keys compare
     equal, matching groupBy), and a group spanning batch boundaries
     continues through the carried full recurrence state
-    (:func:`..functions.ema.ema_recurrence_state` — value,
-    have-state, pending NaN-gap weight), bit-identical to one-shot by
-    construction and pinned by test at maxRecordsPerBatch=37.
+    (:func:`..functions.ema.macd_recurrence_state` — value,
+    have-state, pending NaN-gap weight per EMA), bit-identical to
+    one-shot by construction and pinned by test at
+    maxRecordsPerBatch=37.
 
     The explicit repartition keeps the operator correct standalone (a
     key split across partitions would silently restart its EMA);
@@ -114,29 +116,41 @@ def with_macd(
     the ma/rsi Windows) where the old pyarrow ``sort_by`` placed them
     last — the two indicator families previously disagreed on
     null-order rows; no declared query or fixture carries null order
-    keys. Float NaN KEYS would segment per-row (Arrow NaN != NaN)
-    where groupBy pools them — keys are ids/symbols by contract."""
+    keys. A float NaN KEY raises ``ValueError`` naming the column:
+    Arrow's NaN != NaN would segment it per row and silently restart
+    the EMA where groupBy pools NaN keys — keys are ids/symbols by
+    contract."""
     import pyarrow as pa
     import pyarrow.compute as pc
 
-    from ..functions.ema import ema_recurrence_state
+    from ..functions.ema import macd_recurrence_state
 
     out_schema = T.StructType(list(df.schema.fields) + MACD_FIELDS)
     cols = df.columns
     k_idx = [cols.index(c) for c in key_cols]
     c_idx = cols.index(close_col)
+    float_keys = [
+        (cols.index(c), c)
+        for c in key_cols
+        if isinstance(df.schema[c].dataType, (T.DoubleType, T.FloatType))
+    ]
 
     df = df.repartition(*[F.col(c) for c in key_cols]).sortWithinPartitions(
         *(list(key_cols) + list(order_cols))
     )
 
     def kernel(batches):
-        cur_key = None
-        st = [None, None, None]  # fast, slow, signal recurrence states
+        cur_key = st = None
         for batch in batches:
             n = batch.num_rows
             if n == 0:
                 continue
+            for i, name in float_keys:
+                if pc.any(pc.is_nan(batch.column(i))).as_py():
+                    raise ValueError(
+                        f"with_macd: NaN in key column {name!r}; NaN keys "
+                        "are outside the contract (NULL keys are one group)"
+                    )
             close = np.asarray(
                 batch.column(c_idx).to_numpy(zero_copy_only=False),
                 dtype=np.float64,
@@ -160,15 +174,11 @@ def with_macd(
             for s, e in zip(bounds[:-1], bounds[1:]):
                 key = tuple(batch.column(i)[int(s)].as_py() for i in k_idx)
                 if key != cur_key:
-                    st = [None, None, None]
-                    cur_key = key
-                seg = close[s:e]
-                ef, st[0] = ema_recurrence_state(seg, fast, st[0])
-                es, st[1] = ema_recurrence_state(seg, slow, st[1])
-                line = ef - es
-                sg, st[2] = ema_recurrence_state(line, signal, st[2])
-                line_out[s:e] = line
-                sig_out[s:e] = sg
+                    st, cur_key = None, key
+                (_, _, line, sg), st = macd_recurrence_state(
+                    close[s:e], fast, slow, signal, st
+                )
+                line_out[s:e], sig_out[s:e] = line, sg
             hist = line_out - sig_out
             for name, arr in (
                 ("macd_line", line_out),

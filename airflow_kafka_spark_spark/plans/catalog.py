@@ -8,7 +8,7 @@ equivalent ANSI SQL for the DuckDB oracle. Both sides are written for
   order-insensitive) and back to double — see operators.relational;
 - rolling means are left-associated lag-chains (same FP evaluation order
   everywhere) — see functions.windows.rolling_mean;
-- EMA/MACD use the identical recurrence shape in the applyInPandas kernel
+- EMA/MACD use the identical recurrence shape in the mapInArrow kernel
   and the recursive-CTE oracle;
 - hashes are md5 (byte-identical across engines);
 - every double output is ROUND(x, 6) + 0.0 (the +0.0 collapses -0.0).
@@ -410,7 +410,7 @@ SELECT user_id, event_id, ROUND(rsi, 6) + CAST(0 AS DOUBLE) AS rsi FROM rsi_f
 
 
 def q_ema_macd(spark, sf_dir):
-    """W7-W10: EMA-12/26 MACD via grouped-map applyInPandas."""
+    """W7-W10: EMA-12/26 MACD via the partition-sorted mapInArrow kernel."""
     df = with_macd(
         _events_series(spark, sf_dir), ["user_id"], ["ts", "event_id"], "close"
     )
@@ -448,8 +448,8 @@ def q_running_macd_cert(spark, sf_dir):
     The continuation leg replays each user's ordered close series
     through ``streaming.stateful.replay_macd_in_batches`` — k=3
     contiguous chunks folded through the EXACT production state carry
-    (``_continue_ema`` seeded with the previous chunk's terminal
-    state, the function both ``applyInPandasWithState`` and
+    (``_macd_batch`` resumed from the previous chunk's stored state
+    row, the function both ``applyInPandasWithState`` and
     ``transformWithState`` processors call). The one-shot leg is
     ``operators.indicators.with_macd``, the batch kernel the module
     claims to reproduce. The driver-facing output is ONE aggregate

@@ -20,8 +20,8 @@ Python SDK, while everything downstream stays JVM-side.
 
 from __future__ import annotations
 
+import datetime
 import json
-import math
 import os
 
 from pyspark.sql.datasource import (
@@ -32,6 +32,7 @@ from pyspark.sql.datasource import (
 )
 
 SCHEMA = "symbol string, current_price double, message string"
+_FIRST_DAY = datetime.date(2024, 1, 1)
 
 
 def _synthetic_history(symbol: str, n_bars: int) -> dict:
@@ -49,7 +50,8 @@ def _synthetic_history(symbol: str, n_bars: int) -> dict:
         c = round(price + drift, 2)
         bars.append(
             {
-                "time": f"2024-01-{(i % 28) + 1:02d}",
+                # one calendar day per bar: unique, ordered dates
+                "time": (_FIRST_DAY + datetime.timedelta(days=i)).isoformat(),
                 "open": o,
                 "high": round(max(o, c) + 0.5, 2),
                 "low": round(min(o, c) - 0.5, 2),

@@ -13,22 +13,23 @@ State is tiny and per-key — five doubles and a count — so a
 1000-executor cluster shards it by key hash with no hotspot; the state
 store checkpoints with the query, giving exactly-once state evolution on
 restart. The EMA continuation is *bit-exact* with the batch kernel: a
-recurrence's state at a batch boundary fully captures its history, so
-re-seeding ``ema_recurrence`` with the saved state and dropping the seed
-row reproduces the uninterrupted series (unit-tested in
-tests/test_stateful.py).
+recurrence's value at a batch boundary fully captures its NaN-free
+history, so resuming ``functions.ema.macd_recurrence_state`` from the
+stored values reproduces the uninterrupted series (unit-tested in
+tests/test_stateful.py). Both state APIs and the batch replay that
+certifies them run one helper, :func:`_macd_batch`.
 """
 
 from __future__ import annotations
 
-from typing import Any, Iterator, Tuple
+from typing import Any, Iterable, Iterator, Sequence, Tuple
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from ..functions.ema import ema_recurrence
+from ..functions.ema import macd_recurrence_state
 
 STATE_SCHEMA = (
     "n_rows long, ema12 double, ema26 double, macd_signal double"
@@ -40,32 +41,31 @@ OUTPUT_SCHEMA = (
 )
 
 
-def _continue_ema(x: np.ndarray, span: int, prev: float | None) -> np.ndarray:
-    """Run the EMA recurrence over ``x``, seeded with ``prev`` when a
-    prior batch left state behind (prepend-seed-and-drop: recurrence
-    state at a boundary fully captures its history)."""
-    if prev is None or np.isnan(prev):
-        return ema_recurrence(x, span)
-    return ema_recurrence(np.concatenate([[prev], x]), span)[1:]
-
-
-def _update_macd(
+def _macd_batch(
     key: Tuple[Any, ...],
-    pdfs: Iterator[pd.DataFrame],
-    state: GroupState,
-) -> Iterator[pd.DataFrame]:
-    if state.exists:
-        n_prev, e12_prev, e26_prev, sig_prev = state.get
-    else:
-        n_prev, e12_prev, e26_prev, sig_prev = 0, None, None, None
+    pdfs: Iterable[pd.DataFrame],
+    stored: Tuple[Any, ...] | None,
+    order_cols: Sequence[str] = ("date_str",),
+    close_col: str = "close",
+    spans: Tuple[int, int, int] = (12, 26, 9),
+) -> Tuple[pd.DataFrame, Tuple[Any, ...]]:
+    """One key's micro-batch of the delta-feed MACD: sort the rows, resume
+    the recurrence from ``stored`` (a ``STATE_SCHEMA`` row, ``None`` for a
+    new key), check the delta-feed contract, and return the
+    ``OUTPUT_SCHEMA`` frame with the state row to store.
 
-    pdf = pd.concat(list(pdfs)).sort_values("date_str")
-    close = pdf["close"].to_numpy(dtype=np.float64)
-    e12 = _continue_ema(close, 12, e12_prev)
-    e26 = _continue_ema(close, 26, e26_prev)
-    line = e12 - e26
-    sig = _continue_ema(line, 9, sig_prev)
-
+    The store keeps each EMA's value alone, so a value re-enters as a
+    fresh observation ``(v, True, 1.0)`` and a missing or NaN value as
+    no state; a NaN run ending a batch forgets its pending gap decay
+    (the documented limit in ``functions.ema``). An empty
+    batch carries the state through unchanged."""
+    n_prev, *values = stored if stored is not None else (0, None, None, None)
+    seed = tuple(
+        None if v is None or np.isnan(v) else (v, True, 1.0) for v in values
+    )
+    pdf = pd.concat(list(pdfs)).sort_values(list(order_cols), kind="mergesort")
+    close = pdf[close_col].to_numpy(dtype=np.float64)
+    (e12, e26, line, sig), st = macd_recurrence_state(close, *spans, seed)
     n_total = n_prev + len(close)
     # Delta-feed contract guard: when the upstream (quotefeed_deltas)
     # rides the snapshot length along, the cumulative bar count this
@@ -82,11 +82,10 @@ def _update_macd(
                 "quotefeed_deltas requires the stream to start with "
                 "numBars=1 so every bar enters state exactly once."
             )
-    state.update((n_total, float(e12[-1]), float(e26[-1]), float(sig[-1])))
-    yield pd.DataFrame(
+    frame = pd.DataFrame(
         {
             "symbol": key[0],
-            "date_str": pdf["date_str"].to_numpy(),
+            **{c: pdf[c].to_numpy() for c in order_cols},
             "close": close,
             "ema12": e12,
             "ema26": e26,
@@ -96,6 +95,17 @@ def _update_macd(
             "n_rows": np.int64(n_total),
         }
     )
+    return frame, (n_total, *(float(s[0]) for s in st))
+
+
+def _update_macd(
+    key: Tuple[Any, ...],
+    pdfs: Iterator[pd.DataFrame],
+    state: GroupState,
+) -> Iterator[pd.DataFrame]:
+    frame, stored = _macd_batch(key, pdfs, state.get if state.exists else None)
+    state.update(stored)
+    yield frame
 
 
 def quotefeed_deltas(raw: DataFrame) -> DataFrame:
@@ -115,12 +125,6 @@ def quotefeed_deltas(raw: DataFrame) -> DataFrame:
     module docstring argues for at 100 TB: the reference re-ships the
     full history every poll (spark/stock_analysis.py:57-78); here only
     the new bar crosses the wire into the stateful MACD.
-
-    Note the synthetic generator's dates wrap every 28 bars
-    (sources/quotefeed._synthetic_history) — within a micro-batch each
-    symbol has exactly one bar so running_macd's in-batch sort never
-    sees the wrap; examples/tests keep cycle counts below 28 anyway so
-    date_str stays unique per bar.
     """
     from pyspark.sql import functions as F
 
@@ -169,59 +173,19 @@ class RunningMacdProcessor(StatefulProcessor):
     positional state tuple; per-state TTL and timers become available
     for free when needed).
 
-    Deliberately reuses ``_continue_ema`` so all three surfaces — batch
-    kernel, applyInPandasWithState, transformWithState — share one
-    recurrence implementation (tests pin the equality).
+    Runs the same :func:`_macd_batch` as :func:`running_macd`, so both
+    surfaces share one state carry, one contract guard and one output
+    frame (tests pin the equality).
     """
 
     def init(self, handle: StatefulProcessorHandle) -> None:
         self._state = handle.getValueState("macd", STATE_SCHEMA)
 
     def handleInputRows(self, key, rows, timerValues):
-        if self._state.exists():
-            n_prev, e12_prev, e26_prev, sig_prev = self._state.get()
-        else:
-            n_prev, e12_prev, e26_prev, sig_prev = 0, None, None, None
-
-        pdf = pd.concat(list(rows)).sort_values("date_str")
-        close = pdf["close"].to_numpy(dtype=np.float64)
-        e12 = _continue_ema(close, 12, e12_prev)
-        e26 = _continue_ema(close, 26, e26_prev)
-        line = e12 - e26
-        sig = _continue_ema(line, 9, sig_prev)
-
-        n_total = n_prev + len(close)
-        # the same delta-feed contract guard as _update_macd — the
-        # "identical semantics" claim covers the ERROR surface too: a
-        # quotefeed_deltas stream started at numBars>1 must raise here
-        # exactly as it does on the applyInPandasWithState path, not
-        # silently continue the EMA from the wrong seed
-        if "snapshot_n" in pdf.columns:
-            expected = int(pdf["snapshot_n"].iloc[-1])
-            if n_total != expected:
-                raise ValueError(
-                    f"running_macd[{key[0]}]: cumulative bars seen "
-                    f"({n_total}) != upstream snapshot length "
-                    f"({expected}). quotefeed_deltas requires the stream "
-                    "to start with numBars=1 so every bar enters state "
-                    "exactly once."
-                )
-        self._state.update(
-            (n_total, float(e12[-1]), float(e26[-1]), float(sig[-1]))
-        )
-        yield pd.DataFrame(
-            {
-                "symbol": key[0],
-                "date_str": pdf["date_str"].to_numpy(),
-                "close": close,
-                "ema12": e12,
-                "ema26": e26,
-                "macd_line": line,
-                "macd_signal": sig,
-                "macd_histogram": line - sig,
-                "n_rows": np.int64(n_total),
-            }
-        )
+        stored = self._state.get() if self._state.exists() else None
+        frame, stored = _macd_batch(key, rows, stored)
+        self._state.update(stored)
+        yield frame
 
     def close(self) -> None:
         pass
@@ -258,69 +222,43 @@ def replay_macd_in_batches(
     certification surface for the module's bit-exactness claim.
 
     Per key, the ordered series is split into ``n_batches`` contiguous
-    chunks and folded chunk-by-chunk through the EXACT state carry the
-    streaming processors use: :func:`_continue_ema` seeded with the
-    previous chunk's terminal ``(ema_fast, ema_slow, macd_signal)``
-    state, mirroring ``_update_macd`` /
-    ``RunningMacdProcessor.handleInputRows`` line for line. On a
-    NaN-free series (the delta-feed contract; a NaN run ending a chunk
-    forgets its pending gap decay at the boundary — see
-    ``ema_recurrence``) the concatenated output must equal the
-    uninterrupted one-shot kernel (``operators.indicators.with_macd``)
-    bit for bit — ``running_macd_cert`` pins that equality under the
-    driver's oracle hash check.
+    chunks and folded chunk-by-chunk through :func:`_macd_batch`, the
+    same call both streaming processors make per micro-batch, with the
+    previous chunk's stored state row. On a NaN-free series (the
+    delta-feed contract; a NaN run ending a chunk forgets its pending
+    gap decay at the boundary — see ``functions.ema``) the
+    concatenated output must equal the uninterrupted one-shot kernel
+    (``operators.indicators.with_macd``) bit for bit —
+    ``running_macd_cert`` pins that equality under the driver's oracle
+    hash check.
 
-    Scale: grouped-map ``applyInPandas`` like the serving paths — one
-    shuffle on the key, per-key work bounded by history length. An
-    empty chunk (key with fewer rows than batches) carries state
-    through unchanged, exactly like a micro-batch with no rows for
-    that key."""
+    Scale: grouped-map ``applyInPandas`` — one shuffle on the key,
+    per-key work bounded by history length. An empty chunk (key with
+    fewer rows than batches) carries state through unchanged, exactly
+    like a micro-batch with no rows for that key."""
     from pyspark.sql import types as T
 
     keep = list(dict.fromkeys([*key_cols, *order_cols, close_col]))
+    macd_cols = ["macd_line", "macd_signal", "macd_histogram"]
     in_fields = {f.name: f for f in df.schema.fields}
     out_schema = T.StructType(
         [in_fields[c] for c in keep]
-        + [
-            T.StructField(n, T.DoubleType())
-            for n in ("macd_line", "macd_signal", "macd_histogram")
-        ]
+        + [T.StructField(n, T.DoubleType()) for n in macd_cols]
     )
     if n_batches < 1:
         raise ValueError(f"n_batches must be >= 1, got {n_batches}")
 
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(
-            list(order_cols), kind="mergesort"
-        ).reset_index(drop=True)
-        close = pdf[close_col].to_numpy(dtype=np.float64)
-        n = len(close)
-        bounds = [(n * b) // n_batches for b in range(n_batches + 1)]
-        e12_prev = e26_prev = sig_prev = None
-        lines: list[np.ndarray] = []
-        sigs: list[np.ndarray] = []
+    def kernel(key, pdf):
+        pdf = pdf.sort_values(list(order_cols), kind="mergesort")
+        n, stored, frames = len(pdf), None, []
         for b in range(n_batches):
-            chunk = close[bounds[b] : bounds[b + 1]]
-            if len(chunk) == 0:
-                continue
-            e12 = _continue_ema(chunk, fast, e12_prev)
-            e26 = _continue_ema(chunk, slow, e26_prev)
-            line = e12 - e26
-            sig = _continue_ema(line, signal, sig_prev)
-            e12_prev, e26_prev, sig_prev = (
-                float(e12[-1]),
-                float(e26[-1]),
-                float(sig[-1]),
+            chunk = pdf.iloc[(n * b) // n_batches : (n * (b + 1)) // n_batches]
+            frame, stored = _macd_batch(
+                key, [chunk], stored, order_cols, close_col, (fast, slow, signal)
             )
-            lines.append(line)
-            sigs.append(sig)
-        line = np.concatenate(lines) if lines else np.empty(0)
-        sig = np.concatenate(sigs) if sigs else np.empty(0)
-        out = pdf[keep].copy()
-        out["macd_line"] = line
-        out["macd_signal"] = sig
-        out["macd_histogram"] = line - sig
-        return out
+            frames.append(frame[macd_cols])
+        macd = pd.concat(frames, ignore_index=True)
+        return pd.concat([pdf[keep].reset_index(drop=True), macd], axis=1)
 
     return (
         df.select(*keep).groupBy(*key_cols).applyInPandas(kernel, out_schema)

@@ -89,8 +89,7 @@ def main() -> None:
     empty = [s for s in SYMBOLS if not by_symbol[s]]
     assert not empty, (
         f"stream produced no MACD rows for {empty} within the deadline "
-        "— loaded host; rerun (same slow-host artifact class as the "
-        "overshoot assert below)"
+        "— loaded host; rerun"
     )
 
     # --- the batch oracle --------------------------------------------
@@ -98,13 +97,6 @@ def main() -> None:
     worst = 0.0
     for s in SYMBOLS:
         n = max(by_symbol[s]) + 1
-        # The generator's date strings wrap every 28 bars and the batch
-        # leg orders by them — past 28 cycles the ordering is ambiguous
-        # and the bit-exactness check would fail spuriously.
-        assert n <= 28, (
-            f"stream overshot to {n} cycles for {s}; batch oracle's "
-            "date_str ordering wraps at 28 — rerun (slow-host artifact)"
-        )
         batch = (
             spark.read.format("quotefeed")
             .option("symbols", s)

@@ -369,3 +369,26 @@ def test_with_macd_cross_batch_carry_exact(spark):
         for j, (t, _) in enumerate(series):
             want = tuple(None if np.isnan(x) else x for x in (line[j], sig[j], hist[j]))
             assert got[(uid, t)] == want, (uid, t, got[(uid, t)], want)
+
+
+def test_with_macd_rejects_nan_key(spark):
+    """A float NaN key raises a named error instead of splitting its
+    group per row (Arrow NaN != NaN) and silently restarting the EMA
+    where groupBy would pool the rows; NULL keys stay one group."""
+    from pyspark.errors import PythonException
+
+    from airflow_kafka_spark_spark.functions.ema import macd_columns
+    from airflow_kafka_spark_spark.operators.indicators import with_macd
+
+    closes = [float(10 + t % 7) for t in range(12)]
+    schema = "k double, t int, close double"
+    ok = spark.createDataFrame(
+        [(k, t, c) for k in (None, 1.5) for t, c in enumerate(closes)], schema
+    )
+    line, _, _ = macd_columns(np.array(closes))
+    for r in with_macd(ok, ["k"], ["t"]).collect():
+        assert r["macd_line"] == line[r["t"]]
+
+    bad = ok.union(spark.createDataFrame([(float("nan"), 0, 1.0)], schema))
+    with pytest.raises(PythonException, match="ValueError.*NaN in key column 'k'"):
+        with_macd(bad, ["k"], ["t"]).collect()

@@ -136,6 +136,17 @@ def test_quotefeed_datasource_end_to_end(spark):
     }
 
 
+def test_quotefeed_synthetic_dates_unique():
+    """One calendar day per bar: 60 bars give 60 unique, increasing
+    dates, so (symbol, date) stays a key past the end of a month."""
+    from airflow_kafka_spark_spark.sources.quotefeed import _synthetic_history
+
+    times = [b["time"] for b in _synthetic_history("AAA", 60)["historical_data"]]
+    assert times == sorted(set(times)) and len(times) == 60
+    assert times[0] == "2024-01-01" and times[27] == "2024-01-28"
+    assert times[59] == "2024-02-29"
+
+
 def test_airflow_dag_wrapper_task_body():
     """examples/airflow_dag.py is the scheduler shell the reference
     keeps in dags/ (VERDICT r9 missing #4): without airflow installed

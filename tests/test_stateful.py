@@ -9,20 +9,64 @@ import tempfile
 import time
 
 import numpy as np
+import pandas as pd
 import pytest
 
 from airflow_kafka_spark_spark.functions.ema import ema_recurrence, macd_columns
-from airflow_kafka_spark_spark.streaming.stateful import _continue_ema, running_macd
+from airflow_kafka_spark_spark.streaming.stateful import (
+    RunningMacdProcessor,
+    _macd_batch,
+    _update_macd,
+    running_macd,
+)
 
 
-def test_continue_ema_bit_exact():
+def _prepend_seed_macd(x: np.ndarray, split: int):
+    """Reference continuation: every EMA's second leg re-runs the
+    one-shot recurrence over ``[prev] + tail`` and drops the seed row
+    (a missing or NaN ``prev`` restarts the series)."""
+
+    def carry(v, span):
+        head = ema_recurrence(v[:split], span)
+        prev = head[-1] if split else np.nan
+        if np.isnan(prev):
+            return np.concatenate([head, ema_recurrence(v[split:], span)])
+        tail = ema_recurrence(np.concatenate([[prev], v[split:]]), span)[1:]
+        return np.concatenate([head, tail])
+
+    e12, e26 = carry(x, 12), carry(x, 26)
+    return e12, e26, e12 - e26, carry(e12 - e26, 9)
+
+
+@pytest.mark.parametrize("split", [0, 1, 50, 199])
+def test_macd_batch_continuation_bit_exact(split):
+    """Two micro-batches through _macd_batch, the second resumed from the
+    first's stored state row, equal the prepend-seed continuation of all
+    three EMAs bit for bit, NaN runs included. Where the first batch does
+    not end in a NaN run they also equal the one-shot macd_columns; at
+    split 50 it does, and its pending gap decay is forgotten (the
+    documented limit of a value-only state store)."""
     rng = np.random.default_rng(7)
     x = rng.normal(size=200)
-    full = ema_recurrence(x, 12)
-    for split in (1, 50, 199):
-        head = ema_recurrence(x[:split], 12)
-        tail = _continue_ema(x[split:], 12, float(head[-1]))
-        assert np.array_equal(np.concatenate([head, tail]), full)
+    x[[0, 20, 21, 22, 47, 48, 49, 120, 121]] = np.nan
+    pdf = pd.DataFrame(
+        {"date_str": [f"d{i:03d}" for i in range(200)], "close": x}
+    )
+    head, stored = _macd_batch(("K",), [pdf.iloc[:split]], None)
+    tail, stored = _macd_batch(("K",), [pdf.iloc[split:]], stored)
+    got = pd.concat([head, tail])
+    e12, e26, line, sig = _prepend_seed_macd(x, split)
+    for col, want in (
+        ("ema12", e12), ("ema26", e26), ("macd_line", line),
+        ("macd_signal", sig), ("macd_histogram", line - sig),
+    ):
+        assert np.array_equal(got[col].to_numpy(), want, equal_nan=True), col
+    if split != 50:
+        one_line, one_sig, _ = macd_columns(x)
+        assert np.array_equal(line, one_line, equal_nan=True)
+        assert np.array_equal(sig, one_sig, equal_nan=True)
+    assert stored == (200, e12[-1], e26[-1], sig[-1])
+    assert got["n_rows"].iloc[-1] == 200
 
 
 def test_running_macd_across_microbatches(spark):
@@ -157,7 +201,7 @@ def _has_protobuf() -> bool:
     reason="transformWithStateInPandas state-server protocol needs the "
     "protobuf package, absent from this container (pip installs are "
     "unavailable) — the processor body is covered by "
-    "test_tws_processor_semantics_without_protocol below",
+    "test_state_surface_semantics_without_protocol below",
 )
 def test_transform_with_state_matches_batch_kernel(spark):
     """transformWithStateInPandas (Spark 4 API, RocksDB provider): two
@@ -232,22 +276,72 @@ def test_transform_with_state_matches_batch_kernel(spark):
         assert sub["n_rows"].iloc[-1] == 30
 
 
-def test_update_macd_rejects_numbars_gt_1():
+class FakeValueState:
+    """One in-memory state cell: transformWithState's ValueState."""
+
+    def __init__(self):
+        self._v = None
+
+    def exists(self):
+        return self._v is not None
+
+    def get(self):
+        return self._v
+
+    def update(self, v):
+        self._v = v
+
+
+class FakeGroupState:
+    """applyInPandasWithState's GroupState (properties, not methods)
+    over the same cell."""
+
+    def __init__(self, cell: FakeValueState):
+        self._cell = cell
+
+    exists = property(lambda self: self._cell.exists())
+    get = property(lambda self: self._cell.get())
+
+    def update(self, v):
+        self._cell.update(v)
+
+
+class FakeHandle:
+    def __init__(self, cell: FakeValueState):
+        self._cell = cell
+
+    def getValueState(self, name, schema, ttlDurationMs=None):
+        return self._cell
+
+
+def _pandas_with_state():
+    state = FakeGroupState(FakeValueState())
+    return lambda key, pdf: list(_update_macd(key, iter([pdf]), state))
+
+
+def _transform_with_state():
+    proc = RunningMacdProcessor()
+    proc.init(FakeHandle(FakeValueState()))
+    return lambda key, pdf: list(proc.handleInputRows(key, iter([pdf]), None))
+
+
+# Both state surfaces, driven without Spark (transformWithState's wire
+# protocol needs the optional protobuf package): state load,
+# continuation, guard, state save and output frame.
+STATE_SURFACES = pytest.mark.parametrize(
+    "surface",
+    [_pandas_with_state, _transform_with_state],
+    ids=["applyInPandasWithState", "transformWithState"],
+)
+
+
+@STATE_SURFACES
+def test_state_surface_rejects_numbars_gt_1(surface):
     """The delta-feed contract guard: when snapshot_n rides along and the
     cumulative bar count diverges from it (the numBars>1 failure mode —
     earlier bars never entered state), the kernel raises instead of
-    silently continuing the MACD from the wrong seed."""
-    import pandas as pd
-
-    from airflow_kafka_spark_spark.streaming.stateful import _update_macd
-
-    class FakeGroupState:
-        exists = False
-        get = None
-
-        def update(self, v):
-            pass
-
+    silently continuing the MACD from the wrong seed — on BOTH surfaces
+    (r12 review class: the guard once lived only in _update_macd)."""
     # numBars=30 shape: first message's snapshot already carries 30 bars
     # but only the tail bar enters the kernel -> 1 != 30 -> error
     bad = pd.DataFrame(
@@ -255,56 +349,24 @@ def test_update_macd_rejects_numbars_gt_1():
          "close": [42.0], "snapshot_n": [30]}
     )
     with pytest.raises(ValueError, match="numBars=1"):
-        list(_update_macd(("AAA",), iter([bad]), FakeGroupState()))
+        surface()(("AAA",), bad)
 
     # numBars=1 shape: snapshot length == cumulative count -> clean
-    good = bad.assign(snapshot_n=[1])
-    out = list(_update_macd(("AAA",), iter([good]), FakeGroupState()))
+    out = surface()(("AAA",), bad.assign(snapshot_n=[1]))
     assert out[0]["n_rows"].iloc[-1] == 1
 
     # no snapshot_n column (direct delta feeds) -> guard is inert
-    plain = bad.drop(columns=["snapshot_n"])
-    out = list(_update_macd(("AAA",), iter([plain]), FakeGroupState()))
+    out = surface()(("AAA",), bad.drop(columns=["snapshot_n"]))
     assert out[0]["close"].iloc[0] == 42.0
 
 
-def test_tws_processor_semantics_without_protocol():
-    """Drive RunningMacdProcessor directly with a fake typed-state
-    handle — the processor body (state load, recurrence continuation,
-    state save, output frame) is exercised without the protobuf wire
-    protocol the sandbox lacks. Two chunks == one batch kernel run,
-    bit for bit."""
-    import pandas as pd
-
-    from airflow_kafka_spark_spark.streaming.stateful import RunningMacdProcessor
-
-    class FakeValueState:
-        def __init__(self):
-            self._v = None
-
-        def exists(self):
-            return self._v is not None
-
-        def get(self):
-            return self._v
-
-        def update(self, v):
-            self._v = v
-
-        def clear(self):
-            self._v = None
-
-    class FakeHandle:
-        def __init__(self):
-            self.states = {}
-
-        def getValueState(self, name, schema, ttlDurationMs=None):
-            return self.states.setdefault(name, FakeValueState())
-
+@STATE_SURFACES
+def test_state_surface_semantics_without_protocol(surface):
+    """Two chunks through one surface == one batch kernel run, bit for
+    bit, with the state carried by the fake store."""
     rng = np.random.default_rng(5)
     series = rng.uniform(10, 100, size=40)
-    proc = RunningMacdProcessor()
-    proc.init(FakeHandle())
+    step = surface()
     outs = []
     for lo, hi in ((0, 25), (25, 40)):
         pdf = pd.DataFrame(
@@ -313,50 +375,13 @@ def test_tws_processor_semantics_without_protocol():
                 "close": series[lo:hi],
             }
         )
-        outs.extend(proc.handleInputRows(("AAA",), iter([pdf]), None))
+        outs.extend(step(("AAA",), pdf))
     got = pd.concat(outs).sort_values("date_str")
     line, sig, hist = macd_columns(series)
     assert np.array_equal(got["ema12"].to_numpy(), ema_recurrence(series, 12))
     assert np.array_equal(got["macd_signal"].to_numpy(), sig)
     assert np.array_equal(got["macd_histogram"].to_numpy(), hist)
     assert got["n_rows"].iloc[-1] == 40
-
-
-def test_tws_processor_rejects_numbars_gt_1():
-    """The delta-feed contract guard on the transformWithState surface
-    (r12 review class: the guard lived only in _update_macd, so the
-    'identical semantics' claim was false on the error surface — a
-    numBars>1 stream silently continued the EMA from the wrong seed
-    through the tws path while the applyInPandasWithState path
-    raised)."""
-    import pandas as pd
-
-    from airflow_kafka_spark_spark.streaming.stateful import RunningMacdProcessor
-
-    class FakeValueState:
-        def __init__(self):
-            self._v = None
-
-        def exists(self):
-            return self._v is not None
-
-        def get(self):
-            return self._v
-
-        def update(self, v):
-            self._v = v
-
-    class FakeHandle:
-        def getValueState(self, name, schema, ttlDurationMs=None):
-            return FakeValueState()
-
-    proc = RunningMacdProcessor()
-    proc.init(FakeHandle())
-    bad = pd.DataFrame(
-        {"date_str": ["2024-01-30"], "close": [42.0], "snapshot_n": [30]}
-    )
-    with pytest.raises(ValueError, match="numBars=1"):
-        list(proc.handleInputRows(("AAA",), iter([bad]), None))
 
 
 def test_quotefeed_delta_feed_macd_end_to_end(spark):
@@ -405,15 +430,6 @@ def test_quotefeed_delta_feed_macd_end_to_end(spark):
         by_symbol[r["symbol"]][r["n_rows"] - 1] = r
     for s, bars_seen in by_symbol.items():
         n = max(bars_seen) + 1
-        # The synthetic generator's date strings wrap every 28 bars; the
-        # batch leg below orders by them, so past 28 cycles duplicate
-        # date_str values would reorder the closes and fail spuriously.
-        # The stream should never get this far between the last count
-        # poll and q.stop() — make the failure mode explicit if it does.
-        assert n <= 28, (
-            f"stream overshot to {n} cycles for {s}; the batch oracle's "
-            "date_str ordering wraps at 28 — rerun (slow-host artifact)"
-        )
         assert sorted(bars_seen) == list(range(n))  # every bar exactly once
         batch = (
             spark.read.format("quotefeed")
@@ -442,7 +458,7 @@ def test_quotefeed_delta_feed_macd_end_to_end(spark):
 def test_replay_macd_in_batches_equals_one_shot_kernel(spark):
     """The certification surface behind the `running_macd_cert` catalog
     entry: folding each key's series through the production state
-    carry (_continue_ema) in k contiguous chunks must reproduce the
+    carry (_macd_batch) in k contiguous chunks must reproduce the
     one-shot with_macd kernel bit for bit — including keys with fewer
     rows than chunks (empty chunks carry state through unchanged, like
     a micro-batch with no rows for that key)."""

@@ -58,7 +58,7 @@ def main() -> int:
     for name in args.names:
         fn = qs[name]
         t0 = time.time()
-        ok, detail = True, ""
+        ok, details = True, []
         for ts_type in TS_TYPES:
             spark.conf.set("spark.sql.timestampType", ts_type)
             try:
@@ -67,15 +67,27 @@ def main() -> int:
                     oracle_pdf = con.execute(oracles[name]).df()
                     problems = compare(df, oracle_pdf)
                     if problems:
-                        ok, detail = False, f"{ts_type}: {problems[:3]}"
+                        ok = False
+                        details.append(f"{ts_type}: {problems[:3]}")
                         break
                 else:
                     pdf = df.limit(CANON_CAP).toPandas()
-                    pdf.sort_values(list(pdf.columns)).reset_index(drop=True)
-                    detail = f"rows_only={len(pdf)}"
+                    details.append(f"{ts_type}: rows_only={len(pdf)}")
+                    # the driver canonicalizes via pandas: a failure here
+                    # is the entry's output dtype, not the query
+                    try:
+                        pdf.sort_values(list(pdf.columns)).reset_index(drop=True)
+                    except Exception as exc:  # noqa: BLE001
+                        ok = False
+                        details.append(
+                            f"{ts_type} canon: {type(exc).__name__}: {exc}"
+                        )
+                        break
             except Exception as exc:  # noqa: BLE001
-                ok, detail = False, f"{ts_type}: {type(exc).__name__}: {exc}"
+                ok = False
+                details.append(f"{ts_type}: {type(exc).__name__}: {exc}")
                 break
+        detail = " ".join(details)
         status = "ok" if ok else "FAIL"
         bad += not ok
         print(f"{status:4s} {time.time() - t0:6.2f}s {name} {detail}", flush=True)
