@@ -954,7 +954,7 @@ def url_dedup_domain_cap(
     output is BIT-IDENTICAL to the unsalted path (the `url_dedup_salted`
     catalog entry certifies it against the same oracle SQL) while each
     sort partition holds ~1/P of the hottest domain. Measured both
-    ways (bench_scale `url_dedup_salted_skew`, same-run face-offs):
+    ways (same-run face-offs, CHANGELOG Round 12):
     on an UNskewed sf0.1 fixture the two-phase shape costs ~1.4x the
     single window (1.35 -> 1.86 s min-of-3, P=8); on a PLANTED hot
     domain holding 40% of a 3.2M-row corpus it wins 1.35-1.6x at P=8

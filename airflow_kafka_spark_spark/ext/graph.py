@@ -448,7 +448,6 @@ def transitive_closure(
     src: str = "child",
     dst: str = "parent",
     max_depth: int = 32,
-    strategy: str = "doubling",
 ) -> DataFrame:
     """Transitive reachability with path length — the hierarchical query
     (org chart roll-up, BOM explosion, category-tree flattening)
@@ -456,126 +455,84 @@ def transitive_closure(
     ``(src, dst, depth)`` for every ancestor reachable in ≤ ``max_depth``
     hops; on a DAG with multiple routes, ``depth`` is the SHORTEST.
 
-    Two strategies, same result (bench_scale ``closure_formulations``
-    measures both every round):
+    Path doubling: round k joins the ≤2^k-hop closure with itself —
+    at most ``ceil(log2(max_depth))`` join+min-depth-aggregate rounds,
+    then a ``depth <= max_depth`` filter (the doubled closure covers up
+    to ``2^ceil(log2(max_depth))`` hops; the filter trims the overshoot
+    for non-power-of-two ``max_depth`` so the completeness probe checks
+    the ≤ ``max_depth``-hop set). The ROUND count is bounded regardless
+    of depth, which is the scale-safety property: on a 1000-executor
+    cluster each round costs scheduler/barrier latency, and a
+    depth-1000 lineage chain at O(depth) rounds stalls on coordination
+    alone. The one-hop frontier expansion (O(depth) rounds, less total
+    work per round) lost the same-run face-off even on the shallow
+    sf0.1 customer tree once doubling gained its convergence early
+    exit: 3.17 s vs 4.93 s (CHANGELOG Round 11).
 
-    - ``"doubling"`` (default): round k joins the ≤2^k-hop closure with
-      itself — ``ceil(log2(max_depth))`` join+min-depth-aggregate
-      rounds, then a ``depth <= max_depth`` filter (the doubled closure
-      covers up to ``2^ceil(log2(max_depth))`` hops; the filter trims
-      the overshoot for non-power-of-two ``max_depth`` so both
-      strategies return — and the completeness probe checks — the same
-      ≤ ``max_depth``-hop set). The ROUND count is bounded regardless
-      of depth, which is the scale-safety property: on a 1000-executor
-      cluster each round costs scheduler/barrier latency, and a
-      depth-1000 lineage chain at O(depth) rounds stalls on
-      coordination alone. Total WORK is higher (the join input is the
-      whole closure, and a pair can be derived via several split
-      points before the min-depth fold).
-    - ``"frontier"``: classic one-hop expansion — O(depth) rounds over
-      a frontier that only shrinks: each round's expansion is deduped
-      (one row per new pair) and anti-joined against the closure so
-      far, so every output pair is produced exactly once, at its BFS
-      (= minimal) depth, even on dense multi-path DAGs. Less total
-      work than doubling. On the sf0.1 customer tree (depth 14)
-      the two land within machine noise of each other (2.9-5.6 s
-      across runs, winner flipping with ambient load — bench_scale
-      records both every round); the real separation appears when
-      depth grows: rounds cost coordination latency at cluster scale,
-      so prefer doubling when depth is large or unknown, frontier when
-      the hierarchy is known-shallow and work-bound.
-
-    Both cut lineage per round with localCheckpoint (the nested-plan
-    OOM lesson from connected_components) and raise loudly when the
-    hierarchy outruns ``max_depth`` — silent truncation would
+    Every round cuts lineage with localCheckpoint (the nested-plan OOM
+    lesson from connected_components), and the function raises loudly
+    when the hierarchy outruns ``max_depth`` — silent truncation would
     under-report ancestors. Cycles are NOT supported (a cycle makes
     "depth" unbounded); feed a DAG.
     """
     import math
 
-    if strategy not in ("doubling", "frontier"):
-        raise ValueError(f"strategy must be doubling|frontier, got {strategy!r}")
     reach = (
         edges.select(F.col(src).alias("__s"), F.col(dst).alias("__d"))
         .distinct()
         .withColumn("depth", F.lit(1))
         .localCheckpoint()
     )
-    if strategy == "frontier":
-        # semi-naive BFS: expand one hop, dedup the round's pairs (a
-        # multi-path DAG derives the same pair via several routes —
-        # without the fold the frontier grows multiplicatively with
-        # path count), then anti-join away pairs already reached (BFS
-        # order means first arrival IS the minimal depth, so dropped
-        # re-arrivals are never shorter)
-        frontier = reach
-        for hop in range(2, max_depth + 1):
-            frontier = (
-                frontier.join(
-                    edges.select(
-                        F.col(src).alias("__d"), F.col(dst).alias("__d2")
-                    ),
-                    "__d",
-                )
-                .select("__s", F.col("__d2").alias("__d"))
-                .distinct()
-                .join(reach.select("__s", "__d"), ["__s", "__d"], "left_anti")
-                .withColumn("depth", F.lit(hop))
-                .localCheckpoint()
+    rounds = max(1, math.ceil(math.log2(max_depth)))
+    # convergence early-exit: after round k the closure holds EVERY
+    # pair at distance <= 2^k, at its exact distance — so if the
+    # observed max depth is STRICTLY below that coverage bound, no
+    # deeper pair can exist (a pair at distance d implies sub-pairs at
+    # every distance < d, and those would have shown up), and if the
+    # pair count stopped growing the set is complete outright. Each
+    # remaining round would self-join the FULL closure for nothing —
+    # the most expensive no-op available. One cheap aggregate action
+    # per round over the just-checkpointed blocks cuts
+    # ceil(log2(max_depth)) rounds to ceil(log2(actual_depth)) when
+    # max_depth is a generous bound over a shallow tree (sf0.1 customer
+    # tree: depth 14 under max_depth=24 — round 5 was pure waste;
+    # 11.1 -> 4.7 s). Depths are min-folded, so the early exit returns
+    # the identical frame.
+    prev_n = reach.count()
+    for rnd in range(rounds):
+        ext = (
+            reach.alias("a")
+            .join(
+                reach.select(
+                    F.col("__s").alias("__d"),
+                    F.col("__d").alias("__d2"),
+                    F.col("depth").alias("__depth2"),
+                ),
+                "__d",
             )
-            if not frontier.take(1):
-                break
-            reach = reach.unionByName(frontier).localCheckpoint()
-    else:
-        rounds = max(1, math.ceil(math.log2(max_depth)))
-        # convergence early-exit: after round k the closure holds EVERY
-        # pair at distance <= 2^k, at its exact distance — so if the
-        # observed max depth is STRICTLY below that coverage bound, no
-        # deeper pair can exist (a pair at distance d implies sub-pairs
-        # at every distance < d, and those would have shown up), and if
-        # the pair count stopped growing the set is complete outright.
-        # Each remaining round would self-join the FULL closure for
-        # nothing — the most expensive no-op available. One cheap
-        # aggregate action per round over the just-checkpointed blocks
-        # cuts ceil(log2(max_depth)) rounds to ceil(log2(actual_depth))
-        # when max_depth is a generous bound over a shallow tree (sf0.1
-        # customer tree: depth 14 under max_depth=24 — round 5 was pure
-        # waste; 11.1 -> 4.7 s). Depths are min-folded, so the early
-        # exit returns the identical frame.
-        prev_n = reach.count()
-        for rnd in range(rounds):
-            ext = (
-                reach.alias("a")
-                .join(
-                    reach.select(
-                        F.col("__s").alias("__d"),
-                        F.col("__d").alias("__d2"),
-                        F.col("depth").alias("__depth2"),
-                    ),
-                    "__d",
-                )
-                .select(
-                    F.col("a.__s").alias("__s"),
-                    F.col("__d2").alias("__d"),
-                    (F.col("a.depth") + F.col("__depth2")).alias("depth"),
-                )
+            .select(
+                F.col("a.__s").alias("__s"),
+                F.col("__d2").alias("__d"),
+                (F.col("a.depth") + F.col("__depth2")).alias("depth"),
             )
-            reach = (
-                reach.unionByName(ext)
-                .groupBy("__s", "__d")
-                .agg(F.min("depth").alias("depth"))
-                .localCheckpoint()
-            )
-            row = reach.agg(
-                F.count(F.lit(1)).alias("n"), F.max("depth").alias("maxd")
-            ).first()
-            if row["n"] == prev_n or row["maxd"] < (1 << (rnd + 1)):
-                break
-            prev_n = row["n"]
-        # the doubled closure covers 2^rounds >= max_depth hops; trim
-        # the overshoot so non-power-of-two max_depth returns the same
-        # set (and trips the same probe) as the frontier strategy
-        reach = reach.filter(F.col("depth") <= F.lit(max_depth))
+        )
+        reach = (
+            reach.unionByName(ext)
+            .groupBy("__s", "__d")
+            .agg(F.min("depth").alias("depth"))
+            .localCheckpoint()
+        )
+        row = reach.agg(
+            F.count(F.lit(1)).alias("n"), F.max("depth").alias("maxd")
+        ).first()
+        if row["n"] == prev_n or row["maxd"] < (1 << (rnd + 1)):
+            break
+        prev_n = row["n"]
+    # the doubled closure covers 2^rounds >= max_depth hops; trim the
+    # overshoot so a non-power-of-two max_depth returns the
+    # <= max_depth-hop set (and trips the probe below when deeper
+    # pairs exist)
+    reach = reach.filter(F.col("depth") <= F.lit(max_depth))
     # completeness probe: any 1-hop extension of the closure that is NOT
     # already in it means max_depth was too small — fail loudly
     probe = (

@@ -1232,11 +1232,14 @@ def quantize_embeddings(
     )
 
 
+_PQ_DEFAULT_SEED = 7
+
+
 def pq_codebooks(
     embeddings: DataFrame,
     m: int = 8,
     n_codes: int = 32,
-    seed: int = 7,
+    seed: int = _PQ_DEFAULT_SEED,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
     centroids: list[list[float]] | None = None,
@@ -1332,8 +1335,8 @@ def pq_encode(
     JVM-only rule: the assignment is an argmin over m·n_codes centroid
     distances per row, which as built-in expressions becomes a ~256-fold
     codegen blob that measured 2 kvec/s, while one numpy broadcast over
-    each Arrow batch does the identical math at vector-math speed (~40×
-    faster at the 10× probe, bench_scale.py pq_encode_scaling). Still a
+    each Arrow batch does the identical math at vector-math speed (2 →
+    33 kvec/s at 10× the sf0.1 embeddings, CHANGELOG Round 3). Still a
     pure map: no shuffle, no per-row Python (batch-at-a-time), codebooks
     ride into the workers as a closure (kilobytes). Ties break to the
     first minimal index — the same rule the previous expression form
@@ -1507,8 +1510,15 @@ def ann_topk_pq(
             raise ValueError(
                 f"ann_topk_pq: no row with {id_col}={query_vec_id!r}"
             )
+        # union+collect promises no row order: restore pq_codebooks'
+        # id order (nulls first, as Spark's ascending sort) so the
+        # books train identically whatever order the rows came back in
+        sample = sorted(
+            (r for r in tagged if not r["__q"]),
+            key=lambda r: (r[0] is not None, r[0]),
+        )
         books = _pq_train_books(
-            [r for r in tagged if not r["__q"]], m, n_codes, 7, id_col, None
+            sample, m, n_codes, _PQ_DEFAULT_SEED, id_col, None
         )
         qvec = np.array(list(q_rows[0][1]), dtype=np.float64)
     sub_d = len(books[0][0])

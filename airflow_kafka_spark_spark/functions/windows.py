@@ -2,9 +2,11 @@
 
 Reproduces pandas ``rolling(N).mean()`` semantics exactly: with the default
 ``min_periods=N`` the first N-1 rows are NULL (reference
-spark/stock_analysis.py:173-183). Implemented as a native Window avg guarded
-by a non-null count over the same frame — no UDF, fully codegen'd, one hash
-shuffle on the partition key shared by every window in the same plan.
+spark/stock_analysis.py:173-183). The indicators use :func:`rolling_mean`, a
+lag-chain sum over one WindowSpec (bit-identical to the DuckDB oracle);
+:func:`rolling_mean_frame` is the guarded frame-avg variant. Both are native
+Window expressions — no UDF, fully codegen'd, one hash shuffle on the
+partition key shared by every window in the same plan.
 """
 
 from __future__ import annotations

@@ -202,7 +202,8 @@ def with_indicators(
     close_col: str = "close",
 ) -> DataFrame:
     """Full W1-W10 stack in one pass: Window indicators first (one shuffle
-    on the key), then the MACD grouped-map reusing that partitioning."""
+    on the key), then the partition-sorted ``mapInArrow`` MACD kernel
+    reusing that partitioning and sort."""
     key_cols, order_cols = list(key_cols), list(order_cols)
     df = with_moving_averages(df, key_cols, order_cols, close_col)
     df = with_rsi(df, key_cols, order_cols, close_col)

@@ -1202,8 +1202,8 @@ def q_fixed_point_sums(spark, sf_dir):
     fixed_point_group_sum) on the TPC-H q1 measures: primitive-long
     accumulation with a decimal final fold, bit-identical to the
     decimal(22,6) sum the oracle runs (~15% faster where the aggregate
-    dominates, net of the partial-overflow proof — bench_scale
-    fixed_point_sum_formulations and bench.py faceoff_fixed_point)."""
+    dominates, net of the partial-overflow proof — CHANGELOG Round 5
+    and bench.py faceoff_fixed_point)."""
     li = load_table(spark, sf_dir, "lineitem")
     disc = F.col("l_extendedprice") * (1 - F.col("l_discount"))
     out = fixed_point_group_sum(

@@ -9,8 +9,8 @@ scalable alternative is a *delta feed*: messages carry only new bars, and
 the engine carries the indicator recursion state (EMA-12/26, MACD signal)
 across micro-batches with ``applyInPandasWithState``.
 
-State is tiny and per-key — five doubles and a count — so a
-1000-executor cluster shards it by key hash with no hotspot; the state
+State is tiny and per-key — a count and three doubles (``STATE_SCHEMA``)
+— so a 1000-executor cluster shards it by key hash with no hotspot; the state
 store checkpoints with the query, giving exactly-once state evolution on
 restart. The EMA continuation is *bit-exact* with the batch kernel: a
 recurrence's value at a batch boundary fully captures its NaN-free

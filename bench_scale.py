@@ -1,9 +1,18 @@
 #!/usr/bin/env python
-"""Scale probe: the flagship indicator+signal cascade at 1x/4x/10x the
-sf0.1 events table (keys shifted per replica, so key cardinality grows
-with data — the 100 TB growth axis). Prints one JSON line with rows/s
-per multiplier; wall time should stay near-flat while throughput climbs,
-because the plan is one shuffle + per-key parallel work.
+"""Scale probes for the three decisions still open to measurement.
+Prints one JSON line:
+
+- ``results``: the flagship indicator+signal cascade at 1x/4x/10x the
+  events table (keys shifted per replica, so key cardinality grows with
+  data — the 100 TB growth axis). Wall time should stay near-flat while
+  throughput climbs, because the plan is one shuffle + per-key parallel
+  work.
+- ``ann_serving_batch``: ANN point lookups looped driver-side vs the
+  batched plan, IVF and PQ, at 1/8/32 queries.
+- ``offset_fence_overhead``: the rollup offset fence's absolute
+  per-batch cost across batch-row and source-partition growth.
+
+Settled face-offs are not re-run; their numbers live in CHANGELOG.md.
 
 Usage: python bench_scale.py  (env: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS)
 """
@@ -12,35 +21,63 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import sys
+import tempfile
 import time
 from functools import reduce
 
 # location-independent, same anchors as bench.py (sys.path for the
-# driver process, PYTHONPATH for Spark's forked Python workers)
+# driver process here, PYTHONPATH for Spark's forked Python workers in
+# main())
 _HERE = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, _HERE)
-os.environ["PYTHONPATH"] = (
-    _HERE + os.pathsep + os.environ.get("PYTHONPATH", "")
-).rstrip(os.pathsep)
+
+from pyspark.sql import functions as F  # noqa: E402
+
+from airflow_kafka_spark_spark.ext.similarity import (  # noqa: E402
+    ann_topk_ivf,
+    ann_topk_ivf_batch,
+    ann_topk_pq,
+    ann_topk_pq_batch,
+    ivf_assignments,
+    pq_codebooks,
+)
+from airflow_kafka_spark_spark.operators.indicators import with_indicators  # noqa: E402
+from airflow_kafka_spark_spark.operators.signals import with_suggestion  # noqa: E402
+from airflow_kafka_spark_spark.session import build_session  # noqa: E402
+from airflow_kafka_spark_spark.sources.files import load_table  # noqa: E402
+from airflow_kafka_spark_spark.streaming.rollup import (  # noqa: E402
+    merge_batch_into_rollup,
+)
 
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
-    from pyspark.sql import functions as F
-
-    from airflow_kafka_spark_spark.operators.indicators import with_indicators
-    from airflow_kafka_spark_spark.operators.signals import with_suggestion
-    from airflow_kafka_spark_spark.session import build_session
-    from airflow_kafka_spark_spark.sources.files import load_table
-
+    os.environ["PYTHONPATH"] = (
+        _HERE + os.pathsep + os.environ.get("PYTHONPATH", "")
+    ).rstrip(os.pathsep)
     spark = build_session(app_name="aks-bench-scale")
     # warm JVM + Python/Arrow workers
     spark.range(1000).selectExpr("id % 8 AS g", "id").groupBy("g").applyInArrow(
         lambda t: t, "g bigint, id bigint"
     ).write.format("noop").mode("overwrite").save()
+    print(
+        json.dumps(
+            {
+                "metric": "cascade_scaling",
+                "results": cascade_scaling(spark, sf_dir),
+                "ann_serving_batch": ann_serving_batch(spark, sf_dir),
+                "offset_fence_overhead": offset_fence_overhead(spark),
+            }
+        )
+    )
+    spark.stop()
 
+
+def cascade_scaling(spark, sf_dir: str) -> dict:
+    """Indicator+signal cascade over 1x/4x/10x replicas of the events
+    table, noop sink."""
     ev = load_table(spark, sf_dir, "events").select(
         "user_id", "event_id", "ts", F.col("value").alias("close")
     )
@@ -65,220 +102,18 @@ def main() -> None:
             "sec": round(dt, 3),
             "krows_per_sec": round(n / dt / 1000, 1),
         }
+    return results
 
-    # the quadratic-risk operator: replicas are exact duplicates, so the
-    # true near-dup pair count grows ~quadratically with the multiplier —
-    # wall time must stay near-linear in docs regardless
-    from airflow_kafka_spark_spark.ext.dedup import minhash_lsh_pairs
 
-    docs = load_table(spark, sf_dir, "documents")
-    did_shift = docs.agg(F.max("doc_id")).first()[0] + 1
-    dedup_results = {}
-    for mult in (1, 4, 10):
-        big = reduce(
-            lambda a, b: a.unionByName(b),
-            [docs.withColumn("doc_id", F.col("doc_id") + did_shift * i) for i in range(mult)],
-        )
-        n = big.count()
-        t0 = time.perf_counter()
-        pairs = minhash_lsh_pairs(big, num_hashes=8, bands=4, threshold=0.4).count()
-        dt = time.perf_counter() - t0
-        dedup_results[f"{mult}x"] = {
-            "docs": n,
-            "sec": round(dt, 3),
-            "pairs": pairs,
-            "docs_per_sec": round(n / dt),
-        }
-    # chunk-level dedup: duplicated-span density grows with replication
-    # (every replica duplicates every chunk), so the flagged set and the
-    # anti-join both grow — wall time must stay near-linear in docs
-    from airflow_kafka_spark_spark.ext.dedup import strip_duplicate_chunks
-
-    chunk_results = {}
-    for mult in (1, 4, 10):
-        big = reduce(
-            lambda a, b: a.unionByName(b),
-            [docs.withColumn("doc_id", F.col("doc_id") + did_shift * i) for i in range(mult)],
-        )
-        n = big.count()
-        t0 = time.perf_counter()
-        strip_duplicate_chunks(big, chunk_words=3).write.format("noop").mode(
-            "overwrite"
-        ).save()
-        dt = time.perf_counter() - t0
-        chunk_results[f"{mult}x"] = {
-            "docs": n,
-            "sec": round(dt, 3),
-            "docs_per_sec": round(n / dt),
-        }
-    # URL curation (r10): pure-map normalization + two keyed windows.
-    # Replicas keep the SAME derived URLs under shifted doc_ids, so the
-    # per-URL duplicate group and the per-domain keeper set both grow
-    # with the multiplier — the two window sorts absorb the growth;
-    # wall time must stay near-linear in docs.
-    from airflow_kafka_spark_spark.ext.dedup import url_dedup_domain_cap
-
-    url_results = {}
-    for mult in (1, 4, 10):
-        big = reduce(
-            lambda a, b: a.unionByName(b),
-            [docs.withColumn("doc_id", F.col("doc_id") + did_shift * i) for i in range(mult)],
-        )
-        n = big.count()
-        url = F.concat(
-            F.lit("https://"), F.col("source"), F.lit(".com/p/"),
-            (F.col("doc_id") % 50).cast("string"),
-        )
-        t0 = time.perf_counter()
-        url_dedup_domain_cap(big.withColumn("url", url), cap=20).write.format(
-            "noop"
-        ).mode("overwrite").save()
-        dt = time.perf_counter() - t0
-        url_results[f"{mult}x"] = {
-            "docs": n,
-            "sec": round(dt, 3),
-            "docs_per_sec": round(n / dt),
-        }
-
-    # salted two-phase domain cap on a PLANTED hot domain (VERDICT r11
-    # item 3): 40% of a 3.2M-row corpus under ONE registered domain
-    # (distinct URLs, so every row is a keeper entering the domain
-    # window), the rest spread over ~5000 cold domains. The unsalted
-    # window sorts the hot domain in ONE task while 31 cores idle;
-    # salt P splits it into contiguous md5 ranges. Same-run face-off
-    # (raw seconds comparable — the cross-round caveat doesn't apply),
-    # best-of-2 per P. The companion cost number is the UNskewed
-    # 1.4x overhead in url_dedup_domain_cap's docstring: together they
-    # are the knob's usage guidance — turn it on when one domain holds
-    # a partition-sized corpus share, leave it off otherwise.
-    salted_skew_results = {}
-    skew_ids = (
-        docs.select("doc_id")
-        .crossJoin(spark.range(640).select(F.col("id").alias("rep")))
-        .select((F.col("doc_id") + did_shift * F.col("rep")).alias("doc_id"))
-    )
-    hot = (F.col("doc_id") % 5) < 2
-    skew_url = F.when(
-        hot,
-        F.concat(
-            F.lit("https://hot.example.com/p/"), F.col("doc_id").cast("string")
-        ),
-    ).otherwise(
-        F.concat(
-            F.lit("https://src"),
-            (F.col("doc_id") % 5000).cast("string"),
-            F.lit(".com/p/"),
-            F.col("doc_id").cast("string"),
-        )
-    )
-    skew_frame = (
-        skew_ids.withColumn("url", skew_url).repartition(32).localCheckpoint()
-    )
-    n_skew = skew_frame.count()
-    kept_by_p = {}
-    for p in (None, 1, 8, 32):
-        best = float("inf")
-        for _ in range(2):
-            t0 = time.perf_counter()
-            out = url_dedup_domain_cap(skew_frame, cap=5, salt_partitions=p)
-            kept = out.agg(F.sum("kept")).first()[0]
-            best = min(best, time.perf_counter() - t0)
-        # kept-SET identity, not just the kept COUNT: a per-bucket
-        # offset bug that keeps a different-but-same-size set per P
-        # would pass a count compare — checksum the kept ids (modular
-        # sum of xxhash64 is a commutative set fingerprint). Untimed,
-        # outside the face-off, so the probe's seconds stay comparable
-        # to the recorded runs.
-        chk = (
-            out.filter(F.col("kept") == 1)
-            .agg(F.sum(F.xxhash64("doc_id")))
-            .first()[0]
-        )
-        kept_by_p[p] = (kept, chk)
-        salted_skew_results[f"P={p or 'off'}"] = {
-            "docs": n_skew,
-            "sec": round(best, 3),
-            "speedup_vs_off": None,
-        }
-    # the salted paths must KEEP THE SAME DOC SET as the unsalted path
-    assert len(set(kept_by_p.values())) == 1, kept_by_p
-    off = salted_skew_results["P=off"]["sec"]
-    for v in salted_skew_results.values():
-        v["speedup_vs_off"] = round(off / v["sec"], 2)
-
-    # linear quality-classifier inference (r10): one explode + broadcast
-    # vocab join + one agg + pinned attach join. The model is fixed-size
-    # (broadcast), so scaling is pure corpus throughput. ONE model
-    # definition — the catalog's oracled constants — so the probe can
-    # never drift from what correctness measures.
-    from airflow_kafka_spark_spark.ext.textstats import linear_quality_scores
-    from airflow_kafka_spark_spark.plans.catalog import (
-        _QUALITY_BIAS,
-        _QUALITY_WEIGHTS,
-    )
-
-    clf_model = _QUALITY_WEIGHTS
-    clf_results = {}
-    for mult in (1, 4, 10):
-        big = reduce(
-            lambda a, b: a.unionByName(b),
-            [docs.withColumn("doc_id", F.col("doc_id") + did_shift * i) for i in range(mult)],
-        )
-        n = big.count()
-        t0 = time.perf_counter()
-        linear_quality_scores(
-            big, clf_model, bias=_QUALITY_BIAS, threshold=0
-        ).write.format("noop").mode("overwrite").save()
-        dt = time.perf_counter() - t0
-        clf_results[f"{mult}x"] = {
-            "docs": n,
-            "sec": round(dt, 3),
-            "docs_per_sec": round(n / dt),
-        }
-
-    # PQ encoding is the 100 TB-embeddings path: codebooks train once on
-    # a bounded sample, then encoding must stream map-only. Replicas get
-    # shifted ids so corpus size grows; codebooks are trained ONCE and
-    # reused (the realistic deployment shape).
-    from airflow_kafka_spark_spark.ext.similarity import pq_codebooks, pq_encode
-
+def ann_serving_batch(spark, sf_dir: str) -> dict:
+    """ANN serving: point lookups loop driver-side (two driver actions
+    per query) vs the batched plan (one data-plane plan for N queries).
+    Equal work: same shared index and codebooks, same query ids.
+    Per-query cost should amortize with batch size on the batched path
+    and stay flat on the loop."""
     emb = load_table(spark, sf_dir, "embeddings")
-    vid_shift = emb.agg(F.max("vec_id")).first()[0] + 1
-    books = pq_codebooks(emb)
-    pq_results = {}
-    for mult in (1, 4, 10):
-        big = reduce(
-            lambda a, b: a.unionByName(b),
-            [
-                emb.withColumn("vec_id", F.col("vec_id") + vid_shift * i)
-                for i in range(mult)
-            ],
-        )
-        n = big.count()
-        t0 = time.perf_counter()
-        pq_encode(big, books).write.format("noop").mode("overwrite").save()
-        dt = time.perf_counter() - t0
-        pq_results[f"{mult}x"] = {
-            "vectors": n,
-            "sec": round(dt, 3),
-            "kvecs_per_sec": round(n / dt / 1000, 1),
-        }
-
-    # ANN serving face-off: point lookups loop driver-side (two driver
-    # actions per query) vs the batched plan (one data-plane plan for N
-    # queries). Equal work: same shared index, same query ids. Per-query
-    # cost should amortize with batch size on the batched path and stay
-    # flat on the loop.
-    from airflow_kafka_spark_spark.ext.similarity import (
-        ann_topk_ivf,
-        ann_topk_ivf_batch,
-        ann_topk_pq,
-        ann_topk_pq_batch,
-        ivf_assignments,
-    )
-
     ivf_index = ivf_assignments(emb, n_lists=16)
-    pq_books = books  # shared with the pq_encode probe above
+    pq_books = pq_codebooks(emb)
     ann_results = {}
     for nq in (1, 8, 32):
         qids = list(range(nq))
@@ -306,613 +141,24 @@ def main() -> None:
             "pq_loop_ms_per_query": round(pq_loop_dt / nq * 1000, 1),
             "pq_batch_ms_per_query": round(pq_batch_dt / nq * 1000, 1),
         }
+    return ann_results
 
-    # IVF-PQ composition face-off: same shared index/codebooks, same 32
-    # queries, k=10, in-call corpus encode for both PQ forms. The
-    # composed index ADC-scores only the probed cells (vs PQ-alone's
-    # full-corpus ADC) and scores codes instead of full vectors (vs
-    # IVF-Flat's exact cosine over every candidate). Recall is measured
-    # against per-query exact top-10, not assumed. Two composed rows
-    # keep the comparison equal-work (CLAUDE.md bench rule): rf24 is
-    # the SAME rerank depth as the PQ row; rf48 doubles the rerank pool
-    # to buy back the IVF parent's recall (ivfpq candidates are a
-    # subset of IVF's, so its recall is bounded by IVF's). PQ-alone
-    # posts the highest recall here precisely because it ADC-scans the
-    # ENTIRE corpus — the cost the composition exists to eliminate; at
-    # 8/16 probes on a 4k-vector fixture the scan-fraction win is only
-    # ~2x, at real scale it is n_probe/n_lists of a 10^9-vector scan.
-    from airflow_kafka_spark_spark.ext.similarity import (
-        ann_topk_ivfpq_batch,
-        cosine_topk,
-    )
 
-    face_qids = list(range(32))
-    exact_sets = {
-        qid: {r["vec_id"] for r in cosine_topk(emb, qid, k=10).collect()}
-        for qid in face_qids
-    }
-
-    def _face_recall(rows):
-        by: dict[int, set] = {}
-        for r in rows:
-            by.setdefault(r["query_id"], set()).add(r["vec_id"])
-        return round(
-            sum(len(by.get(q, set()) & exact_sets[q]) for q in face_qids)
-            / (10 * len(face_qids)),
-            3,
-        )
-
-    t0 = time.perf_counter()
-    ivf_rows = ann_topk_ivf_batch(
-        emb, face_qids, k=10, n_probe=8, index=ivf_index
-    ).collect()
-    ivf_face_dt = time.perf_counter() - t0
-    t0 = time.perf_counter()
-    pq_rows = ann_topk_pq_batch(
-        emb, face_qids, k=10, rerank_factor=24, codebooks=pq_books
-    ).collect()
-    pq_face_dt = time.perf_counter() - t0
-    t0 = time.perf_counter()
-    ivfpq24_rows = ann_topk_ivfpq_batch(
-        emb, face_qids, k=10, n_probe=8, rerank_factor=24,
-        index=ivf_index, codebooks=pq_books,
-    ).collect()
-    ivfpq24_dt = time.perf_counter() - t0
-    t0 = time.perf_counter()
-    ivfpq48_rows = ann_topk_ivfpq_batch(
-        emb, face_qids, k=10, n_probe=8, rerank_factor=48,
-        index=ivf_index, codebooks=pq_books,
-    ).collect()
-    ivfpq48_dt = time.perf_counter() - t0
-    # residual leg at EQUAL rerank depth as the raw rf24 row (equal-work
-    # rule): residual-trained books are prebuilt like pq_books, codes
-    # encode in-call like both rf rows above
-    res_books = pq_codebooks(emb, centroids=ivf_index[1])
-    t0 = time.perf_counter()
-    ivfpq_res24_rows = ann_topk_ivfpq_batch(
-        emb, face_qids, k=10, n_probe=8, rerank_factor=24,
-        index=ivf_index, codebooks=res_books, residual=True,
-    ).collect()
-    ivfpq_res24_dt = time.perf_counter() - t0
-    ivfpq_results = {
-        "batch": len(face_qids),
-        "ivf_sec": round(ivf_face_dt, 3),
-        "pq_rf24_sec": round(pq_face_dt, 3),
-        "ivfpq_rf24_sec": round(ivfpq24_dt, 3),
-        "ivfpq_rf48_sec": round(ivfpq48_dt, 3),
-        "ivfpq_res_rf24_sec": round(ivfpq_res24_dt, 3),
-        "ivf_recall": _face_recall(ivf_rows),
-        "pq_rf24_recall": _face_recall(pq_rows),
-        "ivfpq_rf24_recall": _face_recall(ivfpq24_rows),
-        "ivfpq_rf48_recall": _face_recall(ivfpq48_rows),
-        "ivfpq_res_rf24_recall": _face_recall(ivfpq_res24_rows),
-    }
-
-    # 10x-corpus face-off: the same 32 queries against 10 shifted
-    # copies of the corpus (deterministic: copy i adds i*0.01 to every
-    # coordinate — no RNG, repo rule), indexed the way a bigger corpus
-    # is indexed (n_lists grows ~sqrt(N): 64 lists, still 8 probes →
-    # 1/8 scan fraction vs 1/2 on the base fixture). PQ-alone still
-    # ADC-scans the ENTIRE corpus, so the composition's scan-fraction
-    # advantage should WIDEN with corpus growth — this leg MEASURES
-    # the "base fixture understates the at-scale gap" claim instead of
-    # asserting it. Recall is against per-query exact top-10 on the
-    # 10x corpus. Corpus is localCheckpointed so synthesis cost isn't
-    # billed to serving.
-    n_base = emb.count()
-    big_emb = (
-        emb.crossJoin(spark.range(10).select(F.col("id").alias("copy")))
-        .select(
-            (F.col("vec_id") + F.col("copy") * n_base).alias("vec_id"),
-            F.transform(
-                "embedding",
-                lambda x: x + F.col("copy").cast("float") * F.lit(0.01),
-            ).alias("embedding"),
-        )
-        .localCheckpoint()
-    )
-    big_index = ivf_assignments(big_emb, n_lists=64)
-    big_books = pq_codebooks(big_emb)
-    big_exact = {
-        qid: {r["vec_id"] for r in cosine_topk(big_emb, qid, k=10).collect()}
-        for qid in face_qids
-    }
-
-    def _big_recall(rows):
-        by: dict[int, set] = {}
-        for r in rows:
-            by.setdefault(r["query_id"], set()).add(r["vec_id"])
-        return round(
-            sum(len(by.get(q, set()) & big_exact[q]) for q in face_qids)
-            / (10 * len(face_qids)),
-            3,
-        )
-
-    t0 = time.perf_counter()
-    big_ivf_rows = ann_topk_ivf_batch(
-        big_emb, face_qids, k=10, n_probe=8, index=big_index
-    ).collect()
-    big_ivf_dt = time.perf_counter() - t0
-    t0 = time.perf_counter()
-    big_pq_rows = ann_topk_pq_batch(
-        big_emb, face_qids, k=10, rerank_factor=24, codebooks=big_books
-    ).collect()
-    big_pq_dt = time.perf_counter() - t0
-    t0 = time.perf_counter()
-    big_ivfpq24_rows = ann_topk_ivfpq_batch(
-        big_emb, face_qids, k=10, n_probe=8, rerank_factor=24,
-        index=big_index, codebooks=big_books,
-    ).collect()
-    big_ivfpq24_dt = time.perf_counter() - t0
-    t0 = time.perf_counter()
-    big_ivfpq48_rows = ann_topk_ivfpq_batch(
-        big_emb, face_qids, k=10, n_probe=8, rerank_factor=48,
-        index=big_index, codebooks=big_books,
-    ).collect()
-    big_ivfpq48_dt = time.perf_counter() - t0
-    big_res_books = pq_codebooks(big_emb, centroids=big_index[1])
-    t0 = time.perf_counter()
-    big_ivfpq_res24_rows = ann_topk_ivfpq_batch(
-        big_emb, face_qids, k=10, n_probe=8, rerank_factor=24,
-        index=big_index, codebooks=big_res_books, residual=True,
-    ).collect()
-    big_ivfpq_res24_dt = time.perf_counter() - t0
-    ivfpq10x_results = {
-        "batch": len(face_qids),
-        "corpus": n_base * 10,
-        "n_lists": 64,
-        "n_probe": 8,
-        "ivf_sec": round(big_ivf_dt, 3),
-        "pq_rf24_sec": round(big_pq_dt, 3),
-        "ivfpq_rf24_sec": round(big_ivfpq24_dt, 3),
-        "ivfpq_rf48_sec": round(big_ivfpq48_dt, 3),
-        "ivfpq_res_rf24_sec": round(big_ivfpq_res24_dt, 3),
-        "ivf_recall": _big_recall(big_ivf_rows),
-        "pq_rf24_recall": _big_recall(big_pq_rows),
-        "ivfpq_rf24_recall": _big_recall(big_ivfpq24_rows),
-        "ivfpq_rf48_recall": _big_recall(big_ivfpq48_rows),
-        "ivfpq_res_rf24_recall": _big_recall(big_ivfpq_res24_rows),
-    }
-
-    # drift monitors at replica scale: both are single-scan
-    # conditional-count aggregations, so wall time should grow far
-    # slower than data (the shuffle is the cohort-x-category count
-    # table, not the facts)
-    from airflow_kafka_spark_spark.ext.drift import (
-        chi2_drift,
-        ks_drift,
-        mw_drift,
-        tvd_drift,
-    )
-
-    ev_drift = load_table(spark, sf_dir, "events")
-    drift_results = {}
-    for mult in (1, 10):
-        big = reduce(
-            lambda a, b: a.unionByName(b),
-            [
-                ev_drift.withColumn("user_id", F.col("user_id") + uid_shift * i)
-                for i in range(mult)
-            ],
-        )
-        n = big.count()
-        t0 = time.perf_counter()
-        tvd_drift(
-            big,
-            cohort=F.col("user_id") % 10,
-            split=F.col("event_id") % 2,
-            category="event_type",
-        ).write.format("noop").mode("overwrite").save()
-        tvd_dt = time.perf_counter() - t0
-        t0 = time.perf_counter()
-        chi2_drift(
-            big,
-            cohort=F.col("user_id") % 10,
-            split=F.col("event_id") % 2,
-            category="event_type",
-        ).write.format("noop").mode("overwrite").save()
-        chi2_dt = time.perf_counter() - t0
-        # KS shuffles a cohort x DISTINCT-VALUES count table (here:
-        # continuous doubles, so ~n rows) and sorts it per cohort —
-        # the expected-costlier numeric leg; measure, don't assume
-        t0 = time.perf_counter()
-        ks_drift(
-            big,
-            cohort=F.col("user_id") % 10,
-            split=F.col("event_id") % 2,
-            value=F.col("value"),
-        ).write.format("noop").mode("overwrite").save()
-        ks_dt = time.perf_counter() - t0
-        # Mann-Whitney shares KS's count-table shape with one FEWER
-        # ordered window sum (cum_b only vs cum_a+cum_b) — expect
-        # KS-like growth at or slightly below KS's wall time
-        t0 = time.perf_counter()
-        mw_drift(
-            big,
-            cohort=F.col("user_id") % 10,
-            split=F.col("event_id") % 2,
-            value=F.col("value"),
-        ).write.format("noop").mode("overwrite").save()
-        mw_dt = time.perf_counter() - t0
-        drift_results[f"{mult}x"] = {
-            "rows": n,
-            "tvd_sec": round(tvd_dt, 3),
-            "chi2_sec": round(chi2_dt, 3),
-            "ks_sec": round(ks_dt, 3),
-            "mw_sec": round(mw_dt, 3),
-        }
-
-    # rolling-mean formulation face-off: the oracle-exact lag-chain is
-    # O(n) expressions per window vs the O(1) frame-aggregate — the
-    # pre-measured swap for when a profiler flags the lag-chain at 100×
-    # (the frame variant trades last-ULP cross-engine reproducibility)
-    from pyspark.sql import Window
-
-    from airflow_kafka_spark_spark.functions.windows import (
-        rolling_mean,
-        rolling_mean_frame,
-    )
-
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    rolling_results = {}
-    for mult in (1, 10):
-        big = reduce(
-            lambda a, b: a.unionByName(b),
-            [ev.withColumn("user_id", F.col("user_id") + uid_shift * i) for i in range(mult)],
-        )
-        n = big.count()
-        entry = {"rows": n}
-        for tag, fn in (("lag_chain", rolling_mean), ("frame_agg", rolling_mean_frame)):
-            t0 = time.perf_counter()
-            big.select(
-                "user_id", "ts", fn(F.col("close"), w, 20).alias("ma20")
-            ).write.format("noop").mode("overwrite").save()
-            entry[f"{tag}_sec"] = round(time.perf_counter() - t0, 3)
-        rolling_results[f"{mult}x"] = entry
-
-    # exact-sum formulation face-off: decimal(22,6) accumulation (the
-    # catalog default — BigDecimal path above precision 18) vs the
-    # bit-identical scaled-BIGINT two-stage sum — the pre-measured swap
-    # for aggregate-dominated scans (TPC-H q1 shape)
-    from airflow_kafka_spark_spark.operators.relational import (
-        decimal_sum,
-        fixed_point_group_sum,
-    )
-
-    li = load_table(spark, sf_dir, "lineitem")
-    disc = F.col("l_extendedprice") * (1 - F.col("l_discount"))
-    chg = disc * (1 + F.col("l_tax"))
-    keys = ["l_returnflag", "l_linestatus"]
-    sum_results = {}
-    for tag, mk in (
-        (
-            "decimal_22_6",
-            lambda: li.groupBy(*keys).agg(
-                decimal_sum(F.col("l_quantity")).alias("s_qty"),
-                decimal_sum(F.col("l_extendedprice")).alias("s_price"),
-                decimal_sum(disc).alias("s_disc"),
-                decimal_sum(chg).alias("s_chg"),
-            ),
-        ),
-        (
-            "scaled_bigint",
-            lambda: fixed_point_group_sum(
-                li,
-                keys,
-                {
-                    "s_qty": F.col("l_quantity"),
-                    "s_price": F.col("l_extendedprice"),
-                    "s_disc": disc,
-                    "s_chg": chg,
-                },
-            ),
-        ),
-    ):
-        best = float("inf")
-        for _ in range(2):
-            spark.catalog.clearCache()
-            t0 = time.perf_counter()
-            mk().write.format("noop").mode("overwrite").save()
-            best = min(best, time.perf_counter() - t0)
-        sum_results[tag] = {"sec": round(best, 3)}
-
-    # containment skew knob: a boilerplate shingle shared by every doc
-    # makes the uncapped inverted-index join O(d²) — poison the corpus
-    # with a shared footer and show capped runtime stays at clean-corpus
-    # speed (uncapped-on-poisoned is deliberately NOT run at full size;
-    # it is the quadratic blowup the knob exists to avoid)
-    from airflow_kafka_spark_spark.ext.dedup import (
-        containment_pairs,
-        release_minhash_caches,
-    )
-
-    poisoned = docs.withColumn(
-        "text",
-        F.concat(
-            F.col("text"),
-            F.lit(" all rights reserved standard footer boilerplate notice"),
-        ),
-    )
-    containment_results = {}
-    for tag, frame, cap in (
-        ("clean_uncapped", docs, None),
-        ("poisoned_capped", poisoned, 5),
-    ):
-        t0 = time.perf_counter()
-        n_pairs = containment_pairs(frame, threshold=0.5, max_shingle_df=cap).count()
-        containment_results[tag] = {
-            "sec": round(time.perf_counter() - t0, 3),
-            "pairs": n_pairs,
-        }
-        release_minhash_caches()
-
-    # semantic-dedup mega-cluster knob (VERDICT r4 item 3): SemDeDup's
-    # verify cost is |cell|² per k-means cell, so a corpus where 60% of
-    # vectors collapse into one dense semantic cluster is the skew case
-    # the n_lists knob exists for. Build that corpus (center + eps*v —
-    # deterministic, no RNG), run a low-n_lists config that leaves the
-    # mega-cell intact vs the SemDeDup recipe (raise n_lists until cells
-    # are executor-sized), and record the cell-size histogram that makes
-    # the collapse visible next to the runtime it costs.
-    from airflow_kafka_spark_spark.ext.similarity import (
-        ivf_assignments,
-        semantic_dedup_pairs,
-    )
-    from airflow_kafka_spark_spark.sources.files import load_table as _lt
-
-    emb = _lt(spark, sf_dir, "embeddings")
-    dense = F.transform(F.col("embedding"), lambda x: 1.0 + 0.001 * x)
-    skewed = emb.select(
-        "vec_id",
-        F.when(F.col("vec_id") % 10 < 6, dense)
-        .otherwise(F.col("embedding"))
-        .alias("embedding"),
-    )
-    # n_lists=2 leaves the dense ball in ONE cell (the mega-cluster
-    # case: |cell|² verify pairs); n_lists=64 is the SemDeDup recipe —
-    # random centroid init already lands ~60% of seeds inside the ball,
-    # so raising n_lists splits it and the max cell collapses
-    semdedup_results = {}
-    for tag, n_lists in (("mega_cell_nlists2", 2), ("split_nlists64", 64)):
-        assigned, _ = ivf_assignments(skewed, n_lists=n_lists)
-        sizes = sorted(
-            r["n"]
-            for r in assigned.groupBy("list_id").agg(F.count("*").alias("n")).collect()
-        )
-        t0 = time.perf_counter()
-        n_pairs = semantic_dedup_pairs(
-            skewed, threshold=0.95, n_lists=n_lists
-        ).count()
-        semdedup_results[tag] = {
-            "sec": round(time.perf_counter() - t0, 3),
-            "pairs": n_pairs,
-            "cells": len(sizes),
-            "max_cell": sizes[-1],
-            "p95_cell": sizes[int(0.95 * (len(sizes) - 1))],
-        }
-
-    # triangle-counting formulation face-off: the compact-forward
-    # adjacency-intersect (shipped, ext.graph.triangle_stats) vs the
-    # naive oriented wedge JOIN it replaced — the wedge set materializes
-    # sum C(outdeg,2) rows (~30M at sf0.1 on the part co-occurrence
-    # graph), while compact-forward keeps it inside the scan. Recorded
-    # per round so the 8.3 s -> 4.8 s decision stays measured, not lore.
-    from airflow_kafka_spark_spark.ext.graph import basket_pairs, triangle_stats
-
-    li = load_table(spark, sf_dir, "lineitem")
-    edges = basket_pairs(li, "l_orderkey", "l_partkey").localCheckpoint()
-    tri_results = {}
-    t0 = time.perf_counter()
-    n_tri_cf = triangle_stats(edges).collect()[0]["n_triangles"]
-    tri_results["compact_forward"] = {"sec": round(time.perf_counter() - t0, 3)}
-
-    deg = (
-        edges.select(F.col("src").alias("n"))
-        .unionAll(edges.select(F.col("dst").alias("n")))
-        .groupBy("n").agg(F.count(F.lit(1)).alias("deg"))
-    )
-    ed = (
-        edges.join(deg.select(F.col("n").alias("src"), F.col("deg").alias("sd")), "src")
-        .join(deg.select(F.col("n").alias("dst"), F.col("deg").alias("dd")), "dst")
-    )
-    lower = (F.col("sd") < F.col("dd")) | ((F.col("sd") == F.col("dd")) & (F.col("src") < F.col("dst")))
-    o = ed.select(
-        F.when(lower, F.col("src")).otherwise(F.col("dst")).alias("u"),
-        F.when(lower, F.col("dst")).otherwise(F.col("src")).alias("v"),
-    )
-    t0 = time.perf_counter()
-    n_tri_wj = (
-        o.join(o.select(F.col("u").alias("v"), F.col("v").alias("w")), "v")
-        .join(o.select("u", F.col("v").alias("w")), ["u", "w"])
-        .count()
-    )
-    tri_results["wedge_join"] = {"sec": round(time.perf_counter() - t0, 3)}
-    assert n_tri_cf == n_tri_wj, (n_tri_cf, n_tri_wj)
-
-    # pagerank per-iteration growth: the plan chains one join + one agg
-    # per unrolled iteration; cost should grow ~linearly in iterations
-    # (localCheckpoint advice in the docstring is for DEEP counts)
-    from airflow_kafka_spark_spark.ext.graph import pagerank
-
-    both = edges.unionAll(
-        edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    )
-    pr_results = {}
-    for iters in (1, 3, 6):
-        t0 = time.perf_counter()
-        pagerank(both, iterations=iters).agg(F.sum("rank_s")).collect()
-        pr_results[f"{iters}_iter"] = {"sec": round(time.perf_counter() - t0, 3)}
-
-    # transitive-closure formulation face-off: path doubling (shipped,
-    # ext.graph.transitive_closure — ceil(log2(depth)) join rounds) vs
-    # the naive one-hop frontier expansion (O(depth) rounds) on the
-    # customer binary tree (depth ~14 at sf0.1) — the same
-    # O(d) → O(log d) argument connected_components made, with numbers
-    from airflow_kafka_spark_spark.ext.graph import transitive_closure
-
-    cust = load_table(spark, sf_dir, "customer")
-    h_edges = cust.filter(F.col("c_custkey") >= 1).select(
-        F.col("c_custkey").alias("child"),
-        F.expr("(c_custkey - 1) div 2").alias("parent"),
-    ).localCheckpoint()
-    closure_results = {}
-    t0 = time.perf_counter()
-    n_pairs = transitive_closure(h_edges, max_depth=24).count()
-    closure_results["doubling"] = {
-        "sec": round(time.perf_counter() - t0, 3), "pairs": n_pairs
-    }
-    t0 = time.perf_counter()
-    n_naive = transitive_closure(h_edges, max_depth=24, strategy="frontier").count()
-    closure_results["frontier"] = {
-        "sec": round(time.perf_counter() - t0, 3), "pairs": n_naive
-    }
-    assert n_naive == n_pairs, (n_naive, n_pairs)
-
-    # sf0.01 -> sf0.1 scaling exponents for the four operators with
-    # driver-side iteration or super-linear candidate generation
-    # (VERDICT r5 item 4): exponent = log(t_big/t_small)/log(n_big/
-    # n_small). Caveat printed with the number: the sf0.01 timings sit
-    # near the per-job fixed-overhead floor (~0.1-0.5 s of scheduling/
-    # barrier latency per round), which UNDERSTATES the exponent — read
-    # it as "observed growth between these two real scales", the
-    # trendline the next scale-up gets compared against.
-    import math
-
-    from airflow_kafka_spark_spark.ext.dedup import connected_components
-    from airflow_kafka_spark_spark.plans.catalog import CATALOG
-
-    small_dir = sf_dir.replace("sf0.1", "sf0.01")
-
-    def _timed_best2(fn):
-        best = float("inf")
-        for _ in range(2):
-            t0 = time.perf_counter()
-            fn()
-            best = min(best, time.perf_counter() - t0)
-        return best
-
-    def _edges_for(d):
-        return basket_pairs(
-            load_table(spark, d, "lineitem"), "l_orderkey", "l_partkey"
-        ).localCheckpoint()
-
-    exponent_results = {}
-    per_scale: dict[str, dict[str, dict]] = {}
-    # the two-scale comparison only exists when sf_dir IS the sf0.1
-    # tree: on any other SPARK_GRAFT_SF_DIR the replace() is a no-op,
-    # both legs would measure the SAME directory and the exponent
-    # divides by log(1) = 0 (r13 review: a full run's output was lost
-    # to the ZeroDivisionError at the very end)
-    scales = ((small_dir, "sf0.01"), (sf_dir, "sf0.1"))
-    if small_dir == sf_dir:
-        exponent_results["skipped"] = (
-            f"scaling comparison needs sf_dir to be the sf0.1 tree "
-            f"(got {sf_dir!r}; the sf0.01 small leg would be the same "
-            "directory)"
-        )
-        scales = ()
-    for d, tag in scales:
-        e = _edges_for(d)
-        m = e.count()
-        scale_entry = {}
-        scale_entry["triangle_count"] = {
-            "n": m, "sec": _timed_best2(lambda: triangle_stats(e).collect()),
-        }
-        und = e.unionAll(
-            e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        )
-        scale_entry["pagerank"] = {
-            "n": m,
-            "sec": _timed_best2(
-                lambda: pagerank(und, iterations=3).agg(F.sum("rank_s")).collect()
-            ),
-        }
-        cc_pairs = e.select(
-            F.col("src").alias("doc1"), F.col("dst").alias("doc2")
-        )
-        scale_entry["connected_components"] = {
-            "n": m,
-            "sec": _timed_best2(
-                lambda: connected_components(cc_pairs).agg(
-                    F.count_distinct("component")
-                ).collect()
-            ),
-        }
-        hr = CATALOG["hierarchy_rollup"].fn
-        n_cust = load_table(spark, d, "customer").count()
-        scale_entry["hierarchy_rollup"] = {
-            "n": n_cust,
-            "sec": _timed_best2(
-                lambda: hr(spark, d).write.format("noop").mode("overwrite").save()
-            ),
-        }
-        per_scale[tag] = scale_entry
-    for op in per_scale.get("sf0.1", ()):
-        lo, hi = per_scale["sf0.01"][op], per_scale["sf0.1"][op]
-        exponent_results[op] = {
-            "n_small": lo["n"], "sec_small": round(lo["sec"], 3),
-            "n_big": hi["n"], "sec_big": round(hi["sec"], 3),
-            "exponent": round(
-                math.log(hi["sec"] / lo["sec"]) / math.log(hi["n"] / lo["n"]), 3
-            ),
-        }
-
-    # celebrity-node skew probe for triangle_stats: attach one hub
-    # adjacent to EVERY node of the sf0.1 part graph. Degree
-    # orientation points edges from lower-degree endpoints TOWARD the
-    # hub, so the hub's own out-list stays O(sqrt m)-bounded and the
-    # per-edge array_intersect never sees a celebrity-sized array —
-    # the measured demonstration of the docstring's O(sqrt m) claim.
-    edges_01 = _edges_for(sf_dir)
-    nodes_01 = (
-        edges_01.select(F.col("src").alias("n"))
-        .unionAll(edges_01.select(F.col("dst").alias("n")))
-        .distinct()
-    )
-    hub_id = nodes_01.agg(F.max("n")).first()[0] + 1
-    celebrity = edges_01.unionAll(
-        nodes_01.select(F.col("n").alias("src"), F.lit(hub_id).alias("dst"))
-    ).localCheckpoint()
-    n_nodes_clean = nodes_01.count()
-    skew_results = {}
-    for tag, frame in (("clean", edges_01), ("celebrity_hub", celebrity)):
-        t0 = time.perf_counter()
-        row = triangle_stats(frame).collect()[0]
-        skew_results[tag] = {
-            "sec": round(time.perf_counter() - t0, 3),
-            "n_edges": frame.count(),
-            "n_triangles": row["n_triangles"],
-        }
-    # hub degree == n_nodes_clean: every clean edge now closes a
-    # triangle through the hub, so the count must grow by exactly the
-    # clean edge count
-    assert (
-        skew_results["celebrity_hub"]["n_triangles"]
-        == skew_results["clean"]["n_triangles"] + skew_results["clean"]["n_edges"]
-    ), (skew_results, n_nodes_clean)
-
-    # Offset-fence overhead (r16): the rollup event fence's 100 TB
-    # contract is "one bounded census aggregate + one kilobyte
-    # broadcast join per micro-batch". The honest metric is the
-    # ABSOLUTE overhead_sec (fenced − unfenced fold of the identical
-    # batch), not the ratio — the unfenced base is sub-second at these
-    # sizes, so a ratio overstates a fixed cost. Measured (local[32]):
-    # ~1.5-1.7 s per batch, FLAT across 200k → 3.2M batch rows (16×)
-    # and flat across 32 → 8192 source partitions (256× map growth) —
-    # i.e. one extra action's latency plus the broadcast join, not a
-    # data- or domain-proportional cost; it amortizes to noise at real
-    # trigger intervals. Two axes, fenced-vs-unfenced same-run
-    # face-off (raw seconds comparable within a run). The fenced leg
-    # folds a SECOND batch (offsets above the stored marks), so the
-    # broadcast fence join against a populated map is on the measured
-    # path; the unfenced leg folds the same second batch through a
-    # batch-id-only rollup.
-    import shutil
-    import tempfile
-
-    from airflow_kafka_spark_spark.streaming.rollup import (
-        merge_batch_into_rollup,
-    )
+def offset_fence_overhead(spark) -> dict:
+    """Offset-fence overhead: the rollup event fence's 100 TB contract
+    is "one bounded census aggregate + one kilobyte broadcast join per
+    micro-batch". The honest metric is the ABSOLUTE overhead_sec
+    (fenced − unfenced fold of the identical batch), not the ratio —
+    the unfenced base is sub-second at these sizes, so a ratio
+    overstates a fixed cost. Measured (local[32]): ~1.5-1.7 s per
+    batch, FLAT across 200k → 3.2M batch rows (16×) and flat across
+    32 → 8192 source partitions (256× map growth) — one extra action's
+    latency plus the broadcast join, not a data- or domain-proportional
+    cost. Two axes, fenced-vs-unfenced same-run face-off (raw seconds
+    comparable within a run). The fenced leg folds a SECOND batch
+    (offsets above the stored marks), so the broadcast fence join
+    against a populated map is on the measured path; the unfenced leg
+    folds the same second batch through a batch-id-only rollup."""
 
     def _fence_batch(rows: int, parts: int, wave: int):
         per = rows // parts
@@ -971,36 +217,7 @@ def main() -> None:
             }
     finally:
         shutil.rmtree(fence_root, ignore_errors=True)
-
-    print(
-        json.dumps(
-            {
-                "metric": "cascade_scaling",
-                "results": results,
-                "minhash_scaling": dedup_results,
-                "chunk_dedup_scaling": chunk_results,
-                "url_dedup_scaling": url_results,
-                "url_dedup_salted_skew": salted_skew_results,
-                "quality_classifier_scaling": clf_results,
-                "pq_encode_scaling": pq_results,
-                "ann_serving_batch": ann_results,
-                "ivfpq_face_off": ivfpq_results,
-                "ivfpq_face_off_10x": ivfpq10x_results,
-                "drift_scaling": drift_results,
-                "rolling_mean_formulations": rolling_results,
-                "fixed_point_sum_formulations": sum_results,
-                "containment_skew_cap": containment_results,
-                "semantic_dedup_skew": semdedup_results,
-                "triangle_formulations": tri_results,
-                "pagerank_iteration_cost": pr_results,
-                "closure_formulations": closure_results,
-                "scaling_exponents_sf001_to_sf01": exponent_results,
-                "triangle_celebrity_skew": skew_results,
-                "offset_fence_overhead": fence_results,
-            }
-        )
-    )
-    spark.stop()
+    return fence_results
 
 
 if __name__ == "__main__":

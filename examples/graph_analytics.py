@@ -80,8 +80,7 @@ def main() -> None:
     # system (the leak default would deflate all ranks); still
     # fixed-point exact
     # engine-side sum — collecting the node-sized rank table to add it
-    # up breaks at 10^9 nodes (r13 review; bench_scale computes the
-    # same mass check with one bounded agg)
+    # up breaks at 10^9 nodes (r13 review, CHANGELOG Round 13)
     directed_total = (
         pagerank(edges, iterations=3, dangling="redistribute")
         .agg(F.sum("rank_s").alias("s"))

@@ -323,8 +323,8 @@ def main() -> None:
     # pair set into one-survivor-per-cluster (transitive: A~B, B~C drops
     # two of three even when A~C is below threshold). At 100 TB the
     # knob is n_lists — raise it until cells are executor-sized (see
-    # ext.similarity.semantic_dedup_pairs + bench_scale's
-    # semantic_dedup_skew probe for the mega-cluster case).
+    # ext.similarity.semantic_dedup_pairs, and CHANGELOG Round 5's
+    # mega-cluster probe).
     from airflow_kafka_spark_spark.ext.similarity import semantic_dedup_pairs
 
     emb = (

@@ -201,3 +201,18 @@ def test_probe_splice_positions_spread_through_pass():
 
     # no probes: pass-through
     assert bench._spliced_sequence(queries, None) == queries
+
+
+def test_bench_scale_probes_importable():
+    """bench_scale.py only runs in full, by hand — importing it pins the
+    engine names it calls, so a rename breaks here instead of silently.
+    Starts no Spark session."""
+    import bench_scale
+
+    for fn in (
+        bench_scale.main,
+        bench_scale.cascade_scaling,
+        bench_scale.ann_serving_batch,
+        bench_scale.offset_fence_overhead,
+    ):
+        assert callable(fn)

@@ -130,12 +130,17 @@ def test_triangle_stats_skewed_star_plus_triangle(spark):
     """A star (celebrity hub 0) contributes wedges but no triangles; one
     off-star triangle must still be counted exactly once despite the
     degree orientation routing its wedge through the lowest-degree
-    vertex."""
+    vertex. A second hub adjacent to EVERY node then closes exactly one
+    triangle per existing edge, however the orientation routes it."""
     star = [(0, i) for i in range(1, 8)]
     tri = [(10, 11), (11, 12), (10, 12)]
     row = triangle_stats(_edges(spark, star + tri)).collect()[0]
     assert row["n_triangles"] == 1
     assert row["n_nodes"] == 11 and row["n_edges"] == 10
+    nodes = {n for e in star + tri for n in e}
+    hub = [(n, 99) for n in sorted(nodes)]
+    row = triangle_stats(_edges(spark, star + tri + hub)).collect()[0]
+    assert row["n_triangles"] == 1 + 10
 
 
 def test_triangle_stats_ignores_self_loops_and_dup_edges(spark):
@@ -628,34 +633,20 @@ def test_transitive_closure_strategies_agree(spark):
     dag = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 4), (1, 4), (5, 6)], "child int, parent int"
     )
-    a = {
+    got = {
         (r["child"], r["parent"]): r["depth"]
-        for r in transitive_closure(dag, strategy="doubling").collect()
+        for r in transitive_closure(dag).collect()
     }
-    b = {
-        (r["child"], r["parent"]): r["depth"]
-        for r in transitive_closure(dag, strategy="frontier").collect()
+    assert got == {
+        (1, 2): 1, (2, 3): 1, (3, 4): 1, (1, 4): 1, (5, 6): 1,
+        (1, 3): 2, (2, 4): 2,
     }
-    assert a == b and a[(1, 4)] == 1
-
-
-def test_transitive_closure_frontier_cap_raises(spark):
-    import pytest as _pytest
-
-    from airflow_kafka_spark_spark.ext.graph import transitive_closure
-
-    chain = spark.createDataFrame(
-        [(i, i + 1) for i in range(12)], "child int, parent int"
-    )
-    with _pytest.raises(RuntimeError, match="max_depth"):
-        transitive_closure(chain, max_depth=4, strategy="frontier")
 
 
 def test_transitive_closure_non_power_of_two_cap_both_strategies(spark):
     """max_depth=5 on a 6-deep chain: the doubled closure covers 8 hops,
-    which used to let 'doubling' silently return >5-hop pairs while
-    'frontier' raised — both must now enforce the same <=max_depth
-    contract."""
+    so the <=max_depth trim must not hide the 6-hop pair from the
+    overflow check, and a 5-deep chain must come back complete."""
     import pytest as _pytest
 
     from airflow_kafka_spark_spark.ext.graph import transitive_closure
@@ -663,26 +654,21 @@ def test_transitive_closure_non_power_of_two_cap_both_strategies(spark):
     deep = spark.createDataFrame(
         [(i, i + 1) for i in range(6)], "child int, parent int"
     )
-    for strategy in ("doubling", "frontier"):
-        with _pytest.raises(RuntimeError, match="max_depth"):
-            transitive_closure(deep, max_depth=5, strategy=strategy)
+    with _pytest.raises(RuntimeError, match="max_depth"):
+        transitive_closure(deep, max_depth=5)
 
     ok = spark.createDataFrame(
         [(i, i + 1) for i in range(5)], "child int, parent int"
     )
-    results = []
-    for strategy in ("doubling", "frontier"):
-        out = transitive_closure(ok, max_depth=5, strategy=strategy)
-        got = {(r["child"], r["parent"]): r["depth"] for r in out.collect()}
-        assert max(got.values()) == 5 and len(got) == sum(range(1, 6))
-        results.append(got)
-    assert results[0] == results[1]
+    out = transitive_closure(ok, max_depth=5)
+    got = {(r["child"], r["parent"]): r["depth"] for r in out.collect()}
+    assert got == {(i, j): j - i for i in range(6) for j in range(i + 1, 6)}
 
 
 def test_transitive_closure_multipath_dag_strategies_agree(spark):
     """Layered complete-bipartite DAG: 3^k distinct paths per pair — the
-    shape where an undeduped frontier multiplies. Both strategies must
-    return one row per reachable pair at the minimal depth."""
+    closure must return one row per reachable pair at the minimal
+    depth."""
     from airflow_kafka_spark_spark.ext.graph import transitive_closure
 
     layers = [[lv * 10 + i for i in range(3)] for lv in range(5)]
@@ -701,7 +687,6 @@ def test_transitive_closure_multipath_dag_strategies_agree(spark):
         for a in la
         for b in lb
     }
-    for strategy in ("doubling", "frontier"):
-        out = transitive_closure(dag, max_depth=7, strategy=strategy)
-        got = {(r["child"], r["parent"]): r["depth"] for r in out.collect()}
-        assert got == expected, strategy
+    out = transitive_closure(dag, max_depth=7)
+    got = {(r["child"], r["parent"]): r["depth"] for r in out.collect()}
+    assert got == expected
