@@ -92,15 +92,16 @@ def _common_shingle_counts(
     doc's total shingle count ``n_sh`` is unaffected), so downstream
     scores computed from ``n_common`` are lower bounds when capped."""
     sh = _doc_shingles(docs, text_col, n)
-    # persist the sized shingle frame: the inverted index is consumed by
-    # BOTH sides of the self-join (and by the df-count when capped) —
-    # without a persist each consumer re-runs the split/shingle/distinct
-    # compute, the most expensive stage of the whole query. Registered
-    # for release_minhash_caches(), same lifecycle as the minhash cache.
+    # the ONE cut, on the sized shingle frame: the index below is read
+    # by both self-join sides (uncapped) or by the df-count and the
+    # expand (capped), and uncut each reader re-runs the shingle
+    # compute, the query's costliest stage. Same-session A/B at sf0.1,
+    # median of 7 interleaved runs: 0.95/1.00/1.05x the old persist +
+    # index cut on jaccard_pairs/_capped/containment_pairs_capped;
+    # cutting the exploded index instead measured 2.4-3.9x slower.
     sized = sh.select(
         "doc_id", "shingles", F.size("shingles").alias("n_sh")
-    ).persist()
-    _OWNED_CACHES.append(sized)
+    ).localCheckpoint(eager=False)
     inv = sized.select(
         "doc_id", "n_sh", F.explode("shingles").alias("shingle")
     )
@@ -156,16 +157,6 @@ def _common_shingle_counts(
         return cand.groupBy("doc1", "doc2", "n1", "n2").agg(
             F.count("*").alias("n_common")
         )
-    # LAZY plan cut on the self-join input (the minhash-banded idiom,
-    # r17): both join sides replicate the cache-read + explode subtree
-    # otherwise; the checkpoint guarantees one pass and halves the
-    # plan — A/B at sf0.1: med ratio 0.91 on both jaccard_pairs and
-    # containment_pairs, results identical. UNCAPPED branch only: the
-    # capped branch's collect+expand consumes the index once per
-    # consumer class already and measured parity-to-worse (1.00-1.04)
-    # with a cut here. eager=False — materializes inside the caller's
-    # action.
-    inv = inv.localCheckpoint(eager=False)
     a, b = inv.alias("a"), inv.alias("b")
     # the inverted-index self-join is corpus×shingles-scale on BOTH
     # sides: shuffle_hash pin so neither is ever a broadcast build (at
@@ -280,21 +271,6 @@ def minhash_signature(shingles: Column, num_hashes: int = 8) -> list[Column]:
     ]
 
 
-# persisted shingle frames created by minhash_lsh_pairs when the caller
-# didn't supply their own — release with release_minhash_caches()
-_OWNED_CACHES: list[DataFrame] = []
-
-
-def release_minhash_caches() -> None:
-    """Unpersist every shingle frame minhash_lsh_pairs cached internally.
-
-    Long-lived sessions deduping MANY corpora should call this between
-    corpora (or pass a pre-persisted ``shingles`` frame they own) —
-    otherwise cache entries accumulate until session end."""
-    while _OWNED_CACHES:
-        _OWNED_CACHES.pop().unpersist()
-
-
 def minhash_lsh_pairs(
     docs: DataFrame,
     num_hashes: int = 8,
@@ -302,7 +278,6 @@ def minhash_lsh_pairs(
     threshold: float = 0.4,
     n: int = 3,
     text_col: str = "text",
-    shingles: DataFrame | None = None,
 ) -> DataFrame:
     """MinHash+LSH near-dup candidates, verified with exact Jaccard.
 
@@ -311,12 +286,6 @@ def minhash_lsh_pairs(
     candidate pairs → exact Jaccard on the candidates only. At scale the
     candidate join replaces the all-pairs blowup; the verify join touches
     only candidate docs.
-
-    ``shingles``: optionally pass a pre-built (and pre-persisted)
-    ``_doc_shingles(docs, text_col, n)`` frame whose cache lifecycle the
-    CALLER owns. When omitted, the function persists one internally and
-    registers it for :func:`release_minhash_caches` — a lazily-returned
-    DataFrame gives this function no post-action hook to release it.
     """
     if bands < 1 or num_hashes % bands != 0:
         # bands > num_hashes makes rows_per_band 0 and every band key a
@@ -330,13 +299,9 @@ def minhash_lsh_pairs(
         )
     rows_per_band = num_hashes // bands
     # the shingle frame feeds the signature AND both sides of the verify
-    # join — persist so one action computes it once (MEMORY_AND_DISK, so
-    # an oversized corpus spills instead of OOMing).
-    if shingles is None:
-        sh = _doc_shingles(docs, text_col, n).persist()
-        _OWNED_CACHES.append(sh)
-    else:
-        sh = shingles
+    # join — cut so one action computes it once (the blocks spill to
+    # disk, so an oversized corpus does not OOM).
+    sh = _doc_shingles(docs, text_col, n).localCheckpoint(eager=False)
     sig = sh.select(
         "doc_id", "shingles", *minhash_signature(F.col("shingles"), num_hashes)
     )
@@ -359,8 +324,7 @@ def minhash_lsh_pairs(
     # relies on runtime exchange reuse to run once; the checkpoint
     # guarantees ONE signature pass and halves the plan (r17 A/B at
     # sf0.1: med ratio 0.82 vs the un-cut form, results identical).
-    # eager=False: materializes inside the caller's action, no extra
-    # job; rows are (doc_id, band_key) — corpus × bands, narrow.
+    # Rows are (doc_id, band_key) — corpus × bands, narrow.
     banded = banded.localCheckpoint(eager=False)
     a, b_ = banded.alias("a"), banded.alias("b")
     # candidate pairs carry only ids — the (potentially large) shingle
@@ -424,9 +388,9 @@ def connected_components(
     and Beyond" — the neighbor-min-only variant needed one iteration
     per hop, which was fine for shallow near-dup cliques but walked a
     high-diameter co-purchase giant component one edge at a time).
-    The label frame is localCheckpoint'd EVERY iteration: persist()
-    does NOT cut lineage, so each uncut iteration's logical plan nests
-    the last THREE times over (neighbor-min, jump, base) — a ~20-round
+    The label frame is localCheckpoint'd EVERY iteration: each uncut
+    iteration's logical plan nests the last THREE times over
+    (neighbor-min, jump, base) — a ~20-round
     run OOM'd the driver on plan bookkeeping alone with no cut at all
     (examples/graph_analytics.py, round 5), and the interim
     every-5-rounds cadence still left 3^5-way nested plans that the
@@ -441,14 +405,16 @@ def connected_components(
     e = pairs.select(
         F.col(src).cast("long").alias("u"), F.col(dst).cast("long").alias("v")
     )
+    # the seed labels and every round's neighbor-min join read the edge
+    # list: cut so the pair generation upstream runs once, not per round
     edges = (
         e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
         .distinct()
-        .persist()
+        .localCheckpoint(eager=False)
     )
-    labels = edges.select("u").distinct().withColumn("label", F.col("u")).persist()
-    converged = False
-    for it in range(max_iter):
+    labels = edges.select("u").distinct().withColumn("label", F.col("u"))
+    labels = labels.localCheckpoint(eager=False)
+    for _ in range(max_iter):
         nbr_min = (
             edges.join(
                 labels.select(F.col("u").alias("v"), "label").hint("shuffle_hash"),
@@ -474,16 +440,15 @@ def connected_components(
                 ).alias("label"),
             )
         )
-        # cut lineage EVERY iteration: the convergence probe below
-        # materializes new_labels anyway, and a persist() between
-        # checkpoints leaves the LOGICAL plan nesting — labels appears
-        # three times per round (neighbor-min, jump, base), so the plan
-        # tree triples each iteration and the probe re-plans the whole
-        # 3^k tree (measured: 1000+ join nodes in the returned plan with
+        # cut lineage EVERY iteration: labels appears three times per
+        # round (neighbor-min, jump, base), so an uncut plan tree
+        # triples each iteration and the probe re-plans the whole 3^k
+        # tree (measured: 1000+ join nodes in the returned plan with
         # checkpoint_every=5, and the AQE-chosen broadcasts of those
         # node-sized label tables are the same constrained-driver build
-        # hazard pagerank hit — hence the shuffle_hash hints above too)
-        new_labels = new_labels.localCheckpoint()
+        # hazard pagerank hit — hence the shuffle_hash hints above too).
+        # The convergence probe below is the action that materializes it.
+        new_labels = new_labels.localCheckpoint(eager=False)
         changed = (
             new_labels.join(
                 labels.withColumnRenamed("label", "old").hint("shuffle_hash"), "u"
@@ -492,24 +457,16 @@ def connected_components(
             .limit(1)
             .count()
         )
-        labels.unpersist()
         labels = new_labels
         if changed == 0:
-            converged = True
             break
-    edges.unpersist()
-    if not converged:
+    else:
         raise RuntimeError(
             f"connected_components: not converged after {max_iter} "
             "iterations — with pointer jumping this needs a graph of "
             f"diameter ≳ 2^{max_iter}; raise max_iter (or check the "
             "pair generation for an unexpected giant component)"
         )
-    # the final label generation stays persisted (the caller's action
-    # reads it; an unpersist here would force a full lineage recompute) —
-    # released via release_minhash_caches(), same lifecycle as the
-    # shingle caches.
-    _OWNED_CACHES.append(labels)
     return labels.select(
         F.col("u").alias("doc_id"),
         F.col("label").alias("component"),

@@ -140,8 +140,6 @@ def triangle_stats(edges: DataFrame, src: str = "src", dst: str = "dst") -> Data
     # planning per copy: cold-run A/B at sf0.1 measured 12.3 → 5.2 s
     # (r17), warm runs a wash — adopted for the plan-size cut (guide
     # §3.3 "materialise an intermediate to truncate the plan").
-    # eager=False: materialization happens inside the caller's one
-    # action, no extra job.
     e = e.localCheckpoint(eager=False)
     deg = (
         e.select(F.col(src).alias("n"))
@@ -306,8 +304,8 @@ def pagerank(
     computes the edge shuffle once for all iterations within the
     single final action. In leak mode the loop is driver-side
     unrolling of a fixed small count with no action and no
-    materialization — for deep iteration counts, localCheckpoint
-    periodically as ext.dedup.connected_components does.
+    materialization — for deep iteration counts, cut the rank frame
+    every iteration as ext.dedup.connected_components does.
 
     Output: ``(n, rank_s, rank)`` — the exact scaled-BIGINT rank and
     its double rendering ``rank_s / 10^scale`` (one deterministic
@@ -321,21 +319,13 @@ def pagerank(
         )
     unit = 10**scale
     if dangling == "redistribute":
-        # LAZY checkpoints (eager=False) throughout this mode: the SQL
-        # plan is cut to a LogicalRDD immediately (so the twice-per-
-        # iteration rank references never compound the logical plan —
-        # the connected_components lesson), but materialization is
-        # deferred to the caller's ONE action, inside which each
-        # checkpointed RDD is computed once, persisted, and read by
-        # both consumers. The previous eager form ran an action per
-        # checkpoint (6 jobs for 3 iterations), paying the full
-        # job-submission + stage-barrier cascade each time — r16
-        # measured lazy at 3.2 s vs eager 3.5 s min (and far lower
-        # variance: no cold multi-job cascade) at sf0.1, bit-identical.
-        # The loops that DO need eager cuts are the ones with per-round
-        # convergence actions (connected_components, transitive_closure)
-        # — this loop has a fixed iteration count and no data-dependent
-        # exit, so nothing ever forces an intermediate job.
+        # edges feed every iteration's contrib join and the node/degree
+        # tables. The loop has a fixed iteration count and no
+        # data-dependent exit, so no cut needs a driver action of its
+        # own: each cut's blocks are written by the first job that reads
+        # them. The earlier eager form ran an action per checkpoint (6
+        # jobs for 3 iterations) — r16 measured 3.2 s vs eager 3.5 s min
+        # at sf0.1, bit-identical.
         edges = edges.localCheckpoint(eager=False)
     nodes = (
         edges.select(F.col(src).alias("n"))
@@ -368,8 +358,8 @@ def pagerank(
             # (contrib + dangling sum), so the unrolled plan grows
             # 2^iterations between cuts — checkpoint every iteration,
             # the connected_components lesson (O(1) plans at any depth;
-            # both per-iteration references then read the once-computed,
-            # persisted blocks — lazily, inside the caller's one action)
+            # both per-iteration references read the once-computed
+            # blocks)
             rank = rank.localCheckpoint(eager=False)
         # inner join on src: every src has out_deg >= 1 by construction,
         # so the carried out_deg is never NULL on matched rows
@@ -481,7 +471,7 @@ def transitive_closure(
         edges.select(F.col(src).alias("__s"), F.col(dst).alias("__d"))
         .distinct()
         .withColumn("depth", F.lit(1))
-        .localCheckpoint()
+        .localCheckpoint(eager=False)
     )
     rounds = max(1, math.ceil(math.log2(max_depth)))
     # convergence early-exit: after round k the closure holds EVERY
@@ -492,7 +482,7 @@ def transitive_closure(
     # pair count stopped growing the set is complete outright. Each
     # remaining round would self-join the FULL closure for nothing —
     # the most expensive no-op available. One cheap aggregate action
-    # per round over the just-checkpointed blocks cuts
+    # per round (which also materializes that round's cut) cuts
     # ceil(log2(max_depth)) rounds to ceil(log2(actual_depth)) when
     # max_depth is a generous bound over a shallow tree (sf0.1 customer
     # tree: depth 14 under max_depth=24 — round 5 was pure waste;
@@ -520,7 +510,7 @@ def transitive_closure(
             reach.unionByName(ext)
             .groupBy("__s", "__d")
             .agg(F.min("depth").alias("depth"))
-            .localCheckpoint()
+            .localCheckpoint(eager=False)
         )
         row = reach.agg(
             F.count(F.lit(1)).alias("n"), F.max("depth").alias("maxd")

@@ -550,12 +550,12 @@ def ivf_assignments(
     assignment is one broadcast + JVM-side dot products over the full
     corpus. Returns (assignments df [id, list_id], centroids).
 
-    The assignment frame is ``localCheckpoint``-materialized before
-    return: an index is shared across many probe actions (the whole
-    point of the ``index=`` split), and a lazy frame would re-run the
-    full-corpus nearest-centroid scan on every probe — the
-    materialized form is (id, int) rows, the on-disk size of any real
-    inverted-file index, computed exactly once.
+    The assignment frame is ``localCheckpoint``-cut before return: an
+    index is shared across many probe actions (the whole point of the
+    ``index=`` split), and an uncut frame would re-run the full-corpus
+    nearest-centroid scan on every probe — the first probe materializes
+    (id, int) rows, the on-disk size of any real inverted-file index,
+    computed exactly once.
     """
     import numpy as np
 
@@ -606,7 +606,7 @@ def ivf_assignments(
     with_cents = embeddings.select(F.col(id_col), F.col(vec_col), *cent_cols)
     assigned = with_cents.select(
         F.col(id_col), best.cast("int").alias("list_id")
-    ).localCheckpoint(eager=True)
+    ).localCheckpoint(eager=False)
     return assigned, [list(map(float, c)) for c in centroids]
 
 

@@ -747,8 +747,8 @@ def dsir_importance(
     tok_stats = ex.groupBy("__tok").agg(
         F.count(F.lit(1)).alias("__n_raw"),
         F.sum("__tgt").alias("__n_tgt"),
-    ).localCheckpoint()
-    # ONE row off the already-checkpointed vocab table — both a
+    ).localCheckpoint(eager=False)
+    # ONE row off the checkpointed vocab table (and its first read) — both a
     # BOUNDED collect (the totals are two BIGINTs) and the loud guard:
     # an empty target subset means __N_tgt = 0, and the div-by-zero
     # under non-ANSI Spark would silently NULL every score and kept
@@ -780,7 +780,7 @@ def dsir_importance(
         ex.join(ratio, "__tok")
         .groupBy("doc_id")
         .agg(F.sum("__r").alias("dsir_score"))
-        .localCheckpoint()
+        .localCheckpoint(eager=False)
     )
     median = scores.agg(
         F.expr(

@@ -4867,31 +4867,31 @@ def q_ann_recall_bounded(spark, sf_dir):
     books = pq_codebooks(emb)
     # encode the corpus ONCE and share the codes frame across the PQ
     # and IVF-PQ legs (codes are index payload, built at add time);
-    # materialized so neither leg re-runs the encode kernel
-    codes = pq_encode(emb, books).localCheckpoint(eager=True)
+    # cut so neither leg re-runs the encode kernel
+    codes = pq_encode(emb, books).localCheckpoint(eager=False)
     # residual leg (FAISS IndexIVFPQ code layout): cell-coupled books,
     # per-cell ADC tables — measured 0.6-1.0 recall at sf0.01/sf0.1,
     # same certified 0.5 floor as the raw-code composition
     res_books = pq_codebooks(emb, centroids=ivf_index[1])
     res_codes = pq_encode_residual(emb, res_books, ivf_index).localCheckpoint(
-        eager=True
+        eager=False
     )
-    # localCheckpoint the k·|Q|-row batch result: the per-qid filters
-    # below reference it twice, and without materialization each
-    # reference would re-plan (and re-execute) the whole batch subtree
+    # cut the k·|Q|-row batch result: the per-qid filters below
+    # reference it twice, and without a cut each reference would
+    # re-plan (and re-execute) the whole batch subtree
     # — the claim "both probe queries are answered by ONE plan" holds
     # only if the plan runs once
     ivf_all = (
         ann_topk_ivf_batch(emb, list(qids), k, n_probe=8, index=ivf_index)
         .select("query_id", "vec_id")
-        .localCheckpoint(eager=True)
+        .localCheckpoint(eager=False)
     )
     pq_all = (
         ann_topk_pq_batch(
             emb, list(qids), k, rerank_factor=24, codebooks=books, codes=codes
         )
         .select("query_id", "vec_id")
-        .localCheckpoint(eager=True)
+        .localCheckpoint(eager=False)
     )
     ivfpq_all = (
         ann_topk_ivfpq_batch(
@@ -4899,7 +4899,7 @@ def q_ann_recall_bounded(spark, sf_dir):
             index=ivf_index, codebooks=books, codes=codes,
         )
         .select("query_id", "vec_id")
-        .localCheckpoint(eager=True)
+        .localCheckpoint(eager=False)
     )
     ivfpq_res_all = (
         ann_topk_ivfpq_batch(
@@ -4908,7 +4908,7 @@ def q_ann_recall_bounded(spark, sf_dir):
             residual=True,
         )
         .select("query_id", "vec_id")
-        .localCheckpoint(eager=True)
+        .localCheckpoint(eager=False)
     )
     out = None
     for qid in qids:
@@ -7461,13 +7461,6 @@ def _session_safe(fn: Callable[[SparkSession, str], DataFrame]):
 
     def run(spark: SparkSession, sf_dir: str) -> DataFrame:
         ensure_engine_confs(spark)
-        # release the PREVIOUS query's internally-persisted frames (the
-        # caller has consumed its DataFrame by the time the next entry
-        # runs) — a 50-query harness session would otherwise accumulate
-        # every dedup query's shingle/label caches
-        from ..ext.dedup import release_minhash_caches
-
-        release_minhash_caches()
         return fn(spark, sf_dir)
 
     run.__name__ = getattr(fn, "__name__", "catalog_query")

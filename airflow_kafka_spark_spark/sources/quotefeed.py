@@ -67,6 +67,12 @@ def _synthetic_history(symbol: str, n_bars: int) -> dict:
     }
 
 
+def _row(msg: dict) -> tuple:
+    """One SCHEMA row for a history message: the message rides along
+    as canonical (key-sorted) JSON."""
+    return msg["symbol"], float(msg["current_price"]), json.dumps(msg, sort_keys=True)
+
+
 class _QuoteFeedPartition(InputPartition):
     def __init__(self, index: int, count: int):
         self.index = index
@@ -98,23 +104,11 @@ class QuoteFeedReader(DataSourceReader):
             # index so partitions split the file without coordination
             with open(self.path) as f:
                 for i, line in enumerate(f):
-                    if i % partition.count != partition.index or not line.strip():
-                        continue
-                    msg = json.loads(line)
-                    yield (
-                        msg["symbol"],
-                        float(msg["current_price"]),
-                        json.dumps(msg, sort_keys=True),
-                    )
+                    if i % partition.count == partition.index and line.strip():
+                        yield _row(json.loads(line))
         else:
-            shard = self.symbols[partition.index :: partition.count]
-            for symbol in shard:
-                msg = _synthetic_history(symbol, self.n_bars)
-                yield (
-                    msg["symbol"],
-                    float(msg["current_price"]),
-                    json.dumps(msg, sort_keys=True),
-                )
+            for symbol in self.symbols[partition.index :: partition.count]:
+                yield _row(_synthetic_history(symbol, self.n_bars))
 
 
 class QuoteFeedStreamReader(SimpleDataSourceStreamReader):
@@ -146,12 +140,7 @@ class QuoteFeedStreamReader(SimpleDataSourceStreamReader):
 
     def _rows(self, cycle: int):
         for symbol in self.symbols:
-            msg = _synthetic_history(symbol, self.base_bars + cycle)
-            yield (
-                msg["symbol"],
-                float(msg["current_price"]),
-                json.dumps(msg, sort_keys=True),
-            )
+            yield _row(_synthetic_history(symbol, self.base_bars + cycle))
 
     def read(self, start: dict):
         cycle = start["cycle"]

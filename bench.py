@@ -172,9 +172,9 @@ def main() -> None:
     # N runs of a few, and the per-query min is drawn from time-separated
     # samples. The first-pass timing is recorded too
     # ("queries_single_run") so round-over-round regressions aren't
-    # masked by min(). clearCache before EVERY run: queries that persist
-    # intermediates (minhash_lsh) must not get a warm-cache repeat, and
-    # cached state must not occupy memory while later queries are timed.
+    # masked by min(). clearCache before EVERY run: a query that persists
+    # an intermediate must not get a warm-cache repeat, and cached state
+    # must not occupy memory while later queries are timed.
     n_runs = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3")))
 
     def run_once(fn) -> float:

@@ -74,7 +74,7 @@ def run_demo(spark, sf_dir: str, workdir: str) -> dict:
                 F.lit(2),
             ).cast("int"),
         )
-        .localCheckpoint(eager=True)
+        .localCheckpoint(eager=False)
     )
     n_events = ev.count()
 

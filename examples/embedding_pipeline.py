@@ -100,7 +100,7 @@ def main() -> None:
     )
 
     res_books = pq_codebooks(emb, centroids=index[1])
-    res_codes = pq_encode_residual(emb, res_books, index).localCheckpoint()
+    res_codes = pq_encode_residual(emb, res_books, index).localCheckpoint(eager=False)
     ivfpq_by_probe: dict[int, set] = {p: set() for p in probes}
     for r in ann_topk_ivfpq_batch(
         emb, probes, k=10, n_probe=8, rerank_factor=24,

@@ -58,7 +58,7 @@ def main() -> None:
     # actions read it.
     weighted = basket_pairs(
         li, "l_orderkey", "l_partkey", max_basket_size=100, counted=True
-    ).localCheckpoint()
+    ).localCheckpoint(eager=False)
     edges = weighted.select("src", "dst")
     n_edges = edges.count()
 
@@ -93,7 +93,7 @@ def main() -> None:
     strong = (
         weighted.filter(F.col("support") >= 2)
         .select(F.col("src").alias("doc1"), F.col("dst").alias("doc2"))
-        .localCheckpoint()  # cut the basket-expansion lineage before the loop
+        .localCheckpoint(eager=False)  # cut the basket-expansion lineage before the loop
     )
     comps = connected_components(strong)
     n_communities = comps.select("component").distinct().count()

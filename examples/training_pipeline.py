@@ -49,7 +49,6 @@ def main() -> None:
         connected_components,
         exact_duplicates,
         minhash_lsh_pairs,
-        release_minhash_caches,
     )
     from airflow_kafka_spark_spark.ext.textstats import (
         contamination_scores,
@@ -176,7 +175,7 @@ def main() -> None:
     # doubled through three docs-self-join stages — without the cut the
     # logical tree compounds k^stages and the driver heap pays for it
     # (the stage-4 parquet boundary lesson, applied mid-funnel)
-    redacted = pii_redact(docs.withColumn("text", contact)).localCheckpoint()
+    redacted = pii_redact(docs.withColumn("text", contact)).localCheckpoint(eager=False)
     leaked = redacted.filter(
         (F.col("n_email") != 1)
         | (F.col("n_phone") != 1)
@@ -271,11 +270,11 @@ def main() -> None:
     # 3. near-dup clusters → keep one doc per component. The pairs get
     # the SAME lineage cut stages 3b/3c already have: CC's loop would
     # otherwise replant the whole stage 0-2 plan under every iteration
-    # (persist does not cut lineage — the compounded tree alone is the
-    # documented driver-heap blow-up class)
+    # (the compounded tree alone is the documented driver-heap blow-up
+    # class)
     pairs = minhash_lsh_pairs(
         docs, num_hashes=8, bands=4, threshold=0.4
-    ).localCheckpoint()
+    ).localCheckpoint(eager=False)
     drop = connected_components(pairs).filter(~F.col("is_keeper")).select("doc_id")
     docs = docs.join(drop, "doc_id", "left_anti")
     n3 = docs.count()
@@ -303,7 +302,7 @@ def main() -> None:
     cont = (
         containment_pairs(docs, threshold=0.9)
         .select("doc1", "doc2")
-        .localCheckpoint()
+        .localCheckpoint(eager=False)
     )
     cont_comp = connected_components(cont)
     keep_longest = canonical_docs(cont_comp, docs).select(
@@ -334,7 +333,7 @@ def main() -> None:
     sem_pairs = (
         semantic_dedup_pairs(emb, threshold=0.999, n_lists=16)
         .select(F.col("vec1").alias("doc1"), F.col("vec2").alias("doc2"))
-        .localCheckpoint()  # same lineage cut as stage 3b
+        .localCheckpoint(eager=False)  # same lineage cut as stage 3b
     )
     drop_semantic = (
         connected_components(sem_pairs).filter(~F.col("is_keeper")).select("doc_id")
@@ -395,7 +394,6 @@ def main() -> None:
     n5 = spark.read.parquet(out).count()
     n_shards = spark.read.parquet(out).select("lang", "shard").distinct().count()
 
-    release_minhash_caches()
     print(
         f"raw={n0} html_stripped={n0a} url_curated={n0b} quality={n1} "
         f"classifier={n1b} "

@@ -91,10 +91,7 @@ def test_capped_expand_path_matches_join_frame(spark):
     (unreachable cap routes the expand path; ``None`` routes the join
     path). A NULL doc_id pairs with nothing under the join form
     (``NULL < x`` is NULL), so the expand path must drop it too."""
-    from airflow_kafka_spark_spark.ext.dedup import (
-        _common_shingle_counts,
-        release_minhash_caches,
-    )
+    from airflow_kafka_spark_spark.ext.dedup import _common_shingle_counts
 
     rows = [
         (1, "alpha beta gamma delta epsilon zeta"),
@@ -104,22 +101,36 @@ def test_capped_expand_path_matches_join_frame(spark):
         (None, "alpha beta gamma delta epsilon zeta"),  # NULL id: no pairs
     ]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
-    try:
-        join_frame = sorted(
-            tuple(r)
-            for r in _common_shingle_counts(docs, "text", 3, None).collect()
-        )
-        expand_frame = sorted(
-            tuple(r)
-            for r in _common_shingle_counts(docs, "text", 3, 10**9).collect()
-        )
-    finally:
-        release_minhash_caches()
+    join_frame, expand_frame = (
+        sorted(map(tuple, _common_shingle_counts(docs, "text", 3, cap).collect()))
+        for cap in (None, 10**9)
+    )
     assert join_frame == expand_frame
     assert join_frame, "planted corpus must produce shared-shingle pairs"
     assert all(
         r[0] is not None and r[1] is not None for r in join_frame
     ), "NULL doc_id must never appear in a pair"
+
+
+def test_dedup_outputs_leave_no_cached_frames(spark):
+    """The near-dup operators cut shared intermediates with lazy
+    localCheckpoint, never persist(): after the caller's action the
+    session's CacheManager is empty, so a long-lived session deduping
+    many corpora accumulates no cache entries."""
+    from airflow_kafka_spark_spark.ext import dedup
+
+    docs = spark.createDataFrame(DOCS, "doc_id long, text string")
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    spark.catalog.clearCache()
+    for out in (
+        dedup.jaccard_pairs(docs),
+        dedup.jaccard_pairs(docs, max_shingle_df=10),
+        dedup.containment_pairs(docs),
+        dedup.minhash_lsh_pairs(docs),
+        dedup.connected_components(dedup.jaccard_pairs(docs)),
+    ):
+        assert out.collect(), "the tiny corpus has near-dup pairs"
+        assert cache.isEmpty()
 
 
 def test_ivf_ann_recall(spark):

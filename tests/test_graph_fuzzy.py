@@ -520,7 +520,7 @@ def test_connected_components_long_chain_converges(spark):
     propagation walked one hop per iteration and silently returned
     partial labels at the 25-iteration cap (the bug behind the round-5
     graph-analytics OOM); pointer jumping converges in O(log n) and the
-    periodic localCheckpoint keeps the plan tree flat."""
+    per-iteration localCheckpoint keeps the plan tree flat."""
     from airflow_kafka_spark_spark.ext.dedup import connected_components
 
     chain = spark.createDataFrame(

@@ -136,6 +136,25 @@ def test_quotefeed_datasource_end_to_end(spark):
     }
 
 
+def test_quotefeed_path_replay_reads_each_message_once(spark, tmp_path):
+    """Batch fixture replay (``path=``) shards the JSONL by line index:
+    every message comes back exactly once, as canonical JSON."""
+    import json
+
+    from airflow_kafka_spark_spark.sources import quotefeed
+
+    msgs = [quotefeed._synthetic_history(s, 3) for s in ("AAA", "BBB", "CCC")]
+    fixture = tmp_path / "feed.jsonl"
+    # keys unsorted on disk, and a trailing blank line to skip
+    fixture.write_text("".join(json.dumps(m) + "\n" for m in msgs) + "\n")
+    quotefeed.register_quotefeed(spark)
+    reader = spark.read.format("quotefeed").option("numPartitions", "2")
+    rows = reader.option("path", str(fixture)).load().collect()
+    assert sorted(tuple(r) for r in rows) == sorted(
+        (m["symbol"], m["current_price"], json.dumps(m, sort_keys=True)) for m in msgs
+    )
+
+
 def test_quotefeed_synthetic_dates_unique():
     """One calendar day per bar: 60 bars give 60 unique, increasing
     dates, so (symbol, date) stays a key past the end of a month."""
