@@ -691,20 +691,18 @@ def ann_topk_ivf_batch(
     vec_col: str = "embedding",
     id_col: str = "vec_id",
     index: tuple[DataFrame, list[list[float]]] | None = None,
-    validate: bool = True,
 ) -> DataFrame:
     """Batched IVF ANN serving: one plan answers N queries, with ZERO
     per-query driver actions — the missing half of the train/search
-    split. (``validate=True``, the default, spends ONE bounded action —
-    :func:`_collect_query_rows`, the same pushed-down query scan the PQ
-    batch path uses — to raise on query ids absent from the corpus or
-    duplicated with conflicting vectors, matching the point path's
-    error contract instead of silently returning truncated or
-    candidate-doubled result sets; the deduplicated collected rows then
-    BECOME the query frame, so validation costs no extra scan. Pass
-    ``validate=False`` for a fully action-free plan builder.) Either
-    way, a corpus id duplicated with an IDENTICAL vector occupies at
-    most one top-k slot per query — :func:`_topk_dedup_ids` collapses
+    split. (It spends ONE bounded action — :func:`_collect_query_rows`,
+    the same pushed-down query scan the PQ batch path uses — to raise
+    on query ids absent from the corpus or duplicated with conflicting
+    vectors, matching the point path's error contract instead of
+    silently returning truncated or candidate-doubled result sets; the
+    deduplicated collected rows then BECOME the query frame, so
+    validation costs no extra scan.) A corpus id duplicated with an
+    IDENTICAL vector occupies at most one top-k slot per query —
+    :func:`_topk_dedup_ids` collapses
     the repeated candidate rows the assigned/embeddings joins inject
     (ADVICE r10); conflicting-vector corpus duplicates remain the
     caller's risk. :func:`ann_topk_ivf` is the point-lookup contract (two
@@ -713,9 +711,8 @@ def ann_topk_ivf_batch(
     serialize 1000 round-trips. Here the whole batch is data-plane:
 
     - query vectors come from one ``isin`` filter over the corpus —
-      collected once and rebuilt as a deduplicated local relation under
-      ``validate=True``, left as the pushed-down scan under
-      ``validate=False`` — and broadcast to the executors either way;
+      collected once, rebuilt as a deduplicated local relation and
+      broadcast to the executors;
     - centroid probe selection is a JVM expression per query row —
       distances to the (literal, kilobyte-sized) centroids are
       ``array_sort``-ed as (dist, list) structs and the first
@@ -738,22 +735,20 @@ def ann_topk_ivf_batch(
         else ivf_assignments(embeddings, n_lists, vec_col=vec_col, id_col=id_col)
     )
     n_lists_eff = len(centroids)
-    q = embeddings.filter(F.col(id_col).isin(list(query_vec_ids))).select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("qvec")
+    # Shared validation contract with the PQ/IVFPQ batch paths: missing
+    # ids raise, duplicate ids with conflicting vectors raise,
+    # identical-vector duplicates collapse to one row. The collected
+    # (deduplicated) rows are the query frame — a duplicated corpus id
+    # would otherwise double every candidate row downstream of the q join.
+    q_rows = _collect_query_rows(
+        embeddings, query_vec_ids, vec_col, id_col, "ann_topk_ivf_batch"
     )
-    if validate:
-        # Shared validation contract with the PQ/IVFPQ batch paths:
-        # missing ids raise, duplicate ids with conflicting vectors
-        # raise, identical-vector duplicates collapse to one row. The
-        # collected (deduplicated) rows replace the data-plane scan as
-        # the query frame — a duplicated corpus id would otherwise
-        # double every candidate row downstream of the q join.
-        q_rows = _collect_query_rows(
-            embeddings, query_vec_ids, vec_col, id_col, "ann_topk_ivf_batch"
-        )
-        q = embeddings.sparkSession.createDataFrame(
-            [(r["query_id"], r["qvec"]) for r in q_rows], q.schema
-        )
+    q_schema = embeddings.select(
+        F.col(id_col).alias("query_id"), F.col(vec_col).alias("qvec")
+    ).schema
+    q = embeddings.sparkSession.createDataFrame(
+        [(r["query_id"], r["qvec"]) for r in q_rows], q_schema
+    )
     cent_cols = [
         F.array(*[F.lit(float(x)) for x in c]).alias(f"c{j}")
         for j, c in enumerate(centroids)

@@ -449,8 +449,8 @@ def q_running_macd_cert(spark, sf_dir):
     through ``streaming.stateful.replay_macd_in_batches`` — k=3
     contiguous chunks folded through the EXACT production state carry
     (``_macd_batch`` resumed from the previous chunk's stored state
-    row, the function both ``applyInPandasWithState`` and
-    ``transformWithState`` processors call). The one-shot leg is
+    row, the function the ``applyInPandasWithState`` processor
+    calls). The one-shot leg is
     ``operators.indicators.with_macd``, the batch kernel the module
     claims to reproduce. The driver-facing output is ONE aggregate
     row: joined row count and NULL-close census (data-derived — the

@@ -32,12 +32,6 @@ Mechanism:
 The snapshot lives in ``MEASURED_HASHES.json`` at the repo root, next to
 the driver artifacts it is keyed against, and is committed so a fresh
 checkout reproduces the same window (see ``tests/test_rotation.py``).
-
-Bootstrap note (round 5): the three entries above were refactored after
-their last row but before hashing existed, so their true measured hashes
-are unknowable; ``record_measured_hashes`` seeds them with an explicit
-``"refactored-after-row"`` sentinel (never equal to a real hash) so they
-rank in the changed tier until a fresh row lands.
 """
 
 from __future__ import annotations
@@ -54,14 +48,6 @@ from typing import Any
 _PKG = "airflow_kafka_spark_spark"
 
 HASHES_PATH = Path(__file__).resolve().parents[2] / "MEASURED_HASHES.json"
-
-# Entries whose implementation was rewritten after their latest driver row
-# but before hash recording existed (round-4 refactors over r3 rows).
-# Their recorded hash is seeded with this sentinel so they sort into the
-# changed-since-measured tier. Remove an entry from this set once a fresh
-# driver row (round >= 5) has been recorded for it.
-_BOOTSTRAP_SENTINEL = "refactored-after-row"
-_BOOTSTRAP_STALE = {"containment_pairs", "range_join_clicks", "range_frame"}
 
 _HASH_CACHE: dict[str, str] = {}
 _MEASURED_CACHE: dict[str, Any] | None = None
@@ -251,8 +237,6 @@ def record_measured_hashes(path: Path = HASHES_PATH) -> dict[str, Any]:
             out[name] = {"round": rnd, "hash": entry_source_hash(name)}
         elif isinstance(prev, dict) and prev.get("round") == rnd:
             out[name] = prev
-        elif name in _BOOTSTRAP_STALE:
-            out[name] = {"round": rnd, "hash": _BOOTSTRAP_SENTINEL}
         else:
             out[name] = {"round": rnd, "hash": None}
     path.write_text(json.dumps(out, indent=1, sort_keys=True) + "\n")

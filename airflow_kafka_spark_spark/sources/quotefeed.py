@@ -31,6 +31,8 @@ from pyspark.sql.datasource import (
     SimpleDataSourceStreamReader,
 )
 
+from ..ingest import history_message
+
 SCHEMA = "symbol string, current_price double, message string"
 _FIRST_DAY = datetime.date(2024, 1, 1)
 
@@ -60,11 +62,7 @@ def _synthetic_history(symbol: str, n_bars: int) -> dict:
             }
         )
         price = c
-    return {
-        "symbol": symbol,
-        "current_price": bars[-1]["close"],
-        "historical_data": bars,
-    }
+    return history_message(symbol, bars[-1]["close"], bars)
 
 
 def _row(msg: dict) -> tuple:

@@ -16,8 +16,8 @@ restart. The EMA continuation is *bit-exact* with the batch kernel: a
 recurrence's value at a batch boundary fully captures its NaN-free
 history, so resuming ``functions.ema.macd_recurrence_state`` from the
 stored values reproduces the uninterrupted series (unit-tested in
-tests/test_stateful.py). Both state APIs and the batch replay that
-certifies them run one helper, :func:`_macd_batch`.
+tests/test_stateful.py). The streaming operator and the batch replay
+that certifies it run one helper, :func:`_macd_batch`.
 """
 
 from __future__ import annotations
@@ -159,55 +159,6 @@ def running_macd(deltas: DataFrame) -> DataFrame:
     )
 
 
-from pyspark.sql.streaming.stateful_processor import (  # noqa: E402
-    StatefulProcessor,
-    StatefulProcessorHandle,
-)
-
-
-class RunningMacdProcessor(StatefulProcessor):
-    """StatefulProcessor for transformWithStateInPandas (Spark 4's
-    successor to applyInPandasWithState): same delta-feed MACD
-    continuation, same bit-exactness contract, expressed against the
-    new typed-state API (named ValueState handles instead of one
-    positional state tuple; per-state TTL and timers become available
-    for free when needed).
-
-    Runs the same :func:`_macd_batch` as :func:`running_macd`, so both
-    surfaces share one state carry, one contract guard and one output
-    frame (tests pin the equality).
-    """
-
-    def init(self, handle: StatefulProcessorHandle) -> None:
-        self._state = handle.getValueState("macd", STATE_SCHEMA)
-
-    def handleInputRows(self, key, rows, timerValues):
-        stored = self._state.get() if self._state.exists() else None
-        frame, stored = _macd_batch(key, rows, stored)
-        self._state.update(stored)
-        yield frame
-
-    def close(self) -> None:
-        pass
-
-
-def running_macd_tws(deltas: DataFrame) -> DataFrame:
-    """``running_macd`` on the transformWithStateInPandas API (Spark 4).
-
-    Identical semantics and bit-identical output to
-    :func:`running_macd`; requires the RocksDB state store provider
-    (``spark.sql.streaming.stateStore.providerClass`` →
-    ``...state.RocksDBStateStoreProvider``) — transformWithState does
-    not run on the default HDFS-backed provider.
-    """
-    return deltas.groupBy("symbol").transformWithStateInPandas(
-        statefulProcessor=RunningMacdProcessor(),
-        outputStructType=OUTPUT_SCHEMA,
-        outputMode="Update",
-        timeMode="None",
-    )
-
-
 def replay_macd_in_batches(
     df: DataFrame,
     key_cols: list[str],
@@ -223,7 +174,7 @@ def replay_macd_in_batches(
 
     Per key, the ordered series is split into ``n_batches`` contiguous
     chunks and folded chunk-by-chunk through :func:`_macd_batch`, the
-    same call both streaming processors make per micro-batch, with the
+    same call :func:`running_macd` makes per micro-batch, with the
     previous chunk's stored state row. On a NaN-free series (the
     delta-feed contract; a NaN run ending a chunk forgets its pending
     gap decay at the boundary — see ``functions.ema``) the

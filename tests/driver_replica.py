@@ -18,23 +18,7 @@ from __future__ import annotations
 import json
 import sys
 import time
-import traceback
-
-TS_TYPES = ("TIMESTAMP_NTZ", "TIMESTAMP_LTZ")
-
-
-def err_tail(n: int = 3) -> str:
-    """Last non-blank traceback lines. `splitlines()[-1]` alone recorded
-    an EMPTY error for the one sf0.1 pagerank failure ever observed
-    (py4j tracebacks can end with a blank line), leaving nothing to
-    diagnose — keep the last few real lines instead."""
-    lines = [l for l in traceback.format_exc().splitlines() if l.strip()]
-    return " | ".join(lines[-n:])
-
-# rows-only canonicalization cap: big enough to exercise every dtype the
-# driver's pandas sort will see, small enough to bound driver transfer
-# (rows-only entries currently emit 5-16 rows; this guards future ones)
-CANON_CAP = 10_000
+from pathlib import Path
 
 
 def engine_tree_stamp() -> str:
@@ -44,7 +28,6 @@ def engine_tree_stamp() -> str:
     engine commits is *provably* stale (r5 shipped one 2 engine commits
     behind HEAD; tests/test_preflight_fresh.py closes that hole)."""
     import subprocess
-    from pathlib import Path
 
     repo = Path(__file__).resolve().parents[1]
     try:
@@ -74,9 +57,9 @@ def main() -> int:
     )
     spark.sparkContext.setLogLevel("ERROR")
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
     import __spark_entry__ as entrymod
-    from tests.oracle_utils import duck_connection, compare
+    from tests.oracle_utils import TS_TYPES, check_entry, duck_connection
 
     # the driver smoke-checks entry() on its own session too
     spark.conf.set("spark.sql.timestampType", "TIMESTAMP_NTZ")
@@ -100,40 +83,7 @@ def main() -> int:
     results: dict[str, dict] = {}
     t_all = time.time()
     for name, fn in qs.items():
-        t0 = time.time()
-        entry: dict = {"ok": True}
-        for ts_type in TS_TYPES:
-            spark.conf.set("spark.sql.timestampType", ts_type)
-            tag = ts_type.rsplit("_", 1)[-1].lower()
-            try:
-                df = fn(spark, sf_dir)
-                if name in oracles:
-                    oracle_pdf = con.execute(oracles[name]).df()
-                    problems = compare(df, oracle_pdf)
-                    if problems:
-                        entry["ok"] = False
-                        entry[f"problems_{tag}"] = problems[:3]
-                else:
-                    # rows-only entries: ONE bounded execution per ts
-                    # type — limit().toPandas() keeps the real Arrow
-                    # dtype path (the driver canonicalizes via pandas;
-                    # an array-typed column crashes its sort_values
-                    # with "unhashable type: 'list'" — approx_aggs,
-                    # CORRECTNESS_r03) while capping driver transfer
-                    # for pair-generating outputs.
-                    pdf = df.limit(CANON_CAP).toPandas()
-                    entry["rows_only"] = len(pdf)
-                    try:
-                        pdf.sort_values(list(pdf.columns)).reset_index(
-                            drop=True
-                        )
-                    except Exception:
-                        entry["ok"] = False
-                        entry["err_canon"] = err_tail()
-            except Exception:
-                entry["ok"] = False
-                entry[f"err_{tag}"] = err_tail()
-        entry["sec"] = round(time.time() - t0, 2)
+        entry = check_entry(spark, con, fn, sf_dir, oracles.get(name))
         results[name] = entry
         status = "ok" if entry["ok"] else "FAIL"
         print(f"{status:4s} {entry['sec']:6.2f}s {name}", flush=True)

@@ -6,11 +6,23 @@ numeric deviation on mismatch to aid debugging."""
 from __future__ import annotations
 
 import math
+import time
+import traceback
 
 import duckdb
 import pandas as pd
 
 from airflow_kafka_spark_spark.sources.files import TABLES
+
+# Every entry runs under BOTH session shapes a harness might use: the
+# r02 range_join_clicks failure proved the real driver sets
+# spark.sql.timestampType=TIMESTAMP_NTZ, and the conf is runtime-settable.
+TS_TYPES = ("TIMESTAMP_NTZ", "TIMESTAMP_LTZ")
+
+# rows-only canonicalization cap: big enough to exercise every dtype the
+# driver's pandas sort will see, small enough to bound driver transfer
+# (rows-only entries currently emit 5-16 rows; this guards future ones)
+CANON_CAP = 10_000
 
 
 def duck_connection(sf_dir: str) -> duckdb.DuckDBPyConnection:
@@ -77,3 +89,56 @@ def compare(spark_df, oracle_pdf: pd.DataFrame) -> list[str]:
                     f"spark={av_n.iloc[bad].tolist()} oracle={bv_n.iloc[bad].tolist()}"
                 )
     return problems
+
+
+def err_tail(n: int = 3) -> str:
+    """Last non-blank traceback lines. `splitlines()[-1]` alone recorded
+    an EMPTY error for the one sf0.1 pagerank failure ever observed
+    (py4j tracebacks can end with a blank line), leaving nothing to
+    diagnose — keep the last few real lines instead."""
+    lines = [l for l in traceback.format_exc().splitlines() if l.strip()]
+    return " | ".join(lines[-n:])
+
+
+def check_entry(spark, con, fn, sf_dir: str, oracle: str | None) -> dict:
+    """Run one catalog entry under each of ``TS_TYPES`` and check it the
+    way the driver does: against the DuckDB ``oracle`` SQL when there is
+    one, else through the driver's pandas canonicalization.
+
+    Returns ``{"ok": bool, "sec": float}`` plus detail keys tagged with
+    the timestamp type ``<ts>`` (``ntz`` or ``ltz``): ``problems_<ts>``
+    for an oracle mismatch, ``err_<ts>`` for a query error,
+    ``err_canon_<ts>`` for a pandas canonicalization failure, and
+    ``rows_only_<ts>`` (the row count) for an entry without an
+    oracle."""
+    t0 = time.time()
+    entry: dict = {"ok": True}
+    for ts_type in TS_TYPES:
+        spark.conf.set("spark.sql.timestampType", ts_type)
+        tag = ts_type.rsplit("_", 1)[-1].lower()
+        try:
+            df = fn(spark, sf_dir)
+            if oracle is not None:
+                problems = compare(df, con.execute(oracle).df())
+                if problems:
+                    entry["ok"] = False
+                    entry[f"problems_{tag}"] = problems[:3]
+            else:
+                # rows-only entries: ONE bounded execution per ts type —
+                # limit().toPandas() keeps the real Arrow dtype path (the
+                # driver canonicalizes via pandas; an array-typed column
+                # crashes its sort_values with "unhashable type: 'list'"
+                # — approx_aggs, CORRECTNESS_r03) while capping driver
+                # transfer for pair-generating outputs.
+                pdf = df.limit(CANON_CAP).toPandas()
+                entry[f"rows_only_{tag}"] = len(pdf)
+                try:
+                    pdf.sort_values(list(pdf.columns)).reset_index(drop=True)
+                except Exception:
+                    entry["ok"] = False
+                    entry[f"err_canon_{tag}"] = err_tail()
+        except Exception:
+            entry["ok"] = False
+            entry[f"err_{tag}"] = err_tail()
+    entry["sec"] = round(time.time() - t0, 2)
+    return entry

@@ -214,7 +214,7 @@ def test_ann_batch_matches_point_lookups(spark):
 
     import pytest as _pytest
 
-    # default validate=True matches the point path's error contract
+    # the batch path shares the point path's error contract
     with _pytest.raises(ValueError, match="missing query ids"):
         ann_topk_ivf_batch(emb, [0, 10**9], k=5, index=index)
 

@@ -163,8 +163,7 @@ def test_measured_hashes_recording_round_trip(tmp_path):
 
 def test_changed_entries_outrank_unchanged_greens():
     """Tier semantics: every clean entry whose recorded hash mismatches
-    the current source (incl. the r4-refactor bootstrap sentinels) sorts
-    before every unchanged/unknown green; committed MEASURED_HASHES.json
+    the current source sorts before every unchanged/unknown green; committed MEASURED_HASHES.json
     agrees with the committed CORRECTNESS artifacts."""
     from airflow_kafka_spark_spark.plans import staleness
 

@@ -14,7 +14,6 @@ import pytest
 
 from airflow_kafka_spark_spark.functions.ema import ema_recurrence, macd_columns
 from airflow_kafka_spark_spark.streaming.stateful import (
-    RunningMacdProcessor,
     _macd_batch,
     _update_macd,
     running_macd,
@@ -187,161 +186,32 @@ def test_state_recovers_across_query_restart(spark):
     assert by_date["2024-01-30"]["n_rows"] == 30
 
 
-def _has_protobuf() -> bool:
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-@pytest.mark.skipif(
-    not _has_protobuf(),
-    reason="transformWithStateInPandas state-server protocol needs the "
-    "protobuf package, absent from this container (pip installs are "
-    "unavailable) — the processor body is covered by "
-    "test_state_surface_semantics_without_protocol below",
-)
-def test_transform_with_state_matches_batch_kernel(spark):
-    """transformWithStateInPandas (Spark 4 API, RocksDB provider): two
-    micro-batches through running_macd_tws == the batch kernel run,
-    bit for bit — same contract the applyInPandasWithState path pins."""
-    from airflow_kafka_spark_spark.streaming.stateful import running_macd_tws
-
-    rng = np.random.default_rng(23)
-    closes = {s: rng.uniform(10, 100, size=30) for s in ("AAA", "BBB")}
-
-    workdir = tempfile.mkdtemp()
-    src = os.path.join(workdir, "in")
-    os.makedirs(src)
-    for i, lo, hi in ((0, 0, 15), (1, 15, 30)):
-        rows = [
-            (s, f"2024-01-{d + 1:02d}", float(closes[s][d]))
-            for s in closes
-            for d in range(lo, hi)
-        ]
-        tmp = os.path.join(workdir, f"tmp{i}")
-        spark.createDataFrame(
-            rows, "symbol string, date_str string, close double"
-        ).coalesce(1).write.parquet(tmp)
-        part = next(
-            f for f in os.listdir(tmp)
-            if f.startswith("part-") and f.endswith(".parquet")
-        )
-        dest = os.path.join(src, f"batch{i}.parquet")
-        os.rename(os.path.join(tmp, part), dest)
-        t = time.time() - 100 + i * 10
-        os.utime(dest, (t, t))
-
-    prev_provider = spark.conf.get(
-        "spark.sql.streaming.stateStore.providerClass", None
-    )
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        stream = (
-            spark.readStream.schema("symbol string, date_str string, close double")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
-        q = (
-            running_macd_tws(stream)
-            .writeStream.format("memory")
-            .queryName("tws_macd")
-            .outputMode("update")
-            .option("checkpointLocation", os.path.join(workdir, "ckpt"))
-            .start()
-        )
-        q.processAllAvailable()
-        q.stop()
-    finally:
-        if prev_provider is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set(
-                "spark.sql.streaming.stateStore.providerClass", prev_provider
-            )
-
-    got = spark.sql("select * from tws_macd").toPandas()
-    for s, series in closes.items():
-        sub = got[got.symbol == s].sort_values("date_str")
-        assert len(sub) == 30
-        line, sig, hist = macd_columns(series)
-        assert np.array_equal(sub["ema12"].to_numpy(), ema_recurrence(series, 12))
-        assert np.array_equal(sub["macd_signal"].to_numpy(), sig)
-        assert np.array_equal(sub["macd_histogram"].to_numpy(), hist)
-        assert sub["n_rows"].iloc[-1] == 30
-
-
-class FakeValueState:
-    """One in-memory state cell: transformWithState's ValueState."""
+class FakeGroupState:
+    """applyInPandasWithState's GroupState (properties, not methods):
+    one in-memory state cell."""
 
     def __init__(self):
         self._v = None
 
-    def exists(self):
-        return self._v is not None
-
-    def get(self):
-        return self._v
+    exists = property(lambda self: self._v is not None)
+    get = property(lambda self: self._v)
 
     def update(self, v):
         self._v = v
 
 
-class FakeGroupState:
-    """applyInPandasWithState's GroupState (properties, not methods)
-    over the same cell."""
-
-    def __init__(self, cell: FakeValueState):
-        self._cell = cell
-
-    exists = property(lambda self: self._cell.exists())
-    get = property(lambda self: self._cell.get())
-
-    def update(self, v):
-        self._cell.update(v)
-
-
-class FakeHandle:
-    def __init__(self, cell: FakeValueState):
-        self._cell = cell
-
-    def getValueState(self, name, schema, ttlDurationMs=None):
-        return self._cell
-
-
 def _pandas_with_state():
-    state = FakeGroupState(FakeValueState())
+    """The state surface driven without Spark: state load, continuation,
+    guard, state save and output frame."""
+    state = FakeGroupState()
     return lambda key, pdf: list(_update_macd(key, iter([pdf]), state))
 
 
-def _transform_with_state():
-    proc = RunningMacdProcessor()
-    proc.init(FakeHandle(FakeValueState()))
-    return lambda key, pdf: list(proc.handleInputRows(key, iter([pdf]), None))
-
-
-# Both state surfaces, driven without Spark (transformWithState's wire
-# protocol needs the optional protobuf package): state load,
-# continuation, guard, state save and output frame.
-STATE_SURFACES = pytest.mark.parametrize(
-    "surface",
-    [_pandas_with_state, _transform_with_state],
-    ids=["applyInPandasWithState", "transformWithState"],
-)
-
-
-@STATE_SURFACES
-def test_state_surface_rejects_numbars_gt_1(surface):
+def test_state_surface_rejects_numbars_gt_1():
     """The delta-feed contract guard: when snapshot_n rides along and the
     cumulative bar count diverges from it (the numBars>1 failure mode —
     earlier bars never entered state), the kernel raises instead of
-    silently continuing the MACD from the wrong seed — on BOTH surfaces
-    (r12 review class: the guard once lived only in _update_macd)."""
+    silently continuing the MACD from the wrong seed."""
     # numBars=30 shape: first message's snapshot already carries 30 bars
     # but only the tail bar enters the kernel -> 1 != 30 -> error
     bad = pd.DataFrame(
@@ -349,24 +219,23 @@ def test_state_surface_rejects_numbars_gt_1(surface):
          "close": [42.0], "snapshot_n": [30]}
     )
     with pytest.raises(ValueError, match="numBars=1"):
-        surface()(("AAA",), bad)
+        _pandas_with_state()(("AAA",), bad)
 
     # numBars=1 shape: snapshot length == cumulative count -> clean
-    out = surface()(("AAA",), bad.assign(snapshot_n=[1]))
+    out = _pandas_with_state()(("AAA",), bad.assign(snapshot_n=[1]))
     assert out[0]["n_rows"].iloc[-1] == 1
 
     # no snapshot_n column (direct delta feeds) -> guard is inert
-    out = surface()(("AAA",), bad.drop(columns=["snapshot_n"]))
+    out = _pandas_with_state()(("AAA",), bad.drop(columns=["snapshot_n"]))
     assert out[0]["close"].iloc[0] == 42.0
 
 
-@STATE_SURFACES
-def test_state_surface_semantics_without_protocol(surface):
-    """Two chunks through one surface == one batch kernel run, bit for
-    bit, with the state carried by the fake store."""
+def test_state_surface_semantics_without_protocol():
+    """Two chunks through the state surface == one batch kernel run, bit
+    for bit, with the state carried by the fake store."""
     rng = np.random.default_rng(5)
     series = rng.uniform(10, 100, size=40)
-    step = surface()
+    step = _pandas_with_state()
     outs = []
     for lo, hi in ((0, 25), (25, 40)):
         pdf = pd.DataFrame(
