@@ -5,14 +5,15 @@ capabilities of the reference stock-analytics pipeline
 Layout (SURVEY.md §7):
     session.py     SparkSession builder with the reference's stability confs
     schemas.py     explicit StructTypes for every wire/data format
-    sources/       Kafka + file sources, synthetic fixture builders
+    sources/       Kafka + file sources, synthetic fixture builders, lake
+                   sinks and the one crash-safe table-rewrite protocol
     operators/     parse, dedup-latest, indicators (W1-W10), signals (C1-C2),
-                   serialize, relational helpers
-    functions/     reusable column-level building blocks (windows, ema, text,
-                   vectors)
-    streaming/     Structured Streaming shell (trigger, checkpoint, shutdown)
+                   serialize, relational helpers, temporal, spatial
+    functions/     reusable column-level building blocks (windows, ema)
+    streaming/     Structured Streaming shell (trigger, checkpoint, shutdown),
+                   stateful delta feed, continuous rollup, drift monitor
     ext/           LLM-data-pipeline extensions: dedup, similarity, textstats,
-                   multimodal
+                   multimodal, graph, drift, fuzzy, outliers
     plans/         the query catalog consumed by __spark_entry__ (queries +
                    DuckDB oracle SQL)
 

@@ -39,23 +39,6 @@ STOCK_HISTORY_SCHEMA = T.StructType(
 # ---------------------------------------------------------------------------
 SNAPSHOT_SCHEMA = T.MapType(T.StringType(), T.StringType())
 
-# ---------------------------------------------------------------------------
-# quotes — the exploded flat series (reference spark/stock_analysis.py:63-84)
-# ---------------------------------------------------------------------------
-QUOTES_SCHEMA = T.StructType(
-    [
-        T.StructField("symbol", T.StringType()),
-        T.StructField("current_price", T.DoubleType()),
-        T.StructField("time", T.StringType()),
-        T.StructField("open", T.DoubleType()),
-        T.StructField("high", T.DoubleType()),
-        T.StructField("low", T.DoubleType()),
-        T.StructField("close", T.DoubleType()),
-        T.StructField("volume", T.DoubleType()),
-        T.StructField("date", T.DateType()),  # engine-typed (ref keeps str)
-    ]
-)
-
 # indicator columns appended by operators.indicators (W1-W10)
 INDICATOR_FIELDS = [
     T.StructField("ma5", T.DoubleType()),

@@ -87,16 +87,7 @@ def build_session(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # Spark 4 defaults ANSI on; the reference ran Spark 3.5 (ANSI off)
-        # and the DuckDB oracle yields NULL (not error) on e.g. div-by-zero.
-        .config("spark.sql.ansi.enabled", "false")
-        # the driver fixtures store events.ts as parquet TIMESTAMP(NANOS),
-        # which Spark cannot read natively; read as int64 nanos and convert
-        # in sources.files.load_table (exact integer division to micros —
-        # matching DuckDB's ns→µs truncation).
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         # reference stability knobs (spark/stock_analysis.py:13-15,18)
         .config("spark.network.timeout", "800s")
         .config("spark.executor.heartbeatInterval", "120s")
@@ -104,7 +95,7 @@ def build_session(
         .config("spark.sql.streaming.forceDeleteTempCheckpointLocation", "true")
         .config("spark.ui.enabled", "false")
     )
-    for k, v in (extra_conf or {}).items():
+    for k, v in {**_RESULT_CRITICAL_CONFS, **(extra_conf or {})}.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -7,39 +7,49 @@ scan), bucketing gives shuffle-free joins/aggregations on the bucket key
 for readers that join on it. Neither appears in the reference (it writes
 only to Kafka); both are table-stakes for a parquet-lake deployment of
 the same pipeline.
+
+Table rewrites — compaction, upsert and the continuous rollups in
+``streaming.rollup`` — share ONE crash-safe protocol, owned here:
+:func:`heal_table` then :func:`rewrite_table`. The next table version is
+written to ``<path>__staging`` and swapped in through
+``<path>__backup``. The swap is two renames, not one atomic op: a crash
+between them leaves the table at ``<path>__backup`` (complete, never
+half-written), and the next :func:`heal_table` on that path — from any
+writer — restores it, then clears stale staging/backup dirs. One name
+pair per path is what makes that true: a writer that looked only for
+its own backup name would start from an empty table and then delete
+another writer's backup as stale.
+
+Contract: local-filesystem tables (os-level renames) and one writer per
+table path at a time. Object-store lakes (s3a/hdfs) should use a table
+format (Iceberg/Delta) whose commit protocol does this transactionally.
 """
 
 from __future__ import annotations
 
+import os
+import shutil
+from typing import Callable
+
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+
+from ..functions.windows import last_per_key
 
 
-def write_partitioned(
-    df: DataFrame,
-    path: str,
-    partition_cols: list[str],
-    mode: str = "overwrite",
-    max_records_per_file: int | None = None,
-) -> None:
+def write_partitioned(df: DataFrame, path: str, partition_cols: list[str]) -> None:
     """Directory-partitioned parquet: one directory per distinct value
     combination of ``partition_cols``. Keep partition columns
     low-cardinality (date, type, tenant) — a high-cardinality partition
     key produces millions of small files and kills the driver's listing.
-    ``max_records_per_file`` bounds file size without an extra
-    repartition job."""
-    writer = df.write.mode(mode)
-    if max_records_per_file:
-        writer = writer.option("maxRecordsPerFile", max_records_per_file)
-    writer.partitionBy(*partition_cols).parquet(path)
+    Filters on partition columns prune at planning time when the table
+    is read back with ``spark.read.parquet`` (check `PartitionFilters`
+    in .explain)."""
+    df.write.mode("overwrite").partitionBy(*partition_cols).parquet(path)
 
 
 def write_bucketed_table(
-    df: DataFrame,
-    table_name: str,
-    bucket_cols: list[str],
-    n_buckets: int,
-    sort_cols: list[str] | None = None,
-    mode: str = "overwrite",
+    df: DataFrame, table_name: str, bucket_cols: list[str], n_buckets: int
 ) -> None:
     """Hive-bucketed managed table: rows hash-distributed into
     ``n_buckets`` files per partition by ``bucket_cols``. Two tables
@@ -47,51 +57,29 @@ def write_bucketed_table(
     output partitioning); per-key pipelines (our indicator stack) read
     pre-clustered data. Requires saveAsTable (bucket metadata lives in
     the catalog, not the directory layout)."""
-    writer = df.write.mode(mode).bucketBy(n_buckets, *bucket_cols)
-    if sort_cols:
-        writer = writer.sortBy(*sort_cols)
-    writer.saveAsTable(table_name)
-
-
-def read_partitioned(spark: SparkSession, path: str) -> DataFrame:
-    """Read a partitioned layout back; partition columns come from
-    directory names and filters on them prune at planning time
-    (check `PartitionFilters` in .explain)."""
-    return spark.read.parquet(path)
+    df.write.mode("overwrite").bucketBy(n_buckets, *bucket_cols).saveAsTable(
+        table_name
+    )
 
 
 def compact_partitioned(
-    spark: SparkSession,
-    path: str,
-    partition_cols: list[str],
-    target_records_per_file: int = 1_000_000,
+    spark: SparkSession, path: str, partition_cols: list[str]
 ) -> None:
     """Small-file compaction — the lake-maintenance chore every
     streaming/micro-batch writer creates work for. Each micro-batch
     appends a few small files per partition; after N batches a scan pays
     N× task-scheduling and footer-read overhead. Rewrite each partition
-    into ~target-sized files.
-
-    Local-filesystem tables only (os-level renames): writes to a staging
-    directory, then swaps. The swap is two renames, not one atomic op —
-    a crash in the instant between them leaves the table at
-    ``<path>__precompact`` (complete and recoverable, never
-    half-written); stale staging/backup dirs from a crashed run are
-    cleaned up or restored on the next invocation. Object-store lakes
-    (s3a/hdfs) should use a table format (Iceberg/Delta) whose commit
-    protocol does this transactionally.
-    """
-    staging = path.rstrip("/") + "__compacting"
-    _recover_and_clean(path, staging, path.rstrip("/") + "__precompact")
-    df = spark.read.parquet(path)
-    (
-        df.repartition(*partition_cols)
+    into files of at most a million records, under the module's
+    rewrite protocol."""
+    heal_table(path)
+    compacted = (
+        spark.read.parquet(path)
+        .repartition(*partition_cols)
         .write.mode("overwrite")
-        .option("maxRecordsPerFile", target_records_per_file)
+        .option("maxRecordsPerFile", 1_000_000)
         .partitionBy(*partition_cols)
-        .parquet(staging)
     )
-    _swap(path, staging, path.rstrip("/") + "__precompact")
+    rewrite_table(path, compacted.parquet)
 
 
 def upsert_partitioned(
@@ -104,60 +92,51 @@ def upsert_partitioned(
 ) -> None:
     """Merge/upsert for plain-parquet tables: union current + updates,
     keep the latest row per key (``order_cols`` desc — same
-    latest-per-key primitive as the streaming dedup), rewrite
-    atomically. This is the full-rewrite strategy; with a table format
-    (Iceberg/Delta) the same latest-wins logic would ride MERGE INTO and
-    rewrite only touched files. Partition-wise it only needs to rewrite
-    partitions present in ``updates`` — kept whole-table here for
-    plain-parquet simplicity. Same local-filesystem swap caveats as
-    :func:`compact_partitioned`."""
-    import os
-
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
-    staging = path.rstrip("/") + "__upserting"
-    _recover_and_clean(path, staging, path.rstrip("/") + "__preupsert")
-    w = Window.partitionBy(*key_cols).orderBy(
-        *[F.col(c).desc() for c in order_cols]
-    )
-    if not os.path.exists(path):
+    latest-per-key primitive as the streaming dedup), rewrite under the
+    module's rewrite protocol. This is the full-rewrite strategy; with a
+    table format (Iceberg/Delta) the same latest-wins logic would ride
+    MERGE INTO and rewrite only touched files. Partition-wise it only
+    needs to rewrite partitions present in ``updates`` — kept
+    whole-table here for plain-parquet simplicity."""
+    heal_table(path)
+    if os.path.exists(path):
+        current = spark.read.parquet(path)
+        merged = current.unionByName(updates.select(*current.columns))
+    else:
         # bootstrap: the first-ever upsert initializes the table (same
         # first-write branch the rollup merge has) — updates still
         # dedup to latest-per-key so duplicate keys in one batch
         # resolve identically to the steady-state path
         merged = updates
-    else:
-        current = spark.read.parquet(path)
-        merged = current.unionByName(updates.select(*current.columns))
-    latest = (
-        merged.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
+    latest = last_per_key(merged, key_cols, [F.col(c) for c in order_cols])
+    rewrite_table(
+        path, latest.write.mode("overwrite").partitionBy(*partition_cols).parquet
     )
-    latest.write.mode("overwrite").partitionBy(*partition_cols).parquet(staging)
-    if os.path.exists(path):
-        _swap(path, staging, path.rstrip("/") + "__preupsert")
-    else:
-        os.rename(staging, path)
 
 
-def _recover_and_clean(path: str, staging: str, backup: str) -> None:
-    """Heal a crashed prior run: restore the backup if the table vanished
-    mid-swap, then clear stale staging/backup dirs."""
-    import os
-    import shutil
+def _staging_and_backup(path: str) -> tuple[str, str]:
+    base = path.rstrip("/")
+    return base + "__staging", base + "__backup"
 
+
+def heal_table(path: str) -> None:
+    """Heal a crashed prior rewrite of ``path``: restore the backup if
+    the table vanished mid-swap, then clear stale staging/backup dirs.
+    Call it before reading the table (or anything stored inside it)."""
+    staging, backup = _staging_and_backup(path)
     if not os.path.exists(path) and os.path.exists(backup):
         os.rename(backup, path)
     shutil.rmtree(staging, ignore_errors=True)
     shutil.rmtree(backup, ignore_errors=True)
 
 
-def _swap(path: str, staging: str, backup: str) -> None:
-    import os
-    import shutil
-
-    os.rename(path, backup)
+def rewrite_table(path: str, write: Callable[[str], None]) -> None:
+    """Commit the next version of the table at ``path``: ``write`` fills
+    the staging dir it is given, which then replaces the table (or
+    becomes it, when the table is new). Call :func:`heal_table` first."""
+    staging, backup = _staging_and_backup(path)
+    write(staging)
+    if os.path.exists(path):
+        os.rename(path, backup)
     os.rename(staging, path)
-    shutil.rmtree(backup)
+    shutil.rmtree(backup, ignore_errors=True)

@@ -34,7 +34,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from ..operators.relational import merge_rollups, partial_rollup
-from ..sources.sinks import _recover_and_clean, _swap
+from ..sources.sinks import heal_table, rewrite_table
 
 _META = "_rollup_meta.json"
 
@@ -268,6 +268,56 @@ def _apply_offset_fence(
     return fenced, merged
 
 
+def _fold_batch(
+    rollup_path: str,
+    batch_df: DataFrame,
+    batch_id: int,
+    incarnation: str | None,
+    offset_cols: tuple[str, str] | None,
+    merge: Callable[[DataFrame, DataFrame | None], DataFrame],
+) -> bool:
+    """The fold both rollups share: fence the batch, then rewrite the
+    table as ``merge(batch, stored)`` (``stored`` is None for a new
+    table) plus its meta sidecar, under ``sources.sinks``' rewrite
+    protocol. The sidecar lives INSIDE the table directory, so it swaps
+    atomically with the data."""
+    # heal a crashed prior swap BEFORE consulting the meta fence — a
+    # mid-swap crash leaves the table only in the backup dir, and reading
+    # the fence first would silently restart the rollup from empty
+    heal_table(rollup_path)
+    meta = _load_meta(os.path.join(rollup_path, _META))
+    if offset_cols is None and (meta or {}).get("offsets"):
+        raise ValueError(
+            f"rollup at {rollup_path} carries an offset fence "
+            "('offsets' in the meta sidecar) but offset_cols was not "
+            "passed: folding without the fence leaves the stored marks "
+            "stale, so re-enabling offset_cols later would double-fold "
+            "a replay of these events. Pass offset_cols, or use a "
+            "fresh rollup path to deliberately drop the fence."
+        )
+    if _replayed(meta, batch_id, incarnation):
+        return False
+    offsets = None
+    if offset_cols is not None:
+        batch_df, offsets = _apply_offset_fence(batch_df, meta, offset_cols)
+        if batch_df is None:
+            return False
+    stored = (
+        batch_df.sparkSession.read.parquet(rollup_path)
+        if os.path.exists(rollup_path)
+        else None
+    )
+    merged = merge(batch_df, stored)
+
+    def write(staging: str) -> None:
+        merged.write.mode("overwrite").parquet(staging)
+        with open(os.path.join(staging, _META), "w") as f:
+            json.dump(_meta_payload(meta, batch_id, incarnation, offsets), f)
+
+    rewrite_table(rollup_path, write)
+    return True
+
+
 def merge_batch_into_rollup(
     rollup_path: str,
     batch_df: DataFrame,
@@ -311,54 +361,20 @@ def merge_batch_into_rollup(
     — the fence would claim coverage it doesn't have. Dropping the
     fence deliberately means starting a fresh rollup path.
 
-    The merged table is written to a staging dir and swapped atomically
-    with its meta sidecar (same crash-recovery protocol as
-    ``sources.sinks.upsert_partitioned``), so a crash between write and
-    swap never leaves a half-merged table.
+    Crash safety is the rewrite protocol of ``sources.sinks``.
     """
     keys = keys if keys is not None else ["event_type"]
-    spark = batch_df.sparkSession
-    staging = rollup_path.rstrip("/") + "__staging"
-    backup = rollup_path.rstrip("/") + "__backup"
-    # heal a crashed prior swap BEFORE consulting the meta fence — a
-    # mid-swap crash leaves the table only in the backup dir, and reading
-    # the fence first would silently restart the rollup from empty
-    _recover_and_clean(rollup_path, staging, backup)
-    meta = _load_meta(os.path.join(rollup_path, _META))
-    if offset_cols is None and (meta or {}).get("offsets"):
-        raise ValueError(
-            f"rollup at {rollup_path} carries an offset fence "
-            "('offsets' in the meta sidecar) but offset_cols was not "
-            "passed: folding without the fence leaves the stored marks "
-            "stale, so re-enabling offset_cols later would double-fold "
-            "a replay of these events. Pass offset_cols, or use a "
-            "fresh rollup path to deliberately drop the fence."
-        )
-    if _replayed(meta, batch_id, incarnation):
-        return False
-    offsets = None
-    if offset_cols is not None:
-        batch_df, offsets = _apply_offset_fence(batch_df, meta, offset_cols)
-        if batch_df is None:
-            return False
 
-    delta = partial_rollup(batch_df, ts_col, grain, keys, value_col)
-    if os.path.exists(rollup_path):
-        merged = merge_rollups(spark.read.parquet(rollup_path), delta)
-    else:
-        merged = delta
-    # pin the widening decimal sum to its fixed point so the stored
-    # schema is identical from the first batch on (exact: cast only widens)
-    merged = merged.withColumn("_sum_v", F.col("_sum_v").cast("decimal(38,6)"))
+    def merge(batch: DataFrame, stored: DataFrame | None) -> DataFrame:
+        delta = partial_rollup(batch, ts_col, grain, keys, value_col)
+        merged = delta if stored is None else merge_rollups(stored, delta)
+        # pin the widening decimal sum to its fixed point so the stored
+        # schema is identical from the first batch on (exact: cast only widens)
+        return merged.withColumn("_sum_v", F.col("_sum_v").cast("decimal(38,6)"))
 
-    merged.write.mode("overwrite").parquet(staging)
-    with open(os.path.join(staging, _META), "w") as f:
-        json.dump(_meta_payload(meta, batch_id, incarnation, offsets), f)
-    if os.path.exists(rollup_path):
-        _swap(rollup_path, staging, backup)  # removes backup itself
-    else:
-        os.rename(staging, rollup_path)
-    return True
+    return _fold_batch(
+        rollup_path, batch_df, batch_id, incarnation, offset_cols, merge
+    )
 
 
 def start_rollup_pipeline(
@@ -436,38 +452,23 @@ def merge_batch_into_distinct_rollup(
     COUNT DISTINCT exists for).
     """
     keys = keys if keys is not None else ["event_type"]
-    spark = batch_df.sparkSession
-    staging = rollup_path.rstrip("/") + "__staging"
-    backup = rollup_path.rstrip("/") + "__backup"
-    _recover_and_clean(rollup_path, staging, backup)
-    meta = _load_meta(os.path.join(rollup_path, _META))
-    if _replayed(meta, batch_id, incarnation):
-        return False
 
-    bucket = F.date_trunc(grain, F.col(ts_col)).alias("bucket_ts")
-    delta = batch_df.groupBy(bucket, *keys).agg(
-        F.hll_sketch_agg(id_col, F.lit(lgk)).alias("sketch")
-    )
-    if os.path.exists(rollup_path):
-        stored = spark.read.parquet(rollup_path).select(
-            "bucket_ts", *keys, "sketch"
+    def merge(batch: DataFrame, stored: DataFrame | None) -> DataFrame:
+        bucket = F.date_trunc(grain, F.col(ts_col)).alias("bucket_ts")
+        merged = batch.groupBy(bucket, *keys).agg(
+            F.hll_sketch_agg(id_col, F.lit(lgk)).alias("sketch")
         )
-        merged = (
-            stored.unionByName(delta)
-            .groupBy("bucket_ts", *keys)
-            .agg(F.hll_union_agg("sketch").alias("sketch"))
+        if stored is not None:
+            merged = (
+                stored.select("bucket_ts", *keys, "sketch")
+                .unionByName(merged)
+                .groupBy("bucket_ts", *keys)
+                .agg(F.hll_union_agg("sketch").alias("sketch"))
+            )
+        return merged.withColumn(
+            "users_est", F.hll_sketch_estimate("sketch").cast("long")
         )
-    else:
-        merged = delta
-    merged = merged.withColumn(
-        "users_est", F.hll_sketch_estimate("sketch").cast("long")
-    )
 
-    merged.write.mode("overwrite").parquet(staging)
-    with open(os.path.join(staging, _META), "w") as f:
-        json.dump(_meta_payload(meta, batch_id, incarnation), f)
-    if os.path.exists(rollup_path):
-        _swap(rollup_path, staging, backup)  # removes backup itself
-    else:
-        os.rename(staging, rollup_path)
-    return True
+    # no sidecar of this rollup carries offsets, so the fold's
+    # offset-mode guard never fires here
+    return _fold_batch(rollup_path, batch_df, batch_id, incarnation, None, merge)

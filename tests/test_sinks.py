@@ -13,7 +13,6 @@ from pyspark.sql import functions as F
 
 from airflow_kafka_spark_spark.sources.files import load_table
 from airflow_kafka_spark_spark.sources.sinks import (
-    read_partitioned,
     write_bucketed_table,
     write_partitioned,
 )
@@ -35,7 +34,7 @@ def test_partition_pruning(spark):
         d.split("=")[1] for d in os.listdir(path) if d.startswith("event_type=")
     ) == sorted(r["event_type"] for r in ev.select("event_type").distinct().collect())
 
-    back = read_partitioned(spark, path).filter(F.col("event_type") == "click")
+    back = spark.read.parquet(path).filter(F.col("event_type") == "click")
     s = _explain(back)
     pf = s.split("PartitionFilters:")[1].splitlines()[0]
     assert "event_type" in pf  # pruning happens at the scan, not post-filter
@@ -172,8 +171,8 @@ def test_compact_partitioned(spark):
     assert n_files() < before_files / 4  # actually compacted
     after = spark.read.parquet(path)
     assert after.count() == before_rows
-    assert not os.path.exists(path + "__compacting")
-    assert not os.path.exists(path + "__precompact")
+    assert not os.path.exists(path + "__staging")
+    assert not os.path.exists(path + "__backup")
 
 
 def test_upsert_latest_wins(spark):
@@ -205,10 +204,36 @@ def test_compact_recovers_from_crashed_swap(spark):
     write_partitioned(ev, path, ["event_type"])
     n = spark.read.parquet(path).count()
     # simulate the crash window: table renamed to backup, nothing at path
-    os.rename(path, path + "__precompact")
+    os.rename(path, path + "__backup")
     compact_partitioned(spark, path, ["event_type"])
     assert spark.read.parquet(path).count() == n
-    assert not os.path.exists(path + "__precompact")
+    assert not os.path.exists(path + "__backup")
+
+
+def test_crashed_compaction_heals_for_the_next_writer(spark, tmp_path):
+    """Every table rewrite shares one staging/backup name pair, so a
+    compaction that crashed mid-swap is healed by whichever writer runs
+    next. With per-writer backup names, the upsert started a new table
+    from the updates alone and the next compaction deleted the real
+    table as a stale backup."""
+    from airflow_kafka_spark_spark.sources.sinks import (
+        compact_partitioned,
+        upsert_partitioned,
+    )
+
+    path = str(tmp_path / "tbl")
+    rows = [(i, 1, float(i), "ab"[i % 2]) for i in range(10)]
+    schema = "id long, version long, value double, part string"
+    write_partitioned(spark.createDataFrame(rows, schema), path, ["part"])
+    # the compaction's crash window: table renamed to backup, nothing at path
+    os.rename(path, path + "__backup")
+    updates = spark.createDataFrame([(3, 2, 33.0, "b")], schema)
+    upsert_partitioned(spark, path, updates, ["id"], ["version"], ["part"])
+    compact_partitioned(spark, path, ["part"])
+    got = {r["id"]: r["value"] for r in spark.read.parquet(path).collect()}
+    assert got == {**{i: float(i) for i in range(10)}, 3: 33.0}
+    assert not os.path.exists(path + "__staging")
+    assert not os.path.exists(path + "__backup")
 
 
 def test_orc_roundtrip_and_pushdown(spark, tmp_path):

@@ -504,6 +504,41 @@ def test_continuous_rollup_replay_fence(spark):
     assert spark.read.parquet(rollup).agg(F.sum("n_events")).first()[0] == 2 * once
 
 
+def test_continuous_rollup_heals_crashed_swap(spark, tmp_path):
+    """A fold that crashed mid-swap leaves the rollup only at its backup
+    name, maybe beside a half-written staging dir. The next fold restores
+    the table and its sidecar before consulting the replay fence, so a
+    replayed batch stays a no-op instead of restarting from empty."""
+    from pyspark.sql import functions as F
+
+    from airflow_kafka_spark_spark.streaming.rollup import merge_batch_into_rollup
+
+    ev = spark.createDataFrame(
+        [("2024-01-01 10:00:00", "view", 1.5), ("2024-01-01 11:00:00", "buy", 2.0)],
+        "ts string, event_type string, value double",
+    ).withColumn("ts", F.col("ts").cast("timestamp"))
+    rollup = str(tmp_path / "rollup")
+
+    def rows():
+        return sorted(tuple(r) for r in spark.read.parquet(rollup).collect())
+
+    assert merge_batch_into_rollup(rollup, ev, 0) is True
+    assert merge_batch_into_rollup(rollup, ev, 1) is True
+    before = rows()
+    os.rename(rollup, rollup + "__backup")
+    os.makedirs(rollup + "__staging")
+    with open(os.path.join(rollup + "__staging", "part-stale.parquet"), "w") as f:
+        f.write("half-written")
+
+    assert merge_batch_into_rollup(rollup, ev, 1) is False
+    assert rows() == before
+    assert not os.path.exists(rollup + "__backup")
+    assert not os.path.exists(rollup + "__staging")
+    assert merge_batch_into_rollup(rollup, ev, 2) is True
+    n_events = spark.read.parquet(rollup).agg(F.sum("n_events")).first()[0]
+    assert n_events == 3 * ev.count()
+
+
 def test_quotefeed_stream_full_topology(spark):
     """The reference's full topology (poll feed → parse/explode →
     indicators/signals → incremental sink), end-to-end without Kafka:
