@@ -71,27 +71,29 @@ def ema_recurrence_state(
     carries the full triple instead."""
     alpha = 2.0 / (span + 1.0)
     beta = 1.0 - alpha
-    out = np.empty(len(x), dtype=np.float64)
+    # Python floats, not numpy scalars: the same IEEE ops in the same
+    # order (so the same bits), at a fraction of the per-element cost;
+    # ``v != v`` is the NaN test
+    out = []
     if state is None:
         sval = np.nan
         have_state = False
         w = 1.0  # pending old-state weight (pandas old_wt), decayed per row
     else:
         sval, have_state, w = state
-    for i in range(len(x)):
-        v = x[i]
+    for v in np.asarray(x, dtype=np.float64).tolist():
         if not have_state:
-            if np.isnan(v):
-                out[i] = np.nan
+            if v != v:
+                out.append(np.nan)
                 continue
             sval = v
             have_state = True
             w = 1.0
-            out[i] = sval
+            out.append(sval)
             continue
         w *= beta  # one decay per row, observation or not (ignore_na=False)
-        if np.isnan(v):
-            out[i] = sval
+        if v != v:
+            out.append(sval)
             continue
         if w == beta:  # no gap since last observation (1.0 * beta == beta
             # exactly): the original op order, bit-identical to the oracle
@@ -99,7 +101,8 @@ def ema_recurrence_state(
         else:
             sval = (w * sval + alpha * v) / (w + alpha)
         w = 1.0
-        out[i] = sval
+        out.append(sval)
+    out = np.array(out, dtype=np.float64)
     return out, (sval, have_state, w)
 
 

@@ -6,8 +6,9 @@ equivalent ANSI SQL for the DuckDB oracle. Both sides are written for
 
 - double SUM/AVG goes through fixed-scale DECIMAL (exact in both engines,
   order-insensitive) and back to double — see operators.relational;
-- rolling means are left-associated lag-chains (same FP evaluation order
-  everywhere) — see functions.windows.rolling_mean;
+- rolling means are left-associated sums (same FP evaluation order
+  everywhere): the indicator kernel's in operators.indicators, a LAG
+  chain in the oracle SQL;
 - EMA/MACD use the identical recurrence shape in the mapInArrow kernel
   and the recursive-CTE oracle;
 - hashes are md5 (byte-identical across engines);
@@ -110,7 +111,8 @@ TS_FMT_DUCK = "%Y-%m-%d %H:%M:%S.%f"
 # shared SQL fragments for the indicator oracle (events as the ordered series)
 # ---------------------------------------------------------------------------
 def _lag_mean_sql(col: str, n: int, win: str) -> str:
-    """Left-associated lag-chain mean — mirrors functions.windows.rolling_mean."""
+    """Left-associated lag-chain mean — the same sum order as the rolling
+    means of the operators.indicators kernel."""
     terms = [col] + [f"LAG({col}, {k}) OVER {win}" for k in range(1, n)]
     return f"(({' + '.join(terms)}) / CAST({n} AS DOUBLE))"
 
@@ -359,9 +361,9 @@ FROM ma
 
 def q_ma_frame_windows(spark, sf_dir):
     """The O(1)-per-row frame-aggregate rolling mean (functions.windows.
-    rolling_mean_frame) — the pre-measured swap for the O(n) lag-chain at
-    very large window widths. AVG over a bounded ROWS frame accumulates
-    in a different order than the left-associated lag-chain; parity with
+    rolling_mean_frame) — the pre-measured swap for the O(n)
+    left-associated sum at very large window widths. AVG over a bounded
+    ROWS frame accumulates in a different order than that sum; parity with
     DuckDB's frame AVG was verified exact after ROUND(·,6) at sf0.01 AND
     sf0.1 (0 mismatches / 100k rows) before this entry was added."""
     from pyspark.sql import Window

@@ -378,7 +378,11 @@ def test_with_macd_rejects_nan_key(spark):
     from pyspark.errors import PythonException
 
     from airflow_kafka_spark_spark.functions.ema import macd_columns
-    from airflow_kafka_spark_spark.operators.indicators import with_macd
+    from airflow_kafka_spark_spark.operators.indicators import (
+        with_macd,
+        with_moving_averages,
+        with_rsi,
+    )
 
     closes = [float(10 + t % 7) for t in range(12)]
     schema = "k double, t int, close double"
@@ -392,3 +396,104 @@ def test_with_macd_rejects_nan_key(spark):
     bad = ok.union(spark.createDataFrame([(float("nan"), 0, 1.0)], schema))
     with pytest.raises(PythonException, match="ValueError.*NaN in key column 'k'"):
         with_macd(bad, ["k"], ["t"]).collect()
+    # MA and RSI run in the same kernel and raise the same error
+    for op in (with_moving_averages, with_rsi):
+        with pytest.raises(PythonException, match="ValueError.*NaN in key column 'k'"):
+            op(bad, ["k"], ["t"]).collect()
+
+
+def _window_reference(df, key_cols, order_cols, close_col="close", period=14):
+    """MA5/MA20/RSI as Spark Window lag-chains, the formulation the
+    indicator kernel replaced: ``(x + lag(x,1) + … + lag(x,n-1)) / n``
+    (``+`` propagates NULL, so fewer than n rows or any NULL term gives
+    NULL), ``delta = x - lag(x,1)``, ``when`` gain/loss splits (a NULL
+    predicate takes the ``otherwise``) and the reference's loss==0 ⇒
+    rs=0 quirk."""
+    from pyspark.sql import Window
+    from pyspark.sql import functions as F
+
+    w = Window.partitionBy(*key_cols).orderBy(*order_cols)
+
+    def rolling_mean(col, n):
+        total = col
+        for k in range(1, n):
+            total = total + F.lag(col, k).over(w)
+        return total / F.lit(float(n))
+
+    c = F.col(close_col)
+    delta = c - F.lag(c, 1).over(w)
+    gain = F.when(delta > 0, delta).otherwise(F.lit(0.0))
+    loss = F.when(delta < 0, -delta).otherwise(F.lit(0.0))
+    avg_gain, avg_loss = rolling_mean(gain, period), rolling_mean(loss, period)
+    rs = F.when(avg_loss == 0, F.lit(0.0)).otherwise(avg_gain / avg_loss)
+    return (
+        df.withColumn("ma5", rolling_mean(c, 5))
+        .withColumn("ma20", rolling_mean(c, 20))
+        .withColumn("rsi", F.lit(100.0) - (F.lit(100.0) / (F.lit(1.0) + rs)))
+    )
+
+
+def _bits(v):
+    """A double's bit pattern (so -0.0 != 0.0); every NaN is one value
+    (NaN payload bits are not part of the contract); NULL stays None."""
+    import struct
+
+    if v is None:
+        return None
+    return "nan" if v != v else struct.pack("<d", v).hex()
+
+
+@pytest.mark.parametrize("batch_rows", [1, 37, None])
+def test_indicator_kernel_matches_window_reference(spark, batch_rows):
+    """The one kernel of with_indicators is BIT-identical to the Window
+    lag-chain reference on ma5/ma20/rsi and to per-key one-shot
+    macd_columns on the MACD triple, whatever the Arrow batch size: keys
+    of 1, 2, 13-15, 19-21 and more rows, a NULL key, and NULL, NaN and
+    ±inf closes, including NULL/NaN runs that straddle batch
+    boundaries."""
+    from airflow_kafka_spark_spark.functions.ema import macd_columns
+
+    specials = [None, float("nan"), float("inf"), float("-inf")]
+    rows = []
+    sizes = [1, 2, 13, 14, 15, 19, 20, 21, 45, 80]
+    for k, size in enumerate(sizes + [33]):
+        key = None if k == len(sizes) else k
+        for t in range(size):
+            h = (k * 7919 + t * 104729) % 1009
+            if size >= 45 and 30 <= t < 36:  # a run of NULL, NaN, ±inf
+                v = specials[(t + k) % 4]
+            elif h % 11 == 0:
+                v = specials[h % 4]
+            else:
+                v = round(10.0 + (h % 97) * 0.37 - (t % 5) * 1.1, 3)
+            rows.append((key, t, v))
+    sdf = spark.createDataFrame(rows, "k int, t int, close double")
+
+    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    prev = spark.conf.get(conf)
+    if batch_rows is not None:
+        spark.conf.set(conf, batch_rows)
+    try:
+        got = {
+            (r["k"], r["t"]): tuple(_bits(r[c]) for c in NUMERIC)
+            for r in with_indicators(sdf, ["k"], ["t"]).collect()
+        }
+    finally:
+        spark.conf.set(conf, prev)
+    window = {
+        (r["k"], r["t"]): tuple(_bits(r[c]) for c in ("ma5", "ma20", "rsi"))
+        for r in _window_reference(sdf, ["k"], ["t"]).collect()
+    }
+
+    assert len(got) == len(window) == len(rows)
+    by_key: dict = {}
+    for key, t, v in rows:
+        by_key.setdefault(key, []).append(np.nan if v is None else v)
+    for key, closes in by_key.items():
+        with np.errstate(invalid="ignore"):
+            macd = macd_columns(np.array(closes, dtype=np.float64))
+        for t in range(len(closes)):
+            want = window[(key, t)] + tuple(
+                None if np.isnan(col[t]) else _bits(col[t]) for col in macd
+            )
+            assert got[(key, t)] == want, (key, t, got[(key, t)], want)

@@ -39,8 +39,8 @@ def test_q3_broadcasts_dimension(spark):
 
 
 def test_indicator_stack_single_shuffle(spark):
-    """Window indicators + Arrow MACD grouped-map share one hash
-    partitioning on the key — exactly one Exchange in the plan."""
+    """The W1-W10 indicator kernel runs on one hash partitioning of the
+    key — exactly one Exchange in the plan."""
     from airflow_kafka_spark_spark.operators.indicators import with_indicators
     from airflow_kafka_spark_spark.sources.files import load_table
 
@@ -49,6 +49,29 @@ def test_indicator_stack_single_shuffle(spark):
     )
     s = _explain(with_indicators(ev, ["user_id"], ["ts", "event_id"]))
     assert s.count("Exchange") == 1, s
+
+
+def test_snapshot_plan_one_exchange_one_kernel(spark, tmp_path):
+    """The snapshot cycle's plan: the per-symbol dedup's Exchange is the
+    only one (the indicator kernel's repartition on the same key is
+    dropped), the W1-W10 stack is one MapInArrow, and no Window lag
+    chain is left."""
+    from airflow_kafka_spark_spark.operators.serialize import to_kafka_records
+    from airflow_kafka_spark_spark.sources.fixtures import build_history_messages
+    from airflow_kafka_spark_spark.streaming.pipeline import analyze_history_batch
+
+    src = str(tmp_path / "msgs")
+    build_history_messages(spark, SF_DIR).select(
+        "key",
+        "value",
+        F.current_timestamp().alias("timestamp"),
+        F.monotonically_increasing_id().alias("offset"),
+    ).write.parquet(src)
+    raw = spark.read.parquet(src)
+    s = _explain(to_kafka_records(analyze_history_batch(raw, ["timestamp", "offset"])))
+    assert s.count("Exchange") == 1, s
+    assert s.count("MapInArrow") == 1, s
+    assert "lag(" not in s, s
 
 
 def test_fixed_point_sums_long_partials_before_shuffle(spark):

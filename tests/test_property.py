@@ -1,5 +1,5 @@
 """Property-based indicator tests (SURVEY.md §5.2.3): on random price
-series, the engine's Window/Arrow pipeline must equal the reference's
+series, the engine's indicator kernel must equal the reference's
 exact pandas formulae (rolling min_periods, Cutler RSI with the loss==0
 quirk, ewm adjust=False), and the invariants must hold.
 
@@ -48,6 +48,66 @@ def test_ema_bounded_by_series_extremes(xs):
     out = ema_recurrence(arr, 26)
     lo, hi = arr.min(), arr.max()
     assert ((out >= lo - 1e-9) & (out <= hi + 1e-9)).all()
+
+
+def _ema_numpy_scalar_loop(x, span, state=None):
+    """The EMA loop as written over numpy float64 scalars with
+    ``np.isnan``, before ``functions.ema`` moved to Python floats."""
+    alpha = 2.0 / (span + 1.0)
+    beta = 1.0 - alpha
+    out = np.empty(len(x), dtype=np.float64)
+    sval, have_state, w = state if state is not None else (np.nan, False, 1.0)
+    for i in range(len(x)):
+        v = x[i]
+        if not have_state:
+            if np.isnan(v):
+                out[i] = np.nan
+                continue
+            sval, have_state, w = v, True, 1.0
+            out[i] = sval
+            continue
+        w *= beta
+        if np.isnan(v):
+            out[i] = sval
+            continue
+        if w == beta:
+            sval = alpha * v + beta * sval
+        else:
+            sval = (w * sval + alpha * v) / (w + alpha)
+        w = 1.0
+        out[i] = sval
+    return out, (sval, have_state, w)
+
+
+@given(
+    xs=st.lists(
+        st.one_of(
+            st.floats(min_value=-1e6, max_value=1e6, allow_nan=False),
+            st.just(float("nan")),
+        ),
+        min_size=0,
+        max_size=80,
+    ),
+    span=st.integers(min_value=1, max_value=30),
+    cut=st.integers(min_value=0, max_value=80),
+)
+@settings(max_examples=300, deadline=None)
+def test_ema_python_float_loop_bit_identical(xs, span, cut):
+    """The Python-float EMA loop gives the numpy-scalar loop's bits,
+    including NaN runs, and so does resuming it from the state carried
+    out of a first chunk."""
+    from airflow_kafka_spark_spark.functions.ema import ema_recurrence_state
+
+    arr = np.asarray(xs, dtype=np.float64)
+    want, want_st = _ema_numpy_scalar_loop(arr, span)
+    got, got_st = ema_recurrence_state(arr, span)
+    assert got.tobytes() == want.tobytes()
+    assert np.float64(got_st[0]).tobytes() == np.float64(want_st[0]).tobytes()
+    assert got_st[1:] == want_st[1:]
+    cut = min(cut, len(arr))
+    head, st1 = ema_recurrence_state(arr[:cut], span)
+    tail, _ = ema_recurrence_state(arr[cut:], span, st1)
+    assert np.concatenate([head, tail]).tobytes() == want.tobytes()
 
 
 def _reference_pandas(series: np.ndarray) -> pd.DataFrame:
