@@ -19,9 +19,10 @@ per step (unit-tested).
 
 :func:`macd_recurrence_state` is the one owner of how MACD state crosses a
 boundary (Arrow batch, micro-batch, replay chunk); every caller goes
-through it. Scale note: state is per-key and sequential *within* a key
-only; keys are hash-distributed, so a 1000-executor cluster runs every
-key's recurrence concurrently, Arrow-batched, with no driver involvement.
+through it and carries the terminal state it returns verbatim. Scale
+note: state is per-key and sequential *within* a key only; keys are
+hash-distributed, so a 1000-executor cluster runs every key's recurrence
+concurrently, Arrow-batched, with no driver involvement.
 """
 
 from __future__ import annotations
@@ -29,8 +30,21 @@ from __future__ import annotations
 import numpy as np
 
 
-def ema_recurrence(x: np.ndarray, span: int) -> np.ndarray:
-    """Exact adjust=False EMA recurrence over a 1-D float64 array.
+# fast, slow, signal spans (spark/stock_analysis.py:186-190)
+MACD_SPANS = (12, 26, 9)
+
+
+def ema_recurrence_state(
+    x: np.ndarray,
+    span: int,
+    state: tuple[float, bool, float] | None = None,
+) -> tuple[np.ndarray, tuple[float, bool, float]]:
+    """Exact adjust=False EMA recurrence over a 1-D float64 array, resumed
+    from ``state = (value, have_state, pending_w)`` (``None`` = fresh
+    series); returns the outputs plus the terminal state. Feeding a
+    series through in chunks with the carried state is bit-identical to
+    one call over the whole array, including a NaN run straddling a
+    chunk boundary.
 
     NULL (NaN) handling matches pandas ewm's DEFAULT ``ignore_na=False``
     — the reference's semantics, since it never passes ignore_na: a NaN
@@ -43,32 +57,8 @@ def ema_recurrence(x: np.ndarray, span: int) -> np.ndarray:
 
     The gapless step keeps the ORIGINAL single-expression op order
     ``α·x + β·y`` (not pandas' divide-by-(w+α) form), so NaN-free series
-    — every oracled fixture, and the streaming continuation contract —
-    are bit-identical to the DuckDB recursive-CTE oracle as before.
-    Pending gap decay crosses a call only through the full state triple
-    of :func:`ema_recurrence_state`. The streaming state store keeps the
-    value alone, so a NaN run ending a micro-batch is forgotten at that
-    boundary (the value re-enters as a fresh observation) — documented
-    limit, NaN-free by contract there.
-    """
-    return ema_recurrence_state(x, span)[0]
-
-
-def ema_recurrence_state(
-    x: np.ndarray,
-    span: int,
-    state: tuple[float, bool, float] | None = None,
-) -> tuple[np.ndarray, tuple[float, bool, float]]:
-    """Resumable form of :func:`ema_recurrence`: runs the identical op
-    sequence over ``x`` starting from ``state = (value, have_state,
-    pending_w)`` (``None`` = fresh series) and returns the outputs plus
-    the terminal state. Feeding a series through in chunks with the
-    carried state is bit-identical to one call over the whole array —
-    INCLUDING a NaN run straddling a chunk boundary. Seeding with
-    ``(v, True, 1.0)`` resumes from a stored value ``v`` alone, which
-    forgets any pending gap (the streaming state store's documented
-    limit); the chunked batch kernel (``operators.indicators.with_macd``)
-    carries the full triple instead."""
+    — every oracled fixture — are bit-identical to the DuckDB
+    recursive-CTE oracle."""
     alpha = 2.0 / (span + 1.0)
     beta = 1.0 - alpha
     # Python floats, not numpy scalars: the same IEEE ops in the same
@@ -107,19 +97,16 @@ def ema_recurrence_state(
 
 
 def macd_recurrence_state(
-    close: np.ndarray,
-    fast: int = 12,
-    slow: int = 26,
-    signal: int = 9,
-    state: tuple | None = None,
+    close: np.ndarray, state: tuple | None = None
 ) -> tuple[tuple[np.ndarray, ...], tuple]:
     """The MACD state carry: EMA(fast), EMA(slow), line = fast − slow and
-    EMA(signal) of the line over ``close``, resumed from ``state`` — a
-    ``(fast, slow, signal)`` triple of :func:`ema_recurrence_state`
-    states, any of which may be ``None`` (``state=None`` = fresh
-    series). Returns ``(ema_fast, ema_slow, line, signal_line)`` and the
-    terminal state triple; an empty ``close`` returns the state
-    unchanged."""
+    EMA(signal) of the line over ``close`` (spans ``MACD_SPANS``),
+    resumed from ``state`` — a ``(fast, slow, signal)`` triple of
+    :func:`ema_recurrence_state` states, any of which may be ``None``
+    (``state=None`` = fresh series). Returns ``(ema_fast, ema_slow,
+    line, signal_line)`` and the terminal state triple; an empty
+    ``close`` returns the state unchanged."""
+    fast, slow, signal = MACD_SPANS
     st_fast, st_slow, st_sig = state if state is not None else (None,) * 3
     ema_fast, st_fast = ema_recurrence_state(close, fast, st_fast)
     ema_slow, st_slow = ema_recurrence_state(close, slow, st_slow)
@@ -130,13 +117,10 @@ def macd_recurrence_state(
 
 def macd_columns(
     close: np.ndarray,
-    fast: int = 12,
-    slow: int = 26,
-    signal: int = 9,
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     """MACD line / signal / histogram (W7-W10,
     spark/stock_analysis.py:186-191): EMA(fast) − EMA(slow), EMA(signal) of
     the line, and their difference. Defined from the first row (no warm-up
     NULLs — ewm adjust=False seeds with x[0])."""
-    (_, _, line, sig), _ = macd_recurrence_state(close, fast, slow, signal)
+    (_, _, line, sig), _ = macd_recurrence_state(close)
     return line, sig, line - sig

@@ -17,10 +17,10 @@ zero-copy) and appends the requested columns:
 - EMA/MACD: the recurrence of :mod:`..functions.ema`, once per key run.
 
 A key's series may span Arrow batches: the kernel carries the trailing
-key's last ``max(19, period)`` closes with their validity (enough for
-MA20 and the RSI's gains) and its MACD recurrence state into the next
-batch, so memory is one batch plus that tail and the result does not
-depend on ``maxRecordsPerBatch``.
+key's last 19 closes with their validity (enough for MA20 and the RSI's
+gains) and its MACD recurrence state into the next batch, so memory is
+one batch plus that tail and the result does not depend on
+``maxRecordsPerBatch``.
 
 ``with_indicators`` computes all six columns in the one pass; each of
 ``with_moving_averages``, ``with_rsi`` and ``with_macd`` is the same
@@ -44,6 +44,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 MA_PERIODS = (5, 20)
+RSI_PERIOD = 14
 MACD_FIELDS = [
     T.StructField("macd_line", T.DoubleType()),
     T.StructField("macd_signal", T.DoubleType()),
@@ -68,12 +69,11 @@ def with_rsi(
     key_cols: list[str],
     order_cols: list[str],
     close_col: str = "close",
-    period: int = 14,
 ) -> DataFrame:
-    """W3-W6: RSI over a simple (Cutler's) rolling mean of gains/losses
+    """W3-W6: RSI-14 over a simple (Cutler's) rolling mean of gains/losses
     (spark/stock_analysis.py:177-183), including the loss==0 ⇒ RSI=0 quirk."""
     return _indicator_pass(
-        df, key_cols, order_cols, close_col, "with_rsi", rsi=period
+        df, key_cols, order_cols, close_col, "with_rsi", rsi=True
     )
 
 
@@ -82,11 +82,8 @@ def with_macd(
     key_cols: list[str],
     order_cols: list[str],
     close_col: str = "close",
-    fast: int = 12,
-    slow: int = 26,
-    signal: int = 9,
 ) -> DataFrame:
-    """W7-W10: MACD line / signal / histogram
+    """W7-W10: MACD 12-26-9 line / signal / histogram
     (spark/stock_analysis.py:186-191 semantics), NULL where undefined.
 
     A ``groupBy(key).applyInArrow`` form would invoke Python once per
@@ -98,8 +95,7 @@ def with_macd(
     have-state, pending NaN-gap weight per EMA), bit-identical to a
     one-shot run."""
     return _indicator_pass(
-        df, key_cols, order_cols, close_col, "with_macd",
-        macd=(fast, slow, signal),
+        df, key_cols, order_cols, close_col, "with_macd", macd=True
     )
 
 
@@ -113,7 +109,7 @@ def with_indicators(
     macd_histogram) in one kernel pass."""
     return _indicator_pass(
         df, list(key_cols), list(order_cols), close_col, "with_indicators",
-        ma=True, rsi=14, macd=(12, 26, 9),
+        ma=True, rsi=True, macd=True,
     )
 
 
@@ -132,9 +128,9 @@ def _rolling_mean(
 
 
 def _rsi(
-    x: np.ndarray, ok: np.ndarray, pos: np.ndarray, period: int
+    x: np.ndarray, ok: np.ndarray, pos: np.ndarray
 ) -> tuple[np.ndarray, np.ndarray]:
-    """RSI with Spark's semantics: a NULL delta gives gain = loss = 0.0,
+    """RSI-14 with Spark's semantics: a NULL delta gives gain = loss = 0.0,
     NaN > 0 is true (NaN ranks above every number), ``rs = 0.0`` where
     the average loss is 0, and a zero ``1 + rs`` divisor gives NULL."""
     delta = np.full(len(x), np.nan)
@@ -145,8 +141,8 @@ def _rsi(
     gain = np.where(dok & ((delta > 0) | np.isnan(delta)), delta, 0.0)
     loss = np.where(dok & (delta < 0), -delta, 0.0)
     always = np.ones(len(x), dtype=bool)
-    avg_gain, valid = _rolling_mean(gain, always, pos, period)
-    avg_loss, _ = _rolling_mean(loss, always, pos, period)
+    avg_gain, valid = _rolling_mean(gain, always, pos, RSI_PERIOD)
+    avg_loss, _ = _rolling_mean(loss, always, pos, RSI_PERIOD)
     rs = np.where(avg_loss == 0, 0.0, avg_gain / avg_loss)
     denom = 1.0 + rs
     return 100.0 - 100.0 / denom, valid & (denom != 0)
@@ -159,12 +155,12 @@ def _indicator_pass(
     close_col: str,
     caller: str,
     ma: bool = False,
-    rsi: int | None = None,
-    macd: tuple[int, int, int] | None = None,
+    rsi: bool = False,
+    macd: bool = False,
 ) -> DataFrame:
     """The one kernel: repartition by key, sort by (key, order) within
-    partitions, and append ma5/ma20 (``ma``), rsi (``rsi`` = period) and
-    the MACD triple (``macd`` = (fast, slow, signal)) in that order.
+    partitions, and append ma5/ma20 (``ma``), rsi (``rsi``) and the MACD
+    triple (``macd``) in that order.
 
     Key runs are segmented vectorised (NULL keys compare equal, so they
     are one group, as groupBy treats them). A float NaN key raises
@@ -179,9 +175,9 @@ def _indicator_pass(
     new_fields = []
     if ma:
         new_fields += [T.StructField(f"ma{n}", T.DoubleType()) for n in MA_PERIODS]
-    if rsi is not None:
+    if rsi:
         new_fields.append(T.StructField("rsi", T.DoubleType()))
-    if macd is not None:
+    if macd:
         new_fields += MACD_FIELDS
     out_schema = T.StructType(list(df.schema.fields) + new_fields)
     cols = df.columns
@@ -193,8 +189,8 @@ def _indicator_pass(
         if isinstance(df.schema[c].dataType, (T.DoubleType, T.FloatType))
     ]
     # closes a key carries into the next batch: MA20's 19 lags, and the
-    # RSI's `period` gains, whose oldest delta reads one close further back
-    n_tail = max(max(MA_PERIODS) - 1, rsi or 0)
+    # RSI's 14 gains, whose oldest delta reads one close further back
+    n_tail = max(max(MA_PERIODS) - 1, RSI_PERIOD)
 
     df = df.repartition(*[F.col(c) for c in key_cols]).sortWithinPartitions(
         *(list(key_cols) + list(order_cols))
@@ -249,21 +245,21 @@ def _indicator_pass(
                     out += [
                         _rolling_mean(x_ext, ok_ext, pos_ext, p) for p in MA_PERIODS
                     ]
-                if rsi is not None:
-                    out.append(_rsi(x_ext, ok_ext, pos_ext, rsi))
+                if rsi:
+                    out.append(_rsi(x_ext, ok_ext, pos_ext))
             # explicit mask: NULL where undefined, NaN stays NaN
             arrays = [
                 pa.array(vals[n_prev:], type=pa.float64(), mask=~valid[n_prev:])
                 for vals, valid in out
             ]
 
-            if macd is not None:
+            if macd:
                 line_out = np.empty(n, dtype=np.float64)
                 sig_out = np.empty(n, dtype=np.float64)
                 for j, (s, e) in enumerate(zip(bounds[:-1], bounds[1:])):
                     if j or not cont:
                         st = None
-                    (_, _, line, sg), st = macd_recurrence_state(x[s:e], *macd, st)
+                    (_, _, line, sg), st = macd_recurrence_state(x[s:e], st)
                     line_out[s:e], sig_out[s:e] = line, sg
                 # from_pandas=True: NaN → NULL (DoubleType NULL, not NaN,
                 # for undefined rows)

@@ -133,13 +133,16 @@ def kafka_pipeline(
 
 
 # Why foreachBatch and not a single continuous writeStream.format("kafka")
-# plan: the indicator stack uses per-key ordered Window functions (lag
-# chains), which Structured Streaming rejects on unbounded streams
-# (NON_TIME_WINDOW_NOT_SUPPORTED_IN_STREAMING — verified empirically).
-# Messages are self-contained snapshots, so per-micro-batch evaluation
-# inside foreachBatch is semantically exact, and the only alternative —
-# applyInPandasWithState over a delta feed — is implemented separately in
-# streaming/stateful.py. foreachBatch here is architecture, not legacy.
+# plan: Structured Streaming rejects both per-key orderings the transform
+# needs on an unbounded stream (verified on Spark 4.1.2). With dedup, the
+# latest-snapshot ROW_NUMBER window fails with
+# NON_TIME_WINDOW_NOT_SUPPORTED_IN_STREAMING; without it, the indicator
+# kernel's sortWithinPartitions fails with "Sorting is not supported on
+# streaming DataFrames/Datasets". Messages are self-contained snapshots,
+# so per-micro-batch evaluation inside foreachBatch is semantically
+# exact, and the only alternative — applyInPandasWithState over a delta
+# feed — is implemented separately in streaming/stateful.py. foreachBatch
+# here is architecture, not legacy.
 
 
 def install_shutdown_handler(spark: SparkSession, query: StreamingQuery) -> None:

@@ -9,13 +9,15 @@ scalable alternative is a *delta feed*: messages carry only new bars, and
 the engine carries the indicator recursion state (EMA-12/26, MACD signal)
 across micro-batches with ``applyInPandasWithState``.
 
-State is tiny and per-key — a count and three doubles (``STATE_SCHEMA``)
-— so a 1000-executor cluster shards it by key hash with no hotspot; the state
+State is tiny and per-key — a count and, per EMA, the state triple
+``functions.ema.ema_recurrence_state`` returns (value, have-state flag,
+pending NaN-gap weight): ten fields (``STATE_SCHEMA``) — so a
+1000-executor cluster shards it by key hash with no hotspot; the state
 store checkpoints with the query, giving exactly-once state evolution on
-restart. The EMA continuation is *bit-exact* with the batch kernel: a
-recurrence's value at a batch boundary fully captures its NaN-free
-history, so resuming ``functions.ema.macd_recurrence_state`` from the
-stored values reproduces the uninterrupted series (unit-tested in
+restart. The stored triples are the carry the batch kernel
+(``operators.indicators.with_macd``) passes across Arrow batches, kept
+verbatim, so the continuation is *bit-exact* with the uninterrupted
+series, a NaN run across a micro-batch boundary included (unit-tested in
 tests/test_stateful.py). The streaming operator and the batch replay
 that certifies it run one helper, :func:`_macd_batch`.
 """
@@ -31,8 +33,13 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from ..functions.ema import macd_recurrence_state
 
+# n_rows, then (value, have_state, pending_w) per EMA, in the order of
+# macd_recurrence_state's state triple
 STATE_SCHEMA = (
-    "n_rows long, ema12 double, ema26 double, macd_signal double"
+    "n_rows long, "
+    "ema12 double, ema12_have boolean, ema12_w double, "
+    "ema26 double, ema26_have boolean, ema26_w double, "
+    "macd_signal double, macd_signal_have boolean, macd_signal_w double"
 )
 OUTPUT_SCHEMA = (
     "symbol string, date_str string, close double, ema12 double, "
@@ -47,25 +54,18 @@ def _macd_batch(
     stored: Tuple[Any, ...] | None,
     order_cols: Sequence[str] = ("date_str",),
     close_col: str = "close",
-    spans: Tuple[int, int, int] = (12, 26, 9),
 ) -> Tuple[pd.DataFrame, Tuple[Any, ...]]:
     """One key's micro-batch of the delta-feed MACD: sort the rows, resume
     the recurrence from ``stored`` (a ``STATE_SCHEMA`` row, ``None`` for a
     new key), check the delta-feed contract, and return the
-    ``OUTPUT_SCHEMA`` frame with the state row to store.
-
-    The store keeps each EMA's value alone, so a value re-enters as a
-    fresh observation ``(v, True, 1.0)`` and a missing or NaN value as
-    no state; a NaN run ending a batch forgets its pending gap decay
-    (the documented limit in ``functions.ema``). An empty
-    batch carries the state through unchanged."""
-    n_prev, *values = stored if stored is not None else (0, None, None, None)
-    seed = tuple(
-        None if v is None or np.isnan(v) else (v, True, 1.0) for v in values
-    )
+    ``OUTPUT_SCHEMA`` frame with the state row to store. The state
+    triples go in and out of ``macd_recurrence_state`` unchanged. An
+    empty batch carries the state through unchanged."""
+    n_prev, *flat = stored if stored is not None else (0,)
+    seed = tuple(tuple(flat[i : i + 3]) for i in (0, 3, 6)) if flat else None
     pdf = pd.concat(list(pdfs)).sort_values(list(order_cols), kind="mergesort")
     close = pdf[close_col].to_numpy(dtype=np.float64)
-    (e12, e26, line, sig), st = macd_recurrence_state(close, *spans, seed)
+    (e12, e26, line, sig), st = macd_recurrence_state(close, seed)
     n_total = n_prev + len(close)
     # Delta-feed contract guard: when the upstream (quotefeed_deltas)
     # rides the snapshot length along, the cumulative bar count this
@@ -95,7 +95,7 @@ def _macd_batch(
             "n_rows": np.int64(n_total),
         }
     )
-    return frame, (n_total, *(float(s[0]) for s in st))
+    return frame, (n_total, *(f for triple in st for f in triple))
 
 
 def _update_macd(
@@ -165,9 +165,6 @@ def replay_macd_in_batches(
     order_cols: list[str],
     close_col: str = "close",
     n_batches: int = 3,
-    fast: int = 12,
-    slow: int = 26,
-    signal: int = 9,
 ) -> DataFrame:
     """Batch-mode replay of the streaming MACD continuation — the
     certification surface for the module's bit-exactness claim.
@@ -175,11 +172,10 @@ def replay_macd_in_batches(
     Per key, the ordered series is split into ``n_batches`` contiguous
     chunks and folded chunk-by-chunk through :func:`_macd_batch`, the
     same call :func:`running_macd` makes per micro-batch, with the
-    previous chunk's stored state row. On a NaN-free series (the
-    delta-feed contract; a NaN run ending a chunk forgets its pending
-    gap decay at the boundary — see ``functions.ema``) the
-    concatenated output must equal the uninterrupted one-shot kernel
-    (``operators.indicators.with_macd``) bit for bit —
+    previous chunk's stored state row. The concatenated output must
+    equal the uninterrupted one-shot kernel
+    (``operators.indicators.with_macd``) bit for bit, NULL closes and
+    a NaN run ending a chunk included —
     ``running_macd_cert`` pins that equality under the driver's oracle
     hash check.
 
@@ -205,7 +201,7 @@ def replay_macd_in_batches(
         for b in range(n_batches):
             chunk = pdf.iloc[(n * b) // n_batches : (n * (b + 1)) // n_batches]
             frame, stored = _macd_batch(
-                key, [chunk], stored, order_cols, close_col, (fast, slow, signal)
+                key, [chunk], stored, order_cols, close_col
             )
             frames.append(frame[macd_cols])
         macd = pd.concat(frames, ignore_index=True)

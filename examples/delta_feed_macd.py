@@ -31,7 +31,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SYMBOLS = ("FPT", "VNM")
-CYCLES = 12  # < 28 so the synthetic generator's date strings stay unique
+CYCLES = 12
 
 
 def main() -> None:

@@ -13,7 +13,7 @@ import numpy as np
 import pandas as pd
 from hypothesis import given, settings, strategies as st
 
-from airflow_kafka_spark_spark.functions.ema import ema_recurrence
+from airflow_kafka_spark_spark.functions.ema import ema_recurrence_state
 from airflow_kafka_spark_spark.operators.indicators import with_indicators
 from airflow_kafka_spark_spark.operators.signals import (
     DEFAULT_SUGGESTION,
@@ -36,7 +36,7 @@ def test_ema_matches_pandas_ewm(xs):
     why the engine/oracle pair uses the explicit recurrence on BOTH
     sides, not pandas) — equality here is to a few-ULP tolerance."""
     arr = np.asarray(xs, dtype=np.float64)
-    ours = ema_recurrence(arr, 12)
+    ours = ema_recurrence_state(arr, 12)[0]
     pandas_ = pd.Series(arr).ewm(span=12, adjust=False).mean().to_numpy()
     assert np.allclose(ours, pandas_, rtol=1e-12, atol=0)
 
@@ -45,7 +45,7 @@ def test_ema_matches_pandas_ewm(xs):
 @settings(max_examples=200, deadline=None)
 def test_ema_bounded_by_series_extremes(xs):
     arr = np.asarray(xs, dtype=np.float64)
-    out = ema_recurrence(arr, 26)
+    out = ema_recurrence_state(arr, 26)[0]
     lo, hi = arr.min(), arr.max()
     assert ((out >= lo - 1e-9) & (out <= hi + 1e-9)).all()
 
@@ -943,7 +943,7 @@ def test_ema_nan_gaps_match_pandas_default(xs, span):
     mask = (np.abs(arr) * 1e6).astype(np.int64) % 3 == 0
     arr2 = arr.copy()
     arr2[mask] = np.nan
-    ours = ema_recurrence(arr2, span)
+    ours = ema_recurrence_state(arr2, span)[0]
     ref = pd.Series(arr2).ewm(span=span, adjust=False).mean().to_numpy()
     assert np.allclose(
         np.nan_to_num(ours, nan=-1e300),

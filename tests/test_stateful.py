@@ -12,7 +12,11 @@ import numpy as np
 import pandas as pd
 import pytest
 
-from airflow_kafka_spark_spark.functions.ema import ema_recurrence, macd_columns
+from airflow_kafka_spark_spark.functions.ema import (
+    ema_recurrence_state,
+    macd_columns,
+    macd_recurrence_state,
+)
 from airflow_kafka_spark_spark.streaming.stateful import (
     _macd_batch,
     _update_macd,
@@ -20,31 +24,14 @@ from airflow_kafka_spark_spark.streaming.stateful import (
 )
 
 
-def _prepend_seed_macd(x: np.ndarray, split: int):
-    """Reference continuation: every EMA's second leg re-runs the
-    one-shot recurrence over ``[prev] + tail`` and drops the seed row
-    (a missing or NaN ``prev`` restarts the series)."""
-
-    def carry(v, span):
-        head = ema_recurrence(v[:split], span)
-        prev = head[-1] if split else np.nan
-        if np.isnan(prev):
-            return np.concatenate([head, ema_recurrence(v[split:], span)])
-        tail = ema_recurrence(np.concatenate([[prev], v[split:]]), span)[1:]
-        return np.concatenate([head, tail])
-
-    e12, e26 = carry(x, 12), carry(x, 26)
-    return e12, e26, e12 - e26, carry(e12 - e26, 9)
-
-
-@pytest.mark.parametrize("split", [0, 1, 50, 199])
+@pytest.mark.parametrize("split", [0, 1, 48, 50, 122, 199])
 def test_macd_batch_continuation_bit_exact(split):
     """Two micro-batches through _macd_batch, the second resumed from the
-    first's stored state row, equal the prepend-seed continuation of all
-    three EMAs bit for bit, NaN runs included. Where the first batch does
-    not end in a NaN run they also equal the one-shot macd_columns; at
-    split 50 it does, and its pending gap decay is forgotten (the
-    documented limit of a value-only state store)."""
+    first's stored state row, equal the one-shot recurrence of all three
+    EMAs bit for bit. The first batch is empty (0), one leading NaN (1),
+    ends inside a NaN run (48), ends with a NaN run (50, 122) or leaves
+    one row (199): the stored row carries each EMA's pending gap decay
+    across the boundary."""
     rng = np.random.default_rng(7)
     x = rng.normal(size=200)
     x[[0, 20, 21, 22, 47, 48, 49, 120, 121]] = np.nan
@@ -54,17 +41,13 @@ def test_macd_batch_continuation_bit_exact(split):
     head, stored = _macd_batch(("K",), [pdf.iloc[:split]], None)
     tail, stored = _macd_batch(("K",), [pdf.iloc[split:]], stored)
     got = pd.concat([head, tail])
-    e12, e26, line, sig = _prepend_seed_macd(x, split)
+    (e12, e26, line, sig), st = macd_recurrence_state(x)
     for col, want in (
         ("ema12", e12), ("ema26", e26), ("macd_line", line),
         ("macd_signal", sig), ("macd_histogram", line - sig),
     ):
         assert np.array_equal(got[col].to_numpy(), want, equal_nan=True), col
-    if split != 50:
-        one_line, one_sig, _ = macd_columns(x)
-        assert np.array_equal(line, one_line, equal_nan=True)
-        assert np.array_equal(sig, one_sig, equal_nan=True)
-    assert stored == (200, e12[-1], e26[-1], sig[-1])
+    assert stored == (200, *st[0], *st[1], *st[2])
     assert got["n_rows"].iloc[-1] == 200
 
 
@@ -232,9 +215,11 @@ def test_state_surface_rejects_numbars_gt_1():
 
 def test_state_surface_semantics_without_protocol():
     """Two chunks through the state surface == one batch kernel run, bit
-    for bit, with the state carried by the fake store."""
+    for bit, with the state carried by the fake store — the first chunk
+    ends inside a NaN run, so its pending gap decay crosses the store."""
     rng = np.random.default_rng(5)
     series = rng.uniform(10, 100, size=40)
+    series[23:27] = np.nan
     step = _pandas_with_state()
     outs = []
     for lo, hi in ((0, 25), (25, 40)):
@@ -247,7 +232,10 @@ def test_state_surface_semantics_without_protocol():
         outs.extend(step(("AAA",), pdf))
     got = pd.concat(outs).sort_values("date_str")
     line, sig, hist = macd_columns(series)
-    assert np.array_equal(got["ema12"].to_numpy(), ema_recurrence(series, 12))
+    assert np.array_equal(
+        got["ema12"].to_numpy(), ema_recurrence_state(series, 12)[0]
+    )
+    assert np.array_equal(got["macd_line"].to_numpy(), line)
     assert np.array_equal(got["macd_signal"].to_numpy(), sig)
     assert np.array_equal(got["macd_histogram"].to_numpy(), hist)
     assert got["n_rows"].iloc[-1] == 40
@@ -328,9 +316,11 @@ def test_replay_macd_in_batches_equals_one_shot_kernel(spark):
     """The certification surface behind the `running_macd_cert` catalog
     entry: folding each key's series through the production state
     carry (_macd_batch) in k contiguous chunks must reproduce the
-    one-shot with_macd kernel bit for bit — including keys with fewer
-    rows than chunks (empty chunks carry state through unchanged, like
-    a micro-batch with no rows for that key)."""
+    one-shot with_macd kernel bit for bit — including NULL closes (a
+    leading one, and runs that end a chunk, whose pending gap decay
+    crosses the stored state row) and keys with fewer rows than chunks
+    (empty chunks carry state through unchanged, like a micro-batch
+    with no rows for that key)."""
     from pyspark.sql import functions as F
 
     from airflow_kafka_spark_spark.operators.indicators import with_macd
@@ -340,10 +330,14 @@ def test_replay_macd_in_batches_equals_one_shot_kernel(spark):
 
     rng = np.random.default_rng(23)
     rows = []
-    # key "a": 57 bars; key "b": 2 bars (fewer than n_batches=5)
+    # key "a": 57 bars, NULL runs ending the first k=3 chunk (rows 17-18)
+    # and the third k=5 chunk (rows 32-33); key "b": 2 bars (fewer than
+    # n_batches=5), the first NULL
+    nulls = {("a", 17), ("a", 18), ("a", 32), ("a", 33), ("b", 0)}
     for sym, n in (("a", 57), ("b", 2)):
         for i, v in enumerate(rng.normal(100.0, 5.0, size=n)):
-            rows.append((sym, f"d{i:03d}", float(v)))
+            close = None if (sym, i) in nulls else float(v)
+            rows.append((sym, f"d{i:03d}", close))
     df = spark.createDataFrame(rows, "symbol string, date_str string, close double")
 
     one_shot = with_macd(df, ["symbol"], ["date_str"], "close")

@@ -35,6 +35,8 @@ def main() -> int:
     spark = (
         SparkSession.builder.master("local[8]")
         .appName("oracle-subset")
+        # the console progress bar would share a line with ok/FAIL output
+        .config("spark.ui.showConsoleProgress", "false")
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("ERROR")
