@@ -450,7 +450,7 @@ def q_running_macd_cert(spark, sf_dir):
     The continuation leg replays each user's ordered close series
     through ``streaming.stateful.replay_macd_in_batches`` — k=3
     contiguous chunks folded through the EXACT production state carry
-    (``_macd_batch`` resumed from the previous chunk's stored state
+    (``_fold_macd`` resumed from the previous chunk's stored state
     row, the function the ``applyInPandasWithState`` processor
     calls). The one-shot leg is
     ``operators.indicators.with_macd``, the batch kernel the module

@@ -9,82 +9,134 @@ scalable alternative is a *delta feed*: messages carry only new bars, and
 the engine carries the indicator recursion state (EMA-12/26, MACD signal)
 across micro-batches with ``applyInPandasWithState``.
 
-State is tiny and per-key — a count and, per EMA, the state triple
+State is kept per *bucket* of keys: ``running_macd`` groups on
+``pmod(xxhash64(symbol), STATE_BUCKETS)``, so a micro-batch pays the
+per-group cost (an Arrow slice to pandas, a pickled state row, a sort,
+an output frame) once per bucket it touches, not once per symbol. A
+bucket's state row (``STATE_SCHEMA``) holds its keys' carries as
+parallel arrays: the key, its bar count and, per EMA, the state triple
 ``functions.ema.ema_recurrence_state`` returns (value, have-state flag,
-pending NaN-gap weight): ten fields (``STATE_SCHEMA``) — so a
-1000-executor cluster shards it by key hash with no hotspot; the state
-store checkpoints with the query, giving exactly-once state evolution on
-restart. The stored triples are the carry the batch kernel
+pending NaN-gap weight). That triple is the carry the batch kernel
 (``operators.indicators.with_macd``) passes across Arrow batches, kept
 verbatim, so the continuation is *bit-exact* with the uninterrupted
-series, a NaN run across a micro-batch boundary included (unit-tested in
-tests/test_stateful.py). The streaming operator and the batch replay
-that certifies it run one helper, :func:`_macd_batch`.
+series, a NaN run across a micro-batch boundary included
+(tests/test_stateful.py). The state store checkpoints with the query,
+giving exactly-once state evolution on restart. The streaming operator
+and the batch replay that certifies it run one helper,
+:func:`_fold_macd`.
+
+Scale: the stateful operator spreads over at most ``STATE_BUCKETS``
+shards (how many run at once is the shuffle-partition count the
+checkpoint fixed), and every micro-batch rewrites the whole state row of
+each bucket it touches — about keys / ``STATE_BUCKETS`` carries: ~31 at
+2,000 symbols (~5.6 KB a row in the state store's memory), ~16,000
+(~3 MB) at 10^6. A key space far past that wants more buckets;
+``STATE_BUCKETS`` is part of the checkpoint's layout, so changing it
+(like the earlier per-key layout) starts a new checkpoint.
 """
 
 from __future__ import annotations
 
-from typing import Any, Iterable, Iterator, Sequence, Tuple
+from typing import Any, Iterator, Sequence, Tuple
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from ..functions.ema import macd_recurrence_state
 
-# n_rows, then (value, have_state, pending_w) per EMA, in the order of
+# state rows of running_macd: a key's carry lives in the row of bucket
+# pmod(xxhash64(key), STATE_BUCKETS)
+STATE_BUCKETS = 64
+# per key of the bucket, in parallel: the key, its bar count, then
+# (value, have_state, pending_w) per EMA, in the order of
 # macd_recurrence_state's state triple
 STATE_SCHEMA = (
-    "n_rows long, "
-    "ema12 double, ema12_have boolean, ema12_w double, "
-    "ema26 double, ema26_have boolean, ema26_w double, "
-    "macd_signal double, macd_signal_have boolean, macd_signal_w double"
+    "symbol array<string>, n_rows array<long>, "
+    "ema12 array<double>, ema12_have array<boolean>, ema12_w array<double>, "
+    "ema26 array<double>, ema26_have array<boolean>, ema26_w array<double>, "
+    "macd_signal array<double>, macd_signal_have array<boolean>, "
+    "macd_signal_w array<double>"
 )
 OUTPUT_SCHEMA = (
     "symbol string, date_str string, close double, ema12 double, "
     "ema26 double, macd_line double, macd_signal double, "
     "macd_histogram double, n_rows long"
 )
+# a key first seen: no rows yet, each EMA's fresh state triple (what
+# ema_recurrence_state starts from when given no state)
+_FRESH = (0, *(np.nan, False, 1.0) * 3)
 
 
-def _macd_batch(
-    key: Tuple[Any, ...],
-    pdfs: Iterable[pd.DataFrame],
-    stored: Tuple[Any, ...] | None,
+def _fold_macd(
+    pdf: pd.DataFrame,
+    stored: Tuple[Sequence[Any], ...] | None,
+    key_col: str = "symbol",
     order_cols: Sequence[str] = ("date_str",),
     close_col: str = "close",
-) -> Tuple[pd.DataFrame, Tuple[Any, ...]]:
-    """One key's micro-batch of the delta-feed MACD: sort the rows, resume
-    the recurrence from ``stored`` (a ``STATE_SCHEMA`` row, ``None`` for a
-    new key), check the delta-feed contract, and return the
+) -> Tuple[pd.DataFrame, Tuple[list, ...]]:
+    """One micro-batch of the delta-feed MACD for the keys of ``pdf``:
+    sort the rows by (key, order), resume each key's recurrence from its
+    carry in ``stored`` (a ``STATE_SCHEMA`` row, ``None`` for an empty
+    bucket), check the delta-feed contract per key, and return one
     ``OUTPUT_SCHEMA`` frame with the state row to store. The state
-    triples go in and out of ``macd_recurrence_state`` unchanged. An
-    empty batch carries the state through unchanged."""
-    n_prev, *flat = stored if stored is not None else (0,)
-    seed = tuple(tuple(flat[i : i + 3]) for i in (0, 3, 6)) if flat else None
-    pdf = pd.concat(list(pdfs)).sort_values(list(order_cols), kind="mergesort")
+    triples go in and out of ``macd_recurrence_state`` unchanged; keys
+    with no rows in ``pdf`` keep their carry unchanged. A NULL key is
+    one series of its own."""
+    if stored is None:
+        stored = ((),) * (1 + len(_FRESH))
+    state = [list(c) for c in stored]
+    keys, n_rows, *carry = state
+    slot = {k: i for i, k in enumerate(keys)}
+    pdf = pdf.sort_values([key_col, *order_cols], kind="mergesort")
     close = pdf[close_col].to_numpy(dtype=np.float64)
-    (e12, e26, line, sig), st = macd_recurrence_state(close, seed)
-    n_total = n_prev + len(close)
-    # Delta-feed contract guard: when the upstream (quotefeed_deltas)
-    # rides the snapshot length along, the cumulative bar count this
-    # state has absorbed must equal the latest snapshot's length —
-    # they diverge exactly when the stream was started with numBars>1
-    # (the first numBars-1 bars never entered state) and the MACD
-    # would silently continue from the wrong seed.
-    if "snapshot_n" in pdf.columns:
-        expected = int(pdf["snapshot_n"].iloc[-1])
+    key_vals = pdf[key_col].to_numpy()
+    snap = pdf["snapshot_n"].to_numpy() if "snapshot_n" in pdf.columns else None
+    n = len(close)
+    # the sorted rows of one key are contiguous; NULL keys share a code
+    codes = pd.factorize(key_vals, use_na_sentinel=False)[0]
+    starts = np.flatnonzero(np.diff(codes)) + 1
+    bounds = zip([0, *starts.tolist()], [*starts.tolist(), n]) if n else ()
+    e12, e26, line, sig = (np.empty(n) for _ in range(4))
+    n_out = np.empty(n, dtype=np.int64)
+    for lo, hi in bounds:
+        # a NULL key is stored as None, whatever null its column holds
+        key = None if pd.isna(key_vals[lo]) else key_vals[lo]
+        i = slot.get(key)
+        if i is None:
+            i = slot[key] = len(keys)
+            keys.append(key)
+            for col, v in zip(state[1:], _FRESH):
+                col.append(v)
+        seed = tuple(
+            (carry[j][i], carry[j + 1][i], carry[j + 2][i]) for j in (0, 3, 6)
+        )
+        outs, st = macd_recurrence_state(close[lo:hi], seed)
+        e12[lo:hi], e26[lo:hi], line[lo:hi], sig[lo:hi] = outs
+        n_total = n_rows[i] + (hi - lo)
+        # Delta-feed contract guard: when the upstream (quotefeed_deltas)
+        # rides the snapshot length along, the cumulative bar count this
+        # state has absorbed must equal the latest snapshot's length —
+        # they diverge exactly when the stream was started with numBars>1
+        # (the first numBars-1 bars never entered state) and the MACD
+        # would silently continue from the wrong seed.
+        expected = n_total if snap is None else int(snap[hi - 1])
         if n_total != expected:
             raise ValueError(
-                f"running_macd[{key[0]}]: cumulative bars seen "
+                f"running_macd[{key}]: cumulative bars seen "
                 f"({n_total}) != upstream snapshot length ({expected}). "
                 "quotefeed_deltas requires the stream to start with "
                 "numBars=1 so every bar enters state exactly once."
             )
+        n_rows[i] = n_total
+        n_out[lo:hi] = n_total
+        for col, f in zip(carry, (f for triple in st for f in triple)):
+            col[i] = f
     frame = pd.DataFrame(
         {
-            "symbol": key[0],
+            key_col: key_vals,
             **{c: pdf[c].to_numpy() for c in order_cols},
             "close": close,
             "ema12": e12,
@@ -92,10 +144,10 @@ def _macd_batch(
             "macd_line": line,
             "macd_signal": sig,
             "macd_histogram": line - sig,
-            "n_rows": np.int64(n_total),
+            "n_rows": n_out,
         }
     )
-    return frame, (n_total, *(f for triple in st for f in triple))
+    return frame, tuple(state)
 
 
 def _update_macd(
@@ -103,7 +155,9 @@ def _update_macd(
     pdfs: Iterator[pd.DataFrame],
     state: GroupState,
 ) -> Iterator[pd.DataFrame]:
-    frame, stored = _macd_batch(key, pdfs, state.get if state.exists else None)
+    frame, stored = _fold_macd(
+        pd.concat(list(pdfs)), state.get if state.exists else None
+    )
     state.update(stored)
     yield frame
 
@@ -115,28 +169,35 @@ def quotefeed_deltas(raw: DataFrame) -> DataFrame:
 
     Start the stream at ``numBars=1``: cycle c's snapshot then carries
     bars 0..c and exactly the LAST bar is new each cycle, so a
-    stateless tail projection (``element_at(historical_data, -1)``)
+    stateless tail projection (the last element of ``historical_data``)
     turns the snapshot stream into a pure per-bar delta feed — no
     dedup state, no batch_id branching. The contract is ENFORCED, not
     just documented: the snapshot length rides along as ``snapshot_n``
     and :func:`running_macd`'s state kernel raises when its cumulative
     bar count diverges from it (which happens exactly when the stream
-    was started with numBars>1 and earlier bars never entered state). This is the transport shape the
-    module docstring argues for at 100 TB: the reference re-ships the
-    full history every poll (spark/stock_analysis.py:57-78); here only
-    the new bar crosses the wire into the stateful MACD.
+    was started with numBars>1 and earlier bars never entered state).
+    A message that failed to parse or has an empty history is dropped.
+    This is the transport shape the module docstring argues for at
+    100 TB: the reference re-ships the full history every poll
+    (spark/stock_analysis.py:57-78); here only the new bar crosses the
+    wire into the stateful MACD.
     """
-    from pyspark.sql import functions as F
-
     from ..operators.parse import parse_history_messages
 
     msgs = parse_history_messages(raw, value_col="message")
-    last = F.element_at(F.col("historical_data"), -1)
+    # exploding the one-bar tail drops a message that failed to parse
+    # (NULL history) or carries no bars, as explode_history does on the
+    # snapshot path; a Filter instead would be pushed below the parse
+    # and parse every message twice
     return msgs.select(
         "symbol",
-        last.getField("time").alias("date_str"),
-        last.getField("close").alias("close"),
+        F.explode(F.slice("historical_data", -1, 1)).alias("last"),
         F.size("historical_data").cast("long").alias("snapshot_n"),
+    ).select(
+        "symbol",
+        F.col("last.time").alias("date_str"),
+        F.col("last.close").alias("close"),
+        "snapshot_n",
     )
 
 
@@ -146,11 +207,16 @@ def running_macd(deltas: DataFrame) -> DataFrame:
     Streaming-only (applyInPandasWithState is unsupported in batch
     queries — the batch equivalent is the stateless
     operators.indicators/with_macd kernel, which this reproduces
-    bit-for-bit). Rows within a batch are ordered by ``date_str``; feed batches in
+    bit-for-bit). Groups on the key's state bucket (``_state_bucket``,
+    see the module docstring); each symbol is still its own series.
+    Rows within a batch are ordered by ``date_str``; feed batches in
     event order (the delta-feed contract — late rows belong in a
     watermarked upstream dedup, not here).
     """
-    return deltas.groupBy("symbol").applyInPandasWithState(
+    bucket = F.pmod(F.xxhash64("symbol"), F.lit(STATE_BUCKETS))
+    return deltas.withColumn("_state_bucket", bucket).groupBy(
+        "_state_bucket"
+    ).applyInPandasWithState(
         _update_macd,
         outputStructType=OUTPUT_SCHEMA,
         stateStructType=STATE_SCHEMA,
@@ -170,9 +236,9 @@ def replay_macd_in_batches(
     certification surface for the module's bit-exactness claim.
 
     Per key, the ordered series is split into ``n_batches`` contiguous
-    chunks and folded chunk-by-chunk through :func:`_macd_batch`, the
-    same call :func:`running_macd` makes per micro-batch, with the
-    previous chunk's stored state row. The concatenated output must
+    chunks and folded chunk-by-chunk through :func:`_fold_macd`, the
+    helper :func:`running_macd` runs per micro-batch and bucket, with
+    the previous chunk's stored state row. The concatenated output must
     equal the uninterrupted one-shot kernel
     (``operators.indicators.with_macd``) bit for bit, NULL closes and
     a NaN run ending a chunk included —
@@ -198,10 +264,12 @@ def replay_macd_in_batches(
     def kernel(key, pdf):
         pdf = pdf.sort_values(list(order_cols), kind="mergesort")
         n, stored, frames = len(pdf), None, []
+        # a group is one key, so its first key column is constant and
+        # each chunk folds as one series
         for b in range(n_batches):
             chunk = pdf.iloc[(n * b) // n_batches : (n * (b + 1)) // n_batches]
-            frame, stored = _macd_batch(
-                key, [chunk], stored, order_cols, close_col
+            frame, stored = _fold_macd(
+                chunk, stored, key_cols[0], order_cols, close_col
             )
             frames.append(frame[macd_cols])
         macd = pd.concat(frames, ignore_index=True)

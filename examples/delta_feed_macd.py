@@ -11,14 +11,18 @@ in streaming/stateful.py:
 
   quotefeed readStream (numBars=1)          # engine-native poll source
     -> quotefeed_deltas                     # stateless: last bar only
-    -> running_macd (applyInPandasWithState)  # EMA state across batches
+    -> running_macd (applyInPandasWithState)  # EMA state across batches,
+                                            # one state row per key bucket
     -> memory sink
 
 and then proves the point of the design: after N poll cycles, the
 streamed per-bar MACD values equal the batch kernel (functions/ema
 macd_columns) run over the full N-bar history — EXACTLY, not
 approximately, because the EMA recurrence's state at a batch boundary
-fully captures its history.
+fully captures its history. The state is grouped by a fixed hash bucket
+of the symbol (``STATE_BUCKETS``), so each micro-batch makes one Python
+call per bucket, whatever the number of symbols; each symbol is still
+its own series.
 """
 
 from __future__ import annotations

@@ -74,6 +74,29 @@ def test_snapshot_plan_one_exchange_one_kernel(spark, tmp_path):
     assert "lag(" not in s, s
 
 
+def test_delta_plan_one_stateful_operator_on_bucket(spark, tmp_path):
+    """The delta-feed plan: one FlatMapGroupsInPandasWithState, grouped
+    (and hash-partitioned) on the state-bucket column, not on the
+    symbol — one Python call per bucket, not per key."""
+    import re
+
+    from airflow_kafka_spark_spark.streaming.stateful import (
+        quotefeed_deltas,
+        running_macd,
+    )
+
+    src = spark.readStream.schema(
+        "symbol string, current_price double, message string"
+    ).parquet(str(tmp_path))
+    s = _explain(running_macd(quotefeed_deltas(src)))
+    assert s.count("FlatMapGroupsInPandasWithState") == 1, s
+    assert re.search(
+        r"FlatMapGroupsInPandasWithState \w+\([^)]*\)#\d+, \[_state_bucket#\d+L\], ",
+        s,
+    ), s
+    assert re.search(r"Exchange hashpartitioning\(_state_bucket#\d+L, ", s), s
+
+
 def test_fixed_point_sums_long_partials_before_shuffle(spark):
     """The scaled-BIGINT sum's whole point: primitive-long accumulation
     happens map-side (the (keys, partition-id) grouping never shuffles —
