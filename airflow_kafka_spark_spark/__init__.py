@@ -22,4 +22,6 @@ reference's driver-side pandas detour (reference spark/stock_analysis.py:153
 ``toPandas()`` inside ``foreachBatch``) is deliberately not reproduced.
 """
 
+from . import _zipimport_cache  # noqa: F401  (Python-worker per-task cost)
+
 __version__ = "0.1.0"

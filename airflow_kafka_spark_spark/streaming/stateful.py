@@ -32,7 +32,13 @@ each bucket it touches — about keys / ``STATE_BUCKETS`` carries: ~31 at
 2,000 symbols (~5.6 KB a row in the state store's memory), ~16,000
 (~3 MB) at 10^6. A key space far past that wants more buckets;
 ``STATE_BUCKETS`` is part of the checkpoint's layout, so changing it
-(like the earlier per-key layout) starts a new checkpoint.
+(like the earlier per-key layout) starts a new checkpoint. Each task of
+the stateful stage also pays a fixed Python-worker cost whatever its
+buckets hold: the worker invalidates its import caches at every task
+start, which re-read the directories of pyspark.zip and two other
+archives 16-18 times a task on CPython < 3.13 until the package's
+``_zipimport_cache`` made the re-read conditional on the archive
+changing.
 """
 
 from __future__ import annotations
