@@ -5,7 +5,7 @@ aggregate). The reference computes it with pandas ``ewm(span=N,
 adjust=False)`` on the driver (reference spark/stock_analysis.py:186-190);
 here the identical recurrence runs on *executors*, inside the
 partition-sorted ``mapInArrow`` kernel (``operators.indicators.with_macd``)
-and the streaming state processors (``streaming.stateful``):
+and the delta-feed state (``streaming.stateful``):
 
     alpha = 2 / (span + 1)
     y[0]  = x[0]
@@ -17,10 +17,13 @@ DuckDB recursive-CTE oracle, which evaluates the same expression shape.
 pandas ``ewm(adjust=False)`` computes the same recurrence to within 1 ULP
 per step (unit-tested).
 
-:func:`macd_recurrence_state` is the one owner of how MACD state crosses a
-boundary (Arrow batch, micro-batch, replay chunk); every caller goes
-through it and carries the terminal state it returns verbatim. Scale
-note: state is per-key and sequential *within* a key only; keys are
+:func:`macd_recurrence_state` defines the MACD state a series carries
+across a boundary (Arrow batch, micro-batch, replay chunk).
+``operators.indicators.resume_runs`` is the one step that carries it:
+the Arrow kernel, the delta-feed state and its replay all fold their key
+runs through that step, which keeps the terminal state verbatim next to
+the row count and the tail of closes the windowed indicators need.
+Scale note: state is per-key and sequential *within* a key only; keys are
 hash-distributed, so a 1000-executor cluster runs every key's recurrence
 concurrently, Arrow-batched, with no driver involvement.
 """

@@ -16,11 +16,14 @@ zero-copy) and appends the requested columns:
   min_periods); NaN stays NaN.
 - EMA/MACD: the recurrence of :mod:`..functions.ema`, once per key run.
 
-A key's series may span Arrow batches: the kernel carries the trailing
-key's last 19 closes with their validity (enough for MA20 and the RSI's
-gains) and its MACD recurrence state into the next batch, so memory is
-one batch plus that tail and the result does not depend on
-``maxRecordsPerBatch``.
+A key's series may span Arrow batches. Each batch goes through
+:func:`resume_runs`, the one resumable step, which folds every key run
+from a carry: the key's row count, its MACD recurrence state and its
+last 19 closes with their validity (enough for MA20 and the RSI's
+gains). The kernel hands the trailing key's carry to the next batch, so
+memory is one batch plus that tail and the result does not depend on
+``maxRecordsPerBatch``. The delta feed (``streaming.stateful``) folds
+its micro-batches through the same step.
 
 ``with_indicators`` computes all six columns in the one pass; each of
 ``with_moving_averages``, ``with_rsi`` and ``with_macd`` is the same
@@ -43,8 +46,13 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..functions.ema import macd_recurrence_state
+
 MA_PERIODS = (5, 20)
 RSI_PERIOD = 14
+# closes a key carries across a boundary: MA20's 19 lags, and the RSI's
+# 14 gains, whose oldest delta reads one close further back
+N_TAIL = max(max(MA_PERIODS) - 1, RSI_PERIOD)
 MACD_FIELDS = [
     T.StructField("macd_line", T.DoubleType()),
     T.StructField("macd_signal", T.DoubleType()),
@@ -90,10 +98,10 @@ def with_macd(
     group, and at large key counts that per-group overhead, not the
     math, dominates (r16: ~0.4 s of pure per-group overhead over 1500
     groups at sf0.1). The kernel instead streams whole sorted batches
-    and resumes a key that spans batches from the carried recurrence
-    state (:func:`..functions.ema.macd_recurrence_state` — value,
-    have-state, pending NaN-gap weight per EMA), bit-identical to a
-    one-shot run."""
+    and resumes a key that spans batches through :func:`resume_runs`
+    from the carried recurrence state
+    (:func:`..functions.ema.macd_recurrence_state` — value, have-state,
+    pending NaN-gap weight per EMA), bit-identical to a one-shot run."""
     return _indicator_pass(
         df, key_cols, order_cols, close_col, "with_macd", macd=True
     )
@@ -148,6 +156,65 @@ def _rsi(
     return 100.0 - 100.0 / denom, valid & (denom != 0)
 
 
+def resume_runs(
+    x: np.ndarray, ok: np.ndarray, bounds, carries, ma=False, rsi=False, macd=False
+) -> tuple[list, tuple, list]:
+    """The one resumable indicator step: fold each key run of a sorted
+    series from its carry, and return each run's next carry.
+
+    ``x``/``ok``: the closes (float64, NULL as NaN) and their validity,
+    sorted by (key, order). ``bounds``: the run starts, then ``len(x)``.
+    ``carries``: per run ``None`` (a key's first rows) or ``(n_rows,
+    macd_state, tail_x, tail_ok)``: the key's rows so far, its
+    :func:`..functions.ema.macd_recurrence_state` triple (``None`` while
+    no pass asked for MACD) and, for ``ma``/``rsi``, its last ≤ ``N_TAIL``
+    closes with their validity (else ``()``). Returns the ``(values,
+    valid)`` pairs of ma5, ma20 (``ma``) and rsi (``rsi``), the four MACD
+    arrays (``()`` unless ``macd``) and the new carries, whose counts and
+    states are Python scalars, as a state store needs. Folding chunk by
+    chunk gives the bits of one call over the whole series."""
+    edges = np.asarray(bounds).tolist()
+    lens = np.diff(edges).tolist()
+    seen = [0 if c is None else c[0] for c in carries]
+    total = [n + m for n, m in zip(seen, lens)]
+    windows, tails = [], [((), ())] * len(lens)
+    if ma or rsi:
+        # rows since the key's first row, the carried ones included
+        pos = np.arange(len(x)) - np.repeat(np.subtract(edges[:-1], seen), lens)
+        # each run resumes behind its carried tail, inserted before it
+        tail = [((), ()) if c is None else c[2:] for c in carries]
+        at = np.repeat(np.array(edges[:-1], np.intp), [len(t) for t, _ in tail])
+
+        def resumed(a, pieces):
+            return np.insert(a, at, np.concatenate([(), *pieces]))
+
+        x_e = resumed(x, [t for t, _ in tail])
+        ok_e = resumed(ok, [m for _, m in tail])
+        pos_e = resumed(
+            pos, [n - len(t) + np.arange(len(t)) for n, (t, _) in zip(seen, tail)]
+        )
+        keep = resumed(np.ones(len(x), bool), [np.zeros(len(t)) for t, _ in tail])
+        with np.errstate(divide="ignore", invalid="ignore"):
+            out = [_rolling_mean(x_e, ok_e, pos_e, p) for p in MA_PERIODS] if ma else []
+            out += [_rsi(x_e, ok_e, pos_e)] if rsi else []
+        windows = [(v[keep], m[keep]) for v, m in out]
+        # the next tail: the run's last N_TAIL closes, carried ones included
+        ends = np.flatnonzero(keep)[np.array(edges[1:], np.intp) - 1] + 1
+        firsts = ends - np.minimum(N_TAIL, total)
+        tails = [
+            (x_e[a:b].copy(), ok_e[a:b].copy())
+            for a, b in zip(firsts.tolist(), ends.tolist())
+        ]
+    states = [None if c is None else c[1] for c in carries]
+    cols = ()
+    if macd:
+        cols = np.empty((4, len(x)))
+        for j, (s, e) in enumerate(zip(edges, edges[1:])):
+            cols[:, s:e], states[j] = macd_recurrence_state(x[s:e], states[j])
+    new = [(n, st, *tail) for n, st, tail in zip(total, states, tails)]
+    return windows, tuple(cols), new
+
+
 def _indicator_pass(
     df: DataFrame,
     key_cols: list[str],
@@ -170,8 +237,6 @@ def _indicator_pass(
     import pyarrow as pa
     import pyarrow.compute as pc
 
-    from ..functions.ema import macd_recurrence_state
-
     new_fields = []
     if ma:
         new_fields += [T.StructField(f"ma{n}", T.DoubleType()) for n in MA_PERIODS]
@@ -188,18 +253,12 @@ def _indicator_pass(
         for c in key_cols
         if isinstance(df.schema[c].dataType, (T.DoubleType, T.FloatType))
     ]
-    # closes a key carries into the next batch: MA20's 19 lags, and the
-    # RSI's 14 gains, whose oldest delta reads one close further back
-    n_tail = max(max(MA_PERIODS) - 1, RSI_PERIOD)
-
     df = df.repartition(*[F.col(c) for c in key_cols]).sortWithinPartitions(
         *(list(key_cols) + list(order_cols))
     )
 
     def kernel(batches):
-        cur_key = st = None  # the trailing key and its MACD state
-        seen = 0  # rows of cur_key before this batch
-        tail_x, tail_ok = np.empty(0), np.empty(0, dtype=bool)
+        key = carry = None  # the trailing key and its carry
         for batch in batches:
             n = batch.num_rows
             if n == 0:
@@ -225,54 +284,21 @@ def _indicator_pass(
                         zero_copy_only=False
                     )
             bounds = np.concatenate([[0], np.flatnonzero(change), [n]])
-            first_key = tuple(batch.column(i)[0].as_py() for i in k_idx)
-            cont = first_key == cur_key
-            # rows since the key's first row, counting earlier batches
-            row = np.arange(n)
-            pos = row - np.maximum.accumulate(np.where(change, row, 0))
-            if cont:
-                pos[: bounds[1]] += seen
-                n_prev = len(tail_x)
-                x_ext = np.concatenate([tail_x, x])
-                ok_ext = np.concatenate([tail_ok, ok])
-                pos_ext = np.concatenate([seen - n_prev + np.arange(n_prev), pos])
-            else:
-                n_prev, x_ext, ok_ext, pos_ext = 0, x, ok, pos
-
-            out = []
-            with np.errstate(divide="ignore", invalid="ignore"):
-                if ma:
-                    out += [
-                        _rolling_mean(x_ext, ok_ext, pos_ext, p) for p in MA_PERIODS
-                    ]
-                if rsi:
-                    out.append(_rsi(x_ext, ok_ext, pos_ext))
+            first = tuple(batch.column(i)[0].as_py() for i in k_idx)
+            carries = [carry if first == key else None] + [None] * (len(bounds) - 2)
+            windows, cols, new = resume_runs(x, ok, bounds, carries, ma, rsi, macd)
             # explicit mask: NULL where undefined, NaN stays NaN
-            arrays = [
-                pa.array(vals[n_prev:], type=pa.float64(), mask=~valid[n_prev:])
-                for vals, valid in out
-            ]
-
+            arrays = [pa.array(v, type=pa.float64(), mask=~m) for v, m in windows]
             if macd:
-                line_out = np.empty(n, dtype=np.float64)
-                sig_out = np.empty(n, dtype=np.float64)
-                for j, (s, e) in enumerate(zip(bounds[:-1], bounds[1:])):
-                    if j or not cont:
-                        st = None
-                    (_, _, line, sg), st = macd_recurrence_state(x[s:e], st)
-                    line_out[s:e], sig_out[s:e] = line, sg
+                _, _, line, sig = cols
                 # from_pandas=True: NaN → NULL (DoubleType NULL, not NaN,
                 # for undefined rows)
                 arrays += [
                     pa.array(arr, type=pa.float64(), from_pandas=True)
-                    for arr in (line_out, sig_out, line_out - sig_out)
+                    for arr in (line, sig, line - sig)
                 ]
-
-            cur_key = tuple(batch.column(i)[n - 1].as_py() for i in k_idx)
-            seen = int(pos[-1]) + 1
-            keep = min(n_tail, seen)
-            tail_x = x_ext[len(x_ext) - keep:].copy()
-            tail_ok = ok_ext[len(ok_ext) - keep:].copy()
+            key = tuple(batch.column(i)[n - 1].as_py() for i in k_idx)
+            carry = new[-1]
             for f, arr in zip(new_fields, arrays):
                 batch = batch.append_column(f.name, arr)
             yield batch

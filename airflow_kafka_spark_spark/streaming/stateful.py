@@ -16,14 +16,17 @@ an output frame) once per bucket it touches, not once per symbol. A
 bucket's state row (``STATE_SCHEMA``) holds its keys' carries as
 parallel arrays: the key, its bar count and, per EMA, the state triple
 ``functions.ema.ema_recurrence_state`` returns (value, have-state flag,
-pending NaN-gap weight). That triple is the carry the batch kernel
-(``operators.indicators.with_macd``) passes across Arrow batches, kept
-verbatim, so the continuation is *bit-exact* with the uninterrupted
-series, a NaN run across a micro-batch boundary included
-(tests/test_stateful.py). The state store checkpoints with the query,
+pending NaN-gap weight). Count and triples are the MACD part of the
+carry of ``operators.indicators.resume_runs``, the one resumable step
+the batch kernel (``operators.indicators.with_macd``) also folds its
+Arrow batches through. :func:`_fold_macd` sorts a micro-batch, hands
+every key run to that step with its stored carry and stores what the
+step returns, verbatim, so the continuation is *bit-exact* with the
+uninterrupted series, a NaN run across a micro-batch boundary and a
+NULL order key included (tests/test_stateful.py,
+tests/test_property.py). The state store checkpoints with the query,
 giving exactly-once state evolution on restart. The streaming operator
-and the batch replay that certifies it run one helper,
-:func:`_fold_macd`.
+and the batch replay that certifies it both run :func:`_fold_macd`.
 
 Scale: the stateful operator spreads over at most ``STATE_BUCKETS``
 shards (how many run at once is the shuffle-partition count the
@@ -51,7 +54,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from ..functions.ema import macd_recurrence_state
+from ..operators.indicators import resume_runs
 
 # state rows of running_macd: a key's carry lives in the row of bucket
 # pmod(xxhash64(key), STATE_BUCKETS)
@@ -71,9 +74,6 @@ OUTPUT_SCHEMA = (
     "ema26 double, macd_line double, macd_signal double, "
     "macd_histogram double, n_rows long"
 )
-# a key first seen: no rows yet, each EMA's fresh state triple (what
-# ema_recurrence_state starts from when given no state)
-_FRESH = (0, *(np.nan, False, 1.0) * 3)
 
 
 def _fold_macd(
@@ -84,62 +84,53 @@ def _fold_macd(
     close_col: str = "close",
 ) -> Tuple[pd.DataFrame, Tuple[list, ...]]:
     """One micro-batch of the delta-feed MACD for the keys of ``pdf``:
-    sort the rows by (key, order), resume each key's recurrence from its
-    carry in ``stored`` (a ``STATE_SCHEMA`` row, ``None`` for an empty
-    bucket), check the delta-feed contract per key, and return one
-    ``OUTPUT_SCHEMA`` frame with the state row to store. The state
-    triples go in and out of ``macd_recurrence_state`` unchanged; keys
-    with no rows in ``pdf`` keep their carry unchanged. A NULL key is
-    one series of its own."""
-    if stored is None:
-        stored = ((),) * (1 + len(_FRESH))
-    state = [list(c) for c in stored]
-    keys, n_rows, *carry = state
-    slot = {k: i for i, k in enumerate(keys)}
-    pdf = pdf.sort_values([key_col, *order_cols], kind="mergesort")
+    sort the rows by (key, order), NULL order keys first as Spark sorts
+    them, fold every key run through
+    :func:`..operators.indicators.resume_runs` from its carry in
+    ``stored`` (a ``STATE_SCHEMA`` row, ``None`` for an empty bucket),
+    check the delta-feed contract per key, and return one
+    ``OUTPUT_SCHEMA`` frame with the state row to store. Keys with no
+    rows in ``pdf`` keep their carry unchanged. A NULL key is one series
+    of its own."""
+    # a key's carry as resume_runs takes it: bar count, the
+    # macd_recurrence_state triple, no tail of closes (MACD only)
+    state = {
+        k: (n, (f[0:3], f[3:6], f[6:9]), (), ())
+        for k, n, *f in zip(*(stored or ()))
+    }
+    pdf = pdf.sort_values(
+        [key_col, *order_cols], kind="mergesort", na_position="first"
+    )
     close = pdf[close_col].to_numpy(dtype=np.float64)
     key_vals = pdf[key_col].to_numpy()
-    snap = pdf["snapshot_n"].to_numpy() if "snapshot_n" in pdf.columns else None
-    n = len(close)
     # the sorted rows of one key are contiguous; NULL keys share a code
     codes = pd.factorize(key_vals, use_na_sentinel=False)[0]
-    starts = np.flatnonzero(np.diff(codes)) + 1
-    bounds = zip([0, *starts.tolist()], [*starts.tolist(), n]) if n else ()
-    e12, e26, line, sig = (np.empty(n) for _ in range(4))
-    n_out = np.empty(n, dtype=np.int64)
-    for lo, hi in bounds:
-        # a NULL key is stored as None, whatever null its column holds
-        key = None if pd.isna(key_vals[lo]) else key_vals[lo]
-        i = slot.get(key)
-        if i is None:
-            i = slot[key] = len(keys)
-            keys.append(key)
-            for col, v in zip(state[1:], _FRESH):
-                col.append(v)
-        seed = tuple(
-            (carry[j][i], carry[j + 1][i], carry[j + 2][i]) for j in (0, 3, 6)
-        )
-        outs, st = macd_recurrence_state(close[lo:hi], seed)
-        e12[lo:hi], e26[lo:hi], line[lo:hi], sig[lo:hi] = outs
-        n_total = n_rows[i] + (hi - lo)
-        # Delta-feed contract guard: when the upstream (quotefeed_deltas)
-        # rides the snapshot length along, the cumulative bar count this
-        # state has absorbed must equal the latest snapshot's length —
-        # they diverge exactly when the stream was started with numBars>1
-        # (the first numBars-1 bars never entered state) and the MACD
-        # would silently continue from the wrong seed.
-        expected = n_total if snap is None else int(snap[hi - 1])
-        if n_total != expected:
+    starts = np.flatnonzero(np.diff(codes, prepend=-1))
+    bounds = np.append(starts, len(close))
+    # a NULL key is stored as None, whatever null its column holds
+    keys = [None if pd.isna(k) else k for k in key_vals[starts].tolist()]
+    _, (e12, e26, line, sig), new = resume_runs(
+        close, ~np.isnan(close), bounds, [state.get(k) for k in keys], macd=True
+    )
+    n_rows = np.array([c[0] for c in new], dtype=np.int64)
+    # Delta-feed contract guard: when the upstream (quotefeed_deltas)
+    # rides the snapshot length along, the cumulative bar count this
+    # state has absorbed must equal the latest snapshot's length — they
+    # diverge exactly when the stream was started with numBars>1 (the
+    # first numBars-1 bars never entered state) and the MACD would
+    # silently continue from the wrong seed.
+    if "snapshot_n" in pdf.columns:
+        expected = pdf["snapshot_n"].to_numpy()[bounds[1:] - 1]
+        bad = np.flatnonzero(n_rows != expected)
+        if len(bad):
+            j = bad[0]
             raise ValueError(
-                f"running_macd[{key}]: cumulative bars seen "
-                f"({n_total}) != upstream snapshot length ({expected}). "
+                f"running_macd[{keys[j]}]: cumulative bars seen "
+                f"({n_rows[j]}) != upstream snapshot length ({expected[j]}). "
                 "quotefeed_deltas requires the stream to start with "
                 "numBars=1 so every bar enters state exactly once."
             )
-        n_rows[i] = n_total
-        n_out[lo:hi] = n_total
-        for col, f in zip(carry, (f for triple in st for f in triple)):
-            col[i] = f
+    state.update(zip(keys, new))
     frame = pd.DataFrame(
         {
             key_col: key_vals,
@@ -150,10 +141,11 @@ def _fold_macd(
             "macd_line": line,
             "macd_signal": sig,
             "macd_histogram": line - sig,
-            "n_rows": n_out,
+            "n_rows": np.repeat(n_rows, np.diff(bounds)),
         }
     )
-    return frame, tuple(state)
+    rows = [(k, n, *(f for t in st for f in t)) for k, (n, st, *_) in state.items()]
+    return frame, tuple(map(list, zip(*rows)))
 
 
 def _update_macd(
@@ -241,13 +233,15 @@ def replay_macd_in_batches(
     """Batch-mode replay of the streaming MACD continuation — the
     certification surface for the module's bit-exactness claim.
 
-    Per key, the ordered series is split into ``n_batches`` contiguous
-    chunks and folded chunk-by-chunk through :func:`_fold_macd`, the
-    helper :func:`running_macd` runs per micro-batch and bucket, with
-    the previous chunk's stored state row. The concatenated output must
-    equal the uninterrupted one-shot kernel
-    (``operators.indicators.with_macd``) bit for bit, NULL closes and
-    a NaN run ending a chunk included —
+    Per key, the series ordered as Spark sorts it (NULL order keys
+    first) is split into ``n_batches`` contiguous chunks and folded
+    chunk-by-chunk through :func:`_fold_macd`, the helper
+    :func:`running_macd` runs per micro-batch and bucket, with the
+    previous chunk's stored state row. Both fold through
+    ``operators.indicators.resume_runs``, the step the one-shot kernel
+    (``operators.indicators.with_macd``) runs per Arrow batch, so the
+    concatenated output must equal that kernel bit for bit, NULL closes,
+    a NaN run ending a chunk and NULL order keys included —
     ``running_macd_cert`` pins that equality under the driver's oracle
     hash check.
 
@@ -268,7 +262,9 @@ def replay_macd_in_batches(
         raise ValueError(f"n_batches must be >= 1, got {n_batches}")
 
     def kernel(key, pdf):
-        pdf = pdf.sort_values(list(order_cols), kind="mergesort")
+        pdf = pdf.sort_values(
+            list(order_cols), kind="mergesort", na_position="first"
+        )
         n, stored, frames = len(pdf), None, []
         # a group is one key, so its first key column is constant and
         # each chunk folds as one series

@@ -1146,3 +1146,149 @@ def test_per_pass_normalization_invariant_under_pass_load(
     assert base.keys() == scaled.keys() == {"q"}
     # identical up to the 2dp rounding the function applies
     assert abs(base["q"] - scaled["q"]) <= 0.011, (base, scaled)
+
+
+# ---------------------------------------------------------------------------
+# the resumable indicator step: chunked folding == one call, bit for bit
+# ---------------------------------------------------------------------------
+
+_SPECIALS = [None, float("nan"), float("inf"), float("-inf")]
+
+
+@st.composite
+def _keyed_closes(draw):
+    """1-4 keys of 1-60 closes each: finite values with a few NULL, NaN
+    and ±inf planted, and possibly a NULL run."""
+    series = []
+    for _ in range(draw(st.integers(min_value=1, max_value=4))):
+        n = draw(st.integers(min_value=1, max_value=60))
+        vals = draw(
+            st.lists(
+                st.floats(min_value=-1e3, max_value=1e3, allow_nan=False),
+                min_size=n,
+                max_size=n,
+            )
+        )
+        at = st.integers(min_value=0, max_value=n - 1)
+        specials = st.tuples(at, st.sampled_from(_SPECIALS))
+        for i, v in draw(st.lists(specials, max_size=6)):
+            vals[i] = v
+        lo = draw(at)
+        hi = min(n, lo + draw(st.integers(min_value=0, max_value=6)))
+        vals[lo:hi] = [None] * (hi - lo)
+        series.append(vals)
+    return series
+
+
+def _same_bits(a, b) -> bool:
+    """Equal doubles bit for bit (so -0.0 != 0.0); any NaN equals any
+    NaN (NaN payloads are not part of the contract)."""
+    a, b = np.asarray(a, dtype=np.float64), np.asarray(b, dtype=np.float64)
+    nan = np.isnan(a)
+    return (
+        a.shape == b.shape
+        and np.array_equal(nan, np.isnan(b))
+        and a[~nan].tobytes() == b[~nan].tobytes()
+    )
+
+
+def _same_carry(c, d) -> bool:
+    """Equal carries: row count, MACD state triples (``None`` before
+    any MACD ran) and tail, bit for bit."""
+    (n, st_c, tx, tok), (m, st_d, ty, tol) = c, d
+    flat = [[f for t in s or () for f in t] for s in (st_c, st_d)]
+    return (
+        n == m
+        and _same_bits(*flat)
+        and _same_bits(tx, ty)
+        and np.array_equal(np.asarray(tok, bool), np.asarray(tol, bool))
+    )
+
+
+def _fold(keys, x, ok, chunks, carry, flags):
+    """Fold the series (sorted by key, then order) through resume_runs
+    one chunk at a time, a chunk being sorted row indices; ``carry``
+    maps key -> carry and is updated in place. Returns the columns in
+    row order, each as ``(values, valid)``, ``valid`` None for MACD."""
+    from airflow_kafka_spark_spark.operators.indicators import resume_runs
+
+    cols = None
+    for idx in chunks:
+        k = keys[idx]
+        starts = np.flatnonzero(np.diff(k, prepend=-1))
+        run_keys = k[starts].tolist()
+        windows, macd, new = resume_runs(
+            x[idx], ok[idx], np.append(starts, len(idx)),
+            [carry.get(r) for r in run_keys], **flags,
+        )
+        carry.update(zip(run_keys, new))
+        parts = [a for pair in windows for a in pair] + list(macd)
+        if cols is None:
+            cols = [np.empty(len(x), a.dtype) for a in parts]
+        for col, a in zip(cols, parts):
+            col[idx] = a
+    n_win = 2 * (2 * flags["ma"] + flags["rsi"])
+    return list(zip(cols[:n_win:2], cols[1:n_win:2])) + [
+        (c, None) for c in cols[n_win:]
+    ]
+
+
+@given(
+    closes=_keyed_closes(),
+    data=st.data(),
+    ma=st.booleans(),
+    rsi=st.booleans(),
+    macd=st.booleans(),
+)
+@settings(max_examples=200, deadline=None)
+def test_resume_runs_chunked_equals_one_call(closes, data, ma, rsi, macd):
+    """Folding a multi-key series with NULL, NaN and ±inf closes through
+    operators.indicators.resume_runs chunk by chunk, each chunk from the
+    carries the one before returned, gives one call's ma5/ma20/rsi and
+    four MACD arrays bit for bit, the same validity and the same final
+    carries. Chunks are the Arrow-batch shape (contiguous, cut at
+    random, inside NULL runs, at key boundaries, or after every row) or
+    the micro-batch shape (every key's next rows at once, so many runs
+    resume in one call). That is the promise the Arrow-batch kernel,
+    the delta-feed state and its replay rest on."""
+    keys = np.repeat(np.arange(len(closes)), [len(c) for c in closes])
+    flat = [v for c in closes for v in c]
+    x = np.array([np.nan if v is None else v for v in flat], dtype=np.float64)
+    ok = np.array([v is not None for v in flat])
+    n = len(x)
+    # each row's position within its key: a micro-batch takes a range
+    t = np.concatenate([np.arange(len(c)) for c in closes])
+    inner = list(range(1, n))
+    random_cuts = data.draw(st.sets(st.sampled_from(inner))) if inner else set()
+    times = sorted(data.draw(st.sets(st.integers(min_value=1, max_value=59))))
+    cuts = {
+        "random": random_cuts,
+        "null_runs": {i for i in inner if not ok[i - 1]},
+        "key_bounds": set((np.flatnonzero(np.diff(keys)) + 1).tolist()),
+        "rows": set(inner),
+    }
+    shapes = {
+        name: np.split(np.arange(n), sorted(c)) for name, c in cuts.items()
+    }
+    shapes["micro_batches"] = [
+        np.flatnonzero((t >= lo) & (t < hi))
+        for lo, hi in zip([0, *times], [*times, 60])
+    ]
+    flags = {"ma": ma, "rsi": rsi, "macd": macd}
+    one_carry: dict = {}
+    with np.errstate(invalid="ignore"):  # inf - inf in the MACD line
+        want = _fold(keys, x, ok, [np.arange(n)], one_carry, flags)
+    assert len(want) == 2 * ma + rsi + 4 * macd
+    for shape, chunks in shapes.items():
+        carry: dict = {}
+        with np.errstate(invalid="ignore"):
+            got = _fold(keys, x, ok, [c for c in chunks if len(c)], carry, flags)
+        for (gv, gm), (wv, wm) in zip(got, want):
+            if wm is None:
+                assert _same_bits(gv, wv), shape
+            else:
+                assert np.array_equal(gm, wm), shape
+                assert _same_bits(gv[gm], wv[wm]), shape
+        assert carry.keys() == one_carry.keys(), shape
+        for k in carry:
+            assert _same_carry(carry[k], one_carry[k]), (shape, k)

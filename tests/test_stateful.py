@@ -84,6 +84,40 @@ def _run_to_memory(stream_df, name, ckpt):
     return q
 
 
+def _three_batch_source(spark, workdir, closes):
+    """Write ``closes`` (symbol -> 12 closes, None for NULL) as three
+    files of bars 0-3, 4-7 and 8-11, oldest first, and return the source
+    directory."""
+    src = os.path.join(workdir, "in")
+    os.makedirs(src)
+    for i, (lo, hi) in enumerate(((0, 4), (4, 8), (8, 12))):
+        rows = [
+            (s, f"2024-01-{d + 1:02d}", c[d])
+            for s, c in closes.items()
+            for d in range(lo, hi)
+        ]
+        _add_parquet_file(spark, workdir, src, f"b{i}", rows, DELTA_DDL,
+                          time.time() - 100 + i * 10)
+    return src
+
+
+def _stored_carries(spark, ckpt):
+    """The checkpoint's state store read back as a batch: one row per
+    symbol (its ``_state_bucket``, then the ``STATE_SCHEMA`` fields),
+    sorted by symbol."""
+    from pyspark.sql import functions as F
+
+    from airflow_kafka_spark_spark.streaming.stateful import STATE_SCHEMA
+
+    fields = [f.split()[0] for f in STATE_SCHEMA.split(", ")]
+    return (
+        spark.read.format("statestore").load(ckpt)
+        .select("key._state_bucket", "value.groupState.*")
+        .select("_state_bucket", F.inline(F.arrays_zip(*fields)))
+        .toPandas().sort_values("symbol").reset_index(drop=True)
+    )
+
+
 def test_running_macd_across_microbatches(spark):
     """Two file-source micro-batches == one batch kernel run, exactly."""
     rng = np.random.default_rng(11)
@@ -129,8 +163,9 @@ def test_running_macd_independent_of_shuffle_partitions(spark):
     """A key's state bucket is a hash of the key, not of the partition
     layout: two fresh queries over the same three files, one at 1
     shuffle partition and one at 4, emit identical rows, bit-equal to
-    the batch kernel (a NULL-close run crossing a batch included), and
-    keep one state row per bucket, not per symbol."""
+    the batch kernel (a NULL-close run crossing a batch included), keep
+    one state row per bucket, not per symbol, and store the same carry
+    for every symbol."""
     from pyspark.sql import functions as F
 
     from airflow_kafka_spark_spark.streaming.stateful import STATE_BUCKETS
@@ -140,16 +175,10 @@ def test_running_macd_independent_of_shuffle_partitions(spark):
     closes["S07"][3:6] = np.nan  # crosses batch 0 -> 1
 
     workdir = tempfile.mkdtemp()
-    src = os.path.join(workdir, "in")
-    os.makedirs(src)
-    for i, (lo, hi) in enumerate(((0, 4), (4, 8), (8, 12))):
-        rows = [
-            (s, f"2024-01-{d + 1:02d}", None if np.isnan(c[d]) else float(c[d]))
-            for s, c in closes.items()
-            for d in range(lo, hi)
-        ]
-        _add_parquet_file(spark, workdir, src, f"b{i}", rows, DELTA_DDL,
-                          time.time() - 100 + i * 10)
+    src = _three_batch_source(spark, workdir, {
+        s: [None if np.isnan(v) else float(v) for v in c]
+        for s, c in closes.items()
+    })
 
     buckets = (
         spark.createDataFrame([(s,) for s in closes], "symbol string")
@@ -158,7 +187,7 @@ def test_running_macd_independent_of_shuffle_partitions(spark):
         .count()
     )
     prev = spark.conf.get("spark.sql.shuffle.partitions")
-    outs = {}
+    outs, states = {}, {}
     for n in (1, 4):
         spark.conf.set("spark.sql.shuffle.partitions", str(n))
         try:
@@ -177,13 +206,65 @@ def test_running_macd_independent_of_shuffle_partitions(spark):
             spark.sql(f"SELECT * FROM macd_parts_{n}").toPandas()
             .sort_values(["symbol", "date_str"]).reset_index(drop=True)
         )
+        states[n] = _stored_carries(spark, os.path.join(workdir, f"ckpt{n}"))
     assert len(outs[1]) == 60 * 12
     pd.testing.assert_frame_equal(outs[1], outs[4], check_exact=True)
+    assert len(states[1]) == 60
+    pd.testing.assert_frame_equal(states[1], states[4], check_exact=True)
     for s, part in outs[1].groupby("symbol"):
         line, sig, hist = macd_columns(closes[s])
         assert np.array_equal(part["macd_line"].to_numpy(), line, equal_nan=True), s
         assert np.array_equal(part["macd_signal"].to_numpy(), sig, equal_nan=True), s
         assert np.array_equal(part["macd_histogram"].to_numpy(), hist, equal_nan=True), s
+
+
+def test_running_macd_checkpoint_state_equals_history(spark):
+    """What the state store holds, read back from the checkpoint with
+    ``format("statestore")``: after three micro-batches, the second
+    ending inside a NaN run and inside a NULL run, every symbol's bar
+    count and nine carry fields are the terminal macd_recurrence_state
+    of its whole history, bit for bit, in the row of bucket
+    ``pmod(xxhash64(symbol), STATE_BUCKETS)``."""
+    from pyspark.sql import functions as F
+
+    from airflow_kafka_spark_spark.streaming.stateful import STATE_BUCKETS
+
+    rng = np.random.default_rng(41)
+    closes = {f"S{i:02d}": rng.uniform(10, 100, size=12) for i in range(40)}
+    closes["S03"][6:10] = np.nan  # float NaN, crosses batch 1 -> 2
+    closes["S05"][5:9] = np.nan   # written as NULL, crosses batch 1 -> 2
+    closes["S09"][7:] = np.nan    # NaN to the end
+    workdir = tempfile.mkdtemp()
+    src = _three_batch_source(spark, workdir, {
+        s: [None if s == "S05" and np.isnan(v) else float(v) for v in c]
+        for s, c in closes.items()
+    })
+    ckpt = os.path.join(workdir, "ckpt")
+    stream = (
+        spark.readStream.schema(DELTA_DDL)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(src)
+    )
+    q = _run_to_memory(running_macd(stream), "macd_ckpt_state", ckpt)
+    assert q.lastProgress["batchId"] == 2
+
+    got = _stored_carries(spark, ckpt)
+    assert got["symbol"].tolist() == sorted(closes)
+    for row in got.itertuples(index=False):
+        _, st = macd_recurrence_state(closes[row.symbol])
+        want = [12, *(f for t in st for f in t)]
+        have = [getattr(row, c) for c in got.columns[2:]]
+        assert (
+            np.array(have, dtype=np.float64).tobytes()
+            == np.array(want, dtype=np.float64).tobytes()
+        ), (row.symbol, have, want)
+    buckets = {
+        r["symbol"]: r["b"]
+        for r in spark.createDataFrame([(s,) for s in closes], "symbol string")
+        .select("symbol", F.pmod(F.xxhash64("symbol"), F.lit(STATE_BUCKETS)).alias("b"))
+        .collect()
+    }
+    assert dict(zip(got["symbol"], got["_state_bucket"])) == buckets
 
 
 def test_quotefeed_deltas_drops_malformed_and_empty_messages(spark):
@@ -460,9 +541,10 @@ def test_bucket_null_symbol_is_its_own_series():
 
 
 def test_bucket_null_date_order_unchanged():
-    """Rows with a NULL date_str sort after the key's dated rows, in the
-    order they arrived — the same within-key order as a one-key stable
-    sort on date_str — whatever other keys share the batch."""
+    """Rows with a NULL date_str sort before the key's dated rows, as
+    Spark's ascending sort puts them in the batch kernel, in the order
+    they arrived — the same within-key order as a one-key stable
+    NULL-first sort on date_str — whatever other keys share the batch."""
     pdf = pd.DataFrame(
         {
             "symbol": ["A", "B", "A", "A", "B", "A", "A"],
@@ -473,7 +555,9 @@ def test_bucket_null_date_order_unchanged():
     state = FakeGroupState()
     got = pd.concat(list(_update_macd((0,), iter([pdf]), state)))
     for k in ("A", "B"):
-        want = pdf[pdf.symbol == k].sort_values("date_str", kind="mergesort")
+        want = pdf[pdf.symbol == k].sort_values(
+            "date_str", kind="mergesort", na_position="first"
+        )
         mine = got[got.symbol == k]
         assert mine["close"].tolist() == want["close"].tolist(), k
         _assert_series_bit_exact(mine, want["close"].to_numpy())
@@ -558,7 +642,9 @@ def test_replay_macd_in_batches_equals_one_shot_kernel(spark):
     leading one, and runs that end a chunk, whose pending gap decay
     crosses the stored state row) and keys with fewer rows than chunks
     (empty chunks carry state through unchanged, like a micro-batch
-    with no rows for that key)."""
+    with no rows for that key). Each key has one NULL-dated bar, which
+    Spark's ascending sort puts first: the replay must fold it first
+    too."""
     from pyspark.sql import functions as F
 
     from airflow_kafka_spark_spark.operators.indicators import with_macd
@@ -576,6 +662,7 @@ def test_replay_macd_in_batches_equals_one_shot_kernel(spark):
         for i, v in enumerate(rng.normal(100.0, 5.0, size=n)):
             close = None if (sym, i) in nulls else float(v)
             rows.append((sym, f"d{i:03d}", close))
+    rows += [("a", None, 50.0), ("b", None, 120.0)]
     df = spark.createDataFrame(rows, "symbol string, date_str string, close double")
 
     one_shot = with_macd(df, ["symbol"], ["date_str"], "close")
@@ -583,17 +670,17 @@ def test_replay_macd_in_batches_equals_one_shot_kernel(spark):
         replay = replay_macd_in_batches(
             df, ["symbol"], ["date_str"], "close", n_batches=k
         )
-        j = one_shot.select(
-            "symbol", "date_str", "macd_line", "macd_signal", "macd_histogram"
-        ).join(
-            replay.select(
-                "symbol",
-                "date_str",
-                F.col("macd_line").alias("r_line"),
-                F.col("macd_signal").alias("r_signal"),
-                F.col("macd_histogram").alias("r_hist"),
-            ),
-            ["symbol", "date_str"],
+        r = replay.select(
+            F.col("symbol").alias("r_symbol"),
+            F.col("date_str").alias("r_date"),
+            F.col("macd_line").alias("r_line"),
+            F.col("macd_signal").alias("r_signal"),
+            F.col("macd_histogram").alias("r_hist"),
+        )
+        j = one_shot.join(
+            r,
+            (F.col("symbol") == F.col("r_symbol"))
+            & F.col("date_str").eqNullSafe(F.col("r_date")),
         )
         got = j.agg(
             F.count("*").alias("n"),
@@ -601,7 +688,7 @@ def test_replay_macd_in_batches_equals_one_shot_kernel(spark):
             F.sum((~F.col("macd_signal").eqNullSafe(F.col("r_signal"))).cast("long")).alias("s"),
             F.sum((~F.col("macd_histogram").eqNullSafe(F.col("r_hist"))).cast("long")).alias("h"),
         ).collect()[0]
-        assert (got["n"], got["l"], got["s"], got["h"]) == (59, 0, 0, 0), k
+        assert (got["n"], got["l"], got["s"], got["h"]) == (61, 0, 0, 0), k
 
     with pytest.raises(ValueError, match="n_batches"):
         replay_macd_in_batches(df, ["symbol"], ["date_str"], "close", n_batches=0)
