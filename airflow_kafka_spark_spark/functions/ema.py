@@ -113,7 +113,8 @@ def macd_recurrence_state(
     st_fast, st_slow, st_sig = state if state is not None else (None,) * 3
     ema_fast, st_fast = ema_recurrence_state(close, fast, st_fast)
     ema_slow, st_slow = ema_recurrence_state(close, slow, st_slow)
-    line = ema_fast - ema_slow
+    with np.errstate(all="ignore"):  # inf - inf is NaN by contract
+        line = ema_fast - ema_slow
     sig, st_sig = ema_recurrence_state(line, signal, st_sig)
     return (ema_fast, ema_slow, line, sig), (st_fast, st_slow, st_sig)
 
@@ -126,4 +127,5 @@ def macd_columns(
     the line, and their difference. Defined from the first row (no warm-up
     NULLs — ewm adjust=False seeds with x[0])."""
     (_, _, line, sig), _ = macd_recurrence_state(close)
-    return line, sig, line - sig
+    with np.errstate(all="ignore"):
+        return line, sig, line - sig

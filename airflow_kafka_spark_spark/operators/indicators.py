@@ -194,7 +194,8 @@ def resume_runs(
             pos, [n - len(t) + np.arange(len(t)) for n, (t, _) in zip(seen, tail)]
         )
         keep = resumed(np.ones(len(x), bool), [np.zeros(len(t)) for t, _ in tail])
-        with np.errstate(divide="ignore", invalid="ignore"):
+        # IEEE results by contract (inf/NaN closes, sums past 1e308)
+        with np.errstate(all="ignore"):
             out = [_rolling_mean(x_e, ok_e, pos_e, p) for p in MA_PERIODS] if ma else []
             out += [_rsi(x_e, ok_e, pos_e)] if rsi else []
         windows = [(v[keep], m[keep]) for v, m in out]
@@ -293,9 +294,11 @@ def _indicator_pass(
                 _, _, line, sig = cols
                 # from_pandas=True: NaN → NULL (DoubleType NULL, not NaN,
                 # for undefined rows)
+                with np.errstate(all="ignore"):  # inf - inf is NaN
+                    hist = line - sig
                 arrays += [
                     pa.array(arr, type=pa.float64(), from_pandas=True)
-                    for arr in (line, sig, line - sig)
+                    for arr in (line, sig, hist)
                 ]
             key = tuple(batch.column(i)[n - 1].as_py() for i in k_idx)
             carry = new[-1]

@@ -145,8 +145,8 @@ def fixed_point_group_sum(
     decimal_sum: one extra (tiny, post-combine) shuffle stage — worth it
     only when the aggregate itself dominates, e.g. wide TPC-H-q1-style
     scans; measure before swapping (equal work at sf0.1: 1.71 s vs
-    1.93 s for decimal, CHANGELOG Round 5; bench.py
-    ``faceoff_fixed_point`` re-measures it).
+    1.93 s for decimal, CHANGELOG Round 5; the r10–r17 face-off table
+    in CHANGELOG has the later rounds).
     """
     # the scaled-long cast WRAPS silently on overflow in non-ANSI mode
     # (1e14 at scale 6 came back as 7.7e18 garbage, measured) — guard

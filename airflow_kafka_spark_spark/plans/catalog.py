@@ -1205,7 +1205,7 @@ def q_fixed_point_sums(spark, sf_dir):
     accumulation with a decimal final fold, bit-identical to the
     decimal(22,6) sum the oracle runs (~15% faster where the aggregate
     dominates, net of the partial-overflow proof — CHANGELOG Round 5
-    and bench.py faceoff_fixed_point)."""
+    and its r10–r17 face-off table)."""
     li = load_table(spark, sf_dir, "lineitem")
     disc = F.col("l_extendedprice") * (1 - F.col("l_discount"))
     out = fixed_point_group_sum(

@@ -131,6 +131,8 @@ def _fold_macd(
                 "numBars=1 so every bar enters state exactly once."
             )
     state.update(zip(keys, new))
+    with np.errstate(all="ignore"):  # inf - inf is NaN by contract
+        hist = line - sig
     frame = pd.DataFrame(
         {
             key_col: key_vals,
@@ -140,7 +142,7 @@ def _fold_macd(
             "ema26": e26,
             "macd_line": line,
             "macd_signal": sig,
-            "macd_histogram": line - sig,
+            "macd_histogram": hist,
             "n_rows": np.repeat(n_rows, np.diff(bounds)),
         }
     )

@@ -4,17 +4,24 @@ $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on
 local[$SPARK_GRAFT_CPUS] and prints ONE JSON line:
 
     {"metric": "...", "value": <total sec>, "unit": "sec",
-     "queries": {"q1": sec, ...}, "sf": <sf>}
+     "queries": {"q1": sec, ...}, "sf": <sf>, "cpus": N,
+     "default_parallelism": N, ...}
 
 Each query is timed end-to-end (plan + execute) with a ``noop`` sink so
 results are computed on executors but never shipped to the driver —
-measuring the engine, not the collect path.
+measuring the engine, not the collect path. The full payload, with each
+query's probe-normalized times and its ``plan_signature``, goes to
+bench_detail.json next to this script.
 """
 
 from __future__ import annotations
 
+import contextlib
+import io
 import json
 import os
+import re
+import statistics
 import sys
 import time
 
@@ -41,8 +48,6 @@ def load_bench_artifact(path: str, with_path: bool = False):
     resolution, and 'parsed' unwrap applied on one fallback but not
     the other). ``with_path=True`` also returns the file actually
     used (the detail archive when the slim-line fallback fires)."""
-    import re
-
     text = open(path).read().strip()
     try:
         data = json.loads(text)
@@ -94,6 +99,35 @@ def _per_pass_normalized(
         if ratios:
             out[name] = round(sorted(ratios)[len(ratios) // 2], 2)
     return out
+
+
+# join and Python-boundary operators counted by plan_signature
+_PLAN_NODES = (
+    "BroadcastHashJoin ShuffledHashJoin SortMergeJoin BroadcastNestedLoopJoin "
+    "MapInArrow FlatMapGroupsInArrow ArrowEvalPython BatchEvalPython "
+    "FlatMapGroupsInPandasWithState"
+).split()
+# a plan line's operator name, after the tree drawing and codegen stage id
+_NODE_NAME = re.compile(r"^[\s:|+-]*(?:\*\(\d+\) )?(\w+)", re.M)
+
+
+def plan_signature(df) -> dict[str, int]:
+    """The shape of ``df``'s simple-mode physical plan (the string
+    ``df.explain()`` prints; before adaptive re-planning under AQE):
+    its real and reused Exchange counts, and how many of each join kind
+    and Python/Arrow node in ``_PLAN_NODES`` it has (absent = 0)."""
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        df.explain()
+    names = _NODE_NAME.findall(buf.getvalue())
+    sig = {
+        "exchange": sum(
+            n.endswith("Exchange") and n != "ReusedExchange" for n in names
+        ),
+        "reused_exchange": names.count("ReusedExchange"),
+    }
+    sig.update((n, names.count(n)) for n in _PLAN_NODES if n in names)
+    return sig
 
 
 def main() -> None:
@@ -177,41 +211,35 @@ def main() -> None:
     # must not occupy memory while later queries are timed.
     n_runs = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3")))
 
-    def run_once(fn) -> float:
+    plans: dict[str, dict[str, int]] = {}
+
+    def run_once(name, fn) -> float:
         spark.catalog.clearCache()
         t0 = time.perf_counter()
-        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-        return time.perf_counter() - t0
+        df = fn(spark, sf_dir)
+        df.write.format("noop").mode("overwrite").save()
+        sec = time.perf_counter() - t0
+        if name not in plans:  # the first pass, outside the timer
+            plans[name] = plan_signature(df)
+        return sec
 
-    def interleaved(
-        named_fns: list, probes: dict | None = None
-    ) -> tuple[dict[str, list[float]], dict[str, list[float]]]:
-        """One timing sample per (name, pass). ``probes`` ({name: thunk})
-        are spliced into each pass at evenly-spaced positions and timed
-        like queries — each probe sample shares its pass's load window,
-        which is what makes per-pass normalization meaningful."""
-        runs: dict[str, list[float]] = {name: [] for name, _ in named_fns}
-        probe_runs: dict[str, list[float]] = {
-            name: [] for name in (probes or {})
-        }
-        for _ in range(n_runs):
-            for name, fn in _spliced_sequence(named_fns, probes):
-                if name is None:
-                    pname, pfn = fn
-                    t0 = time.perf_counter()
-                    pfn()
-                    probe_runs[pname].append(time.perf_counter() - t0)
-                else:
-                    runs[name].append(run_once(fn))
-        return runs, probe_runs
-
-    all_runs, probe_runs = interleaved(
-        list(headline_queries().items()),
-        probes={
-            "shuffle_groupby": _probe_shuffle,
-            "stage_chain": _probe_chain,
-        },
-    )
+    # one timing sample per (query, pass); the probes are spliced into
+    # each pass at evenly-spaced positions and timed like queries — each
+    # probe sample shares its pass's load window, which is what makes
+    # per-pass normalization meaningful
+    queries = list(headline_queries().items())
+    probes = {"shuffle_groupby": _probe_shuffle, "stage_chain": _probe_chain}
+    all_runs: dict[str, list[float]] = {name: [] for name, _ in queries}
+    probe_runs: dict[str, list[float]] = {name: [] for name in probes}
+    for _ in range(n_runs):
+        for name, fn in _spliced_sequence(queries, probes):
+            if name is None:
+                pname, pfn = fn
+                t0 = time.perf_counter()
+                pfn()
+                probe_runs[pname].append(time.perf_counter() - t0)
+            else:
+                all_runs[name].append(run_once(name, fn))
     shuffle_samples = probe_runs["shuffle_groupby"]
     chain_samples = probe_runs["stage_chain"]
     # calibration keys keep their historical meaning (best observed
@@ -244,42 +272,6 @@ def main() -> None:
         timings[name] = round(min(runs), 3)
         medians[name] = round(sorted(runs)[len(runs) // 2], 3)
 
-    # fixed-point face-off, tracked per round (VERDICT r4 item 7):
-    # the SAME three scale-6 q1 measures through decimal_sum vs the
-    # scaled-BIGINT fixed_point_group_sum. (Earlier rounds compared the
-    # fixed-point 3-measure entry against the FULL 8-aggregate
-    # q1_pricing_summary — unequal work that overstated the win; both
-    # sides now run identical measures. The full q1 keeps decimal
-    # because its scale-10 columns would sit too close to the
-    # fixed-point partial-overflow guard at production partition sizes.)
-    from pyspark.sql import functions as F
-
-    from airflow_kafka_spark_spark.operators.relational import decimal_sum
-    from airflow_kafka_spark_spark.plans.catalog import CATALOG
-    from airflow_kafka_spark_spark.sources.files import load_table
-
-    def q1_decimal_3sums(spark_, sf_dir_):
-        li = load_table(spark_, sf_dir_, "lineitem")
-        disc = F.col("l_extendedprice") * (1 - F.col("l_discount"))
-        return li.groupBy("l_returnflag", "l_linestatus").agg(
-            decimal_sum("l_quantity").alias("sum_qty"),
-            decimal_sum("l_extendedprice").alias("sum_base_price"),
-            decimal_sum(disc).alias("sum_disc_price"),
-        )
-
-    faceoff_runs, _ = interleaved(
-        [
-            ("decimal_3sums", q1_decimal_3sums),
-            ("fixed_point_3sums", CATALOG["fixed_point_sums"].fn),
-        ]
-    )
-    faceoff = {
-        "decimal_3sums": round(min(faceoff_runs["decimal_3sums"]), 3),
-        "fixed_point_3sums": round(min(faceoff_runs["fixed_point_3sums"]), 3),
-        "q1_full_decimal": timings.get("q1_pricing_summary"),
-    }
-    spark.catalog.clearCache()
-
     total = round(sum(timings.values()), 3)
     detail = {
         "metric": "headline_query_set_seconds",
@@ -292,8 +284,13 @@ def main() -> None:
         "runs_per_query": n_runs,
         "interleaved": True,
         "calibration": calibration,
-        "faceoff_fixed_point": faceoff,
+        "plans": plans,
         "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
+        # the core count build_session sized the session with, and what
+        # Spark made of it: a scaling leg whose per-query times do not
+        # move with $SPARK_GRAFT_CPUS can be told from an ignored setting
+        "cpus": int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4)),
+        "default_parallelism": spark.sparkContext.defaultParallelism,
     }
     if n_runs >= 3:
         detail["queries_median"] = medians
@@ -301,46 +298,36 @@ def main() -> None:
         normalized, normalized_chain, detail["sf"]
     )
 
-    # The driver captures only the LAST 2000 chars of stdout and parses
-    # THAT: r10's line grew past 2000 with the normalized columns and
-    # the round's BENCH artifact recorded parsed=null (front-truncated
-    # JSON). The full payload goes to bench_detail.json (committed at
-    # round close — bench_compare.py and the changelog read it); the
-    # printed LINE carries the driver-contract keys plus the compact
-    # cross-round verdict (calibration probes, normalized-median
-    # ratios, watch list) and is length-guarded.
+    # the full payload; the printed line is its length-guarded summary
     try:
-        with open(
-            os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                         "bench_detail.json"), "w"
-        ) as fh:
+        with open(os.path.join(_HERE, "bench_detail.json"), "w") as fh:
             json.dump(detail, fh, indent=1, sort_keys=True)
     except OSError:
         pass
 
-    vs_prev = detail["vs_prev_normalized"] or {}
-    out = {
-        "metric": "headline_query_set_seconds",
-        "value": total,
-        "unit": "sec",
-        "queries": timings,
-        "sf": detail["sf"],
-        "runs_per_query": n_runs,
-        "interleaved": True,
-        "calibration": calibration,
-        "vs_prev_normalized": {
-            k: vs_prev.get(k)
-            for k in (
-                "prev",
-                "median_normalized_ratio",
-                "median_normalized_chain_ratio",
-                "watch_over_1p5x_both",
-            )
-        }
-        if vs_prev
-        else None,
-        "detail": "bench_detail.json",
-    }
+    print(bench_line(detail))
+    spark.stop()
+
+
+def bench_line(detail: dict) -> str:
+    """The printed JSON line for a ``detail`` payload: the driver-contract
+    keys, the run shape (``cpus``, ``default_parallelism``), the probes
+    and the compact verdict, in at most 1950 chars. The driver parses
+    only the LAST 2000 chars of stdout (r10's longer line was recorded
+    as parsed=null), so an oversized line drops the verdict, then the
+    calibration, then (ADVICE r11) its longest-named queries;
+    bench_detail.json always carries the full payload."""
+    out = {k: detail[k] for k in (
+        "metric", "value", "unit", "queries", "sf", "runs_per_query",
+        "interleaved", "cpus", "default_parallelism", "calibration")}
+    out["queries"] = dict(out["queries"])  # the trim must not touch detail
+    vs_prev = detail.get("vs_prev_normalized") or {}
+    out["vs_prev_normalized"] = {
+        k: vs_prev.get(k)
+        for k in ("prev", "median_normalized_ratio",
+                  "median_normalized_chain_ratio", "watch_over_1p5x_both")
+    } if vs_prev else None
+    out["detail"] = "bench_detail.json"
     line = json.dumps(out)
     if len(line) > 1950:  # the driver's 2000-char tail, with margin
         for drop in ("vs_prev_normalized", "calibration"):
@@ -348,16 +335,48 @@ def main() -> None:
             line = json.dumps(out)
             if len(line) <= 1950:
                 break
-    # Hard floor (ADVICE r11): if the headline-query dict itself grows
-    # past the guard, trim its longest-named tail entries rather than
-    # silently reproducing the r10 parsed=null hole — bench_detail.json
-    # always carries the full payload.
     while len(line) > 1950 and out.get("queries"):
         out["queries"].pop(max(out["queries"], key=len))
         out["queries_truncated"] = True
         line = json.dumps(out)
-    print(line)
-    spark.stop()
+    return line
+
+
+def normalized_verdict(old: dict, new: dict) -> dict:
+    """THE cross-round verdict between two bench artifacts (VERDICT r10
+    item 4), at full precision: per query, ``new/old`` of
+    ``queries_normalized`` (throughput probe) and of
+    ``queries_normalized_chain`` (stage-chain probe), their medians, and
+    the WATCH list: over 1.5x on BOTH, which neither cost regime
+    explains — A/B-bisect those before believing 'regression' or
+    'noise'. A 0.0 entry (faster than ~0.005x the probe at 2dp) has no
+    ratio: a NaN would poison the median."""
+    on = old.get("queries_normalized") or {}
+    nn = new.get("queries_normalized") or {}
+    oc = old.get("queries_normalized_chain") or {}
+    nc = new.get("queries_normalized_chain") or {}
+    common = sorted(set(on) & set(nn))
+    ratios = {q: nn[q] / on[q] for q in common if on[q] and nn[q]}
+    chain = {q: nc[q] / oc[q] for q in common if oc.get(q) and nc.get(q)}
+    return {
+        "normalized_ratio": ratios,
+        "normalized_chain_ratio": chain,
+        "median_normalized_ratio": (
+            statistics.median(ratios.values()) if ratios else None
+        ),
+        "median_normalized_chain_ratio": (
+            statistics.median(chain.values()) if chain else None
+        ),
+        "watch_over_1p5x_both": [
+            q for q, r in ratios.items() if r > 1.5 and chain.get(q, 0) > 1.5
+        ],
+    }
+
+
+def _round2(v):
+    if isinstance(v, dict):
+        return {k: _round2(x) for k, x in v.items()}
+    return round(v, 2) if isinstance(v, float) else v
 
 
 def _vs_prev_normalized(
@@ -366,27 +385,19 @@ def _vs_prev_normalized(
     sf,
     artifact_dir: str | None = None,
 ) -> dict | None:
-    """THE standing cross-round verdict (VERDICT r10 item 4): raw
-    seconds are officially non-comparable on this host (r10's probes
-    measured 4.1x r8's identical probes), so the artifact itself
-    records the probe-normalized comparison against the newest prior
-    BENCH_r*.json. Per query, the ratio is taken on queries_normalized
-    AND queries_normalized_chain; a query is a WATCH item only when
-    BOTH exceed the 1.5x bar (neither cost-regime normalization
-    explains it) — watch items get the r10 A/B-bisect methodology (old
-    tree in a /tmp worktree, old vs new minutes apart on today's box)
-    before either 'regression' or 'noise' is believed. Never fails the
-    bench: any problem degrades to None."""
+    """The standing cross-round verdict, recorded in the artifact itself
+    because raw seconds are non-comparable on this host (r10's probes
+    measured 4.1x r8's identical probes): :func:`normalized_verdict`
+    against the newest prior BENCH_r*.json at the same sf, rounded to
+    2dp. Never fails the bench: any problem degrades to None."""
     import glob
-    import re
 
     try:
         # artifacts live next to THIS script, not in the caller's cwd —
         # a cwd-relative glob silently loses the standing cross-round
-        # verdict when bench.py runs from elsewhere (r13 review; the
-        # detail write was already __file__-anchored). artifact_dir
-        # overrides for tests.
-        here = artifact_dir or os.path.dirname(os.path.abspath(__file__))
+        # verdict when bench.py runs from elsewhere (r13 review).
+        # artifact_dir overrides for tests.
+        here = artifact_dir or _HERE
         prevs = sorted(
             (
                 f
@@ -405,36 +416,11 @@ def _vs_prev_normalized(
         prev, prev_file = load_bench_artifact(prevs[-1], with_path=True)
         if prev.get("sf") != sf:
             return None  # cross-sf normalized ratios are nonsense
-        p_norm = prev.get("queries_normalized") or {}
-        p_chain = prev.get("queries_normalized_chain") or {}
-        ratios: dict[str, float] = {}
-        ratios_chain: dict[str, float] = {}
-        watch: list[str] = []
-        for q in sorted(set(p_norm) & set(normalized)):
-            if p_norm.get(q) and normalized.get(q):
-                ratios[q] = round(normalized[q] / p_norm[q], 2)
-            if p_chain.get(q) and normalized_chain.get(q):
-                ratios_chain[q] = round(
-                    normalized_chain[q] / p_chain[q], 2
-                )
-            if ratios.get(q, 0) > 1.5 and ratios_chain.get(q, 0) > 1.5:
-                watch.append(q)
-        if not ratios:
+        v = normalized_verdict(prev, {"queries_normalized": normalized,
+                                      "queries_normalized_chain": normalized_chain})
+        if not v["normalized_ratio"]:
             return None
-        med = sorted(ratios.values())[len(ratios) // 2]
-        med_chain = (
-            sorted(ratios_chain.values())[len(ratios_chain) // 2]
-            if ratios_chain
-            else None
-        )
-        return {
-            "prev": os.path.basename(prev_file),
-            "median_normalized_ratio": med,
-            "median_normalized_chain_ratio": med_chain,
-            "watch_over_1p5x_both": watch,
-            "normalized_ratio": ratios,
-            "normalized_chain_ratio": ratios_chain,
-        }
+        return {"prev": os.path.basename(prev_file), **_round2(v)}
     except Exception:
         return None
 

@@ -14,22 +14,18 @@ an assertion (VERDICT r5 item 2).
 
 from __future__ import annotations
 
-import json
+import os
 import statistics
 import sys
 
+# ONE loader and ONE verdict, owned by bench.py (r13 review: the two
+# private loader copies had diverged in both directions) — resolved
+# next to this script so bench_compare stays runnable from any cwd
+sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+from bench import load_bench_artifact, normalized_verdict  # noqa: E402
 
-def _load(path: str) -> dict:
-    # ONE loader, owned by bench.py (r13 review: the two private
-    # copies had diverged in both directions) — resolve it next to
-    # this script so bench_compare stays runnable from any cwd
-    import os
-    import sys as _sys
 
-    _sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
-    from bench import load_bench_artifact
-
-    return load_bench_artifact(path)
+_load = load_bench_artifact
 
 
 def main() -> int:
@@ -78,46 +74,28 @@ def main() -> int:
         print(f"median NORMALIZED ratio: {statistics.median(norms):.3f} "
               "(>1 = slower than host shift explains)")
 
-    # THE standing cross-round verdict (VERDICT r10 item 4): compare
-    # the probe-normalized columns directly — queries_normalized for
-    # throughput-bound queries, queries_normalized_chain for
-    # iterative/barrier-bound ones. A query is a WATCH item only when
-    # BOTH ratios exceed 1.5x (neither cost regime explains it); watch
-    # items get the A/B-bisect methodology (old tree in a worktree, old
-    # vs new minutes apart on today's box) before being believed.
+    # THE standing cross-round verdict, computed by bench.py's
+    # normalized_verdict: the probe-normalized columns compared directly
     on, nn = old.get("queries_normalized"), new.get("queries_normalized")
-    oc = old.get("queries_normalized_chain") or {}
-    nc = new.get("queries_normalized_chain") or {}
     if on and nn:
-        qs = sorted(set(on) & set(nn))
+        v = normalized_verdict(old, new)
+        ratios, chain = v["normalized_ratio"], v["normalized_chain_ratio"]
+        watch = v["watch_over_1p5x_both"]
         print("\n== normalized-column verdict (the quotable numbers) ==")
         print(f"{'query':28s} {'old_n':>7s} {'new_n':>7s} {'ratio':>6s} "
               f"{'chain':>6s}")
-        watch = []
-        nrs, crs = [], []
-        for q in qs:
-            # a 0.0 old entry (query faster than ~0.005x the probe at
-            # 2dp rounding) has no ratio — skip it like bench.py's
-            # _vs_prev_normalized does; a NaN here poisons the median
-            # (r13 review: statistics.median on a NaN-bearing list is
-            # an arbitrary neighbor value, no error)
-            if not on[q]:
+        for q in sorted(set(on) & set(nn)):
+            if q not in ratios:
                 print(f"{q:28s} {on[q]:7.2f} {nn[q]:7.2f}      -      -")
                 continue
-            r = nn[q] / on[q]
-            rc = (nc[q] / oc[q]) if oc.get(q) and nc.get(q) else None
-            nrs.append(r)
-            if rc is not None:
-                crs.append(rc)
-            flag = ""
-            if r > 1.5 and (rc or 0) > 1.5:
-                watch.append(q)
-                flag = "  WATCH"
-            print(f"{q:28s} {on[q]:7.2f} {nn[q]:7.2f} {r:6.2f} "
-                  + (f"{rc:6.2f}" if rc is not None else "     -") + flag)
-        if nrs:
-            print(f"median normalized ratio: {statistics.median(nrs):.3f}"
-                  + (f"; chain: {statistics.median(crs):.3f}" if crs else ""))
+            rc = chain.get(q)
+            print(f"{q:28s} {on[q]:7.2f} {nn[q]:7.2f} {ratios[q]:6.2f} "
+                  + (f"{rc:6.2f}" if rc is not None else "     -")
+                  + ("  WATCH" if q in watch else ""))
+        if ratios:
+            print(f"median normalized ratio: {v['median_normalized_ratio']:.3f}"
+                  + (f"; chain: {v['median_normalized_chain_ratio']:.3f}"
+                     if chain else ""))
         if watch:
             print(f"WATCH (>1.5x on BOTH normalizations, A/B-bisect "
                   f"before believing): {', '.join(watch)}")

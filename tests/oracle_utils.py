@@ -5,7 +5,7 @@ numeric deviation on mismatch to aid debugging."""
 
 from __future__ import annotations
 
-import math
+import hashlib
 import time
 import traceback
 
@@ -40,10 +40,21 @@ def _canon(pdf: pd.DataFrame) -> pd.DataFrame:
     return pdf
 
 
+def output_hash(pdf: pd.DataFrame) -> str:
+    """sha256 of a result's canonical form (``_canon``: columns by name,
+    rows sorted), so it does not depend on row or column order."""
+    canon = _canon(pdf)
+    text = canon.to_csv(index=False, na_rep="<NULL>", lineterminator="\n")
+    return hashlib.sha256(text.encode()).hexdigest()
+
+
 def compare(spark_df, oracle_pdf: pd.DataFrame) -> list[str]:
-    """Return a list of mismatch descriptions (empty → parity)."""
+    """Return a list of mismatch descriptions (empty → parity).
+    ``spark_df`` is a Spark DataFrame or its ``toPandas()`` frame."""
     problems: list[str] = []
-    spark_pdf = spark_df.toPandas()
+    spark_pdf = (
+        spark_df if isinstance(spark_df, pd.DataFrame) else spark_df.toPandas()
+    )
     if len(spark_pdf) != len(oracle_pdf):
         problems.append(f"row count: spark={len(spark_pdf)} oracle={len(oracle_pdf)}")
     s_cols, o_cols = sorted(spark_pdf.columns), sorted(oracle_pdf.columns)
@@ -108,9 +119,10 @@ def check_entry(spark, con, fn, sf_dir: str, oracle: str | None) -> dict:
     Returns ``{"ok": bool, "sec": float}`` plus detail keys tagged with
     the timestamp type ``<ts>`` (``ntz`` or ``ltz``): ``problems_<ts>``
     for an oracle mismatch, ``err_<ts>`` for a query error,
-    ``err_canon_<ts>`` for a pandas canonicalization failure, and
-    ``rows_only_<ts>`` (the row count) for an entry without an
-    oracle."""
+    ``err_canon_<ts>`` for a pandas canonicalization failure,
+    ``rows_only_<ts>`` (the row count) for an entry without an oracle,
+    and ``hash_<ts>``, the :func:`output_hash` of the Spark output
+    (for a rows-only entry, of its first ``CANON_CAP`` rows)."""
     t0 = time.time()
     entry: dict = {"ok": True}
     for ts_type in TS_TYPES:
@@ -119,10 +131,12 @@ def check_entry(spark, con, fn, sf_dir: str, oracle: str | None) -> dict:
         try:
             df = fn(spark, sf_dir)
             if oracle is not None:
-                problems = compare(df, con.execute(oracle).df())
+                pdf = df.toPandas()
+                problems = compare(pdf, con.execute(oracle).df())
                 if problems:
                     entry["ok"] = False
                     entry[f"problems_{tag}"] = problems[:3]
+                entry[f"hash_{tag}"] = output_hash(pdf)
             else:
                 # rows-only entries: ONE bounded execution per ts type —
                 # limit().toPandas() keeps the real Arrow dtype path (the
@@ -134,6 +148,7 @@ def check_entry(spark, con, fn, sf_dir: str, oracle: str | None) -> dict:
                 entry[f"rows_only_{tag}"] = len(pdf)
                 try:
                     pdf.sort_values(list(pdf.columns)).reset_index(drop=True)
+                    entry[f"hash_{tag}"] = output_hash(pdf)
                 except Exception:
                     entry["ok"] = False
                     entry[f"err_canon_{tag}"] = err_tail()

@@ -216,3 +216,66 @@ def test_bench_scale_probes_importable():
         bench_scale.offset_fence_overhead,
     ):
         assert callable(fn)
+
+
+def test_compare_and_vs_prev_share_one_verdict(tmp_path, capsys, monkeypatch):
+    """bench_compare.main prints, and bench._vs_prev_normalized records,
+    the same ratios, medians and watch list on the watch-bar fixture."""
+    import bench
+    from bench_compare import main
+
+    qs = ("q_slow", "q_chainy", "q_ok")
+    old = {"queries": dict.fromkeys(qs, 1.0),
+           "queries_normalized": dict.fromkeys(qs, 1.0),
+           "queries_normalized_chain": dict.fromkeys(qs, 0.5)}
+    new = {"queries": dict(zip(qs, (2.0, 2.0, 1.0))),
+           "queries_normalized": dict(zip(qs, (2.0, 2.0, 1.0))),
+           "queries_normalized_chain": dict(zip(qs, (1.0, 0.5, 0.5)))}
+    monkeypatch.setattr(sys, "argv", [
+        "bench_compare.py",
+        _write(tmp_path, "old.json", old),
+        _write(tmp_path, "new.json", new),
+    ])
+    assert main() == 0
+    out = capsys.readouterr().out.split("normalized-column verdict")[1]
+    rows = [l.split() for l in out.splitlines()]
+    printed = {r[0]: (float(r[3]), float(r[4])) for r in rows if r and r[0] in qs}
+    med = [r for r in rows if r[:2] == ["median", "normalized"]][0]
+
+    _write(tmp_path, "BENCH_r1.json", {"sf": 0.1, **old})
+    got = bench._vs_prev_normalized(
+        new["queries_normalized"], new["queries_normalized_chain"], 0.1,
+        artifact_dir=str(tmp_path),
+    )
+    assert printed == {q: (got["normalized_ratio"][q],
+                           got["normalized_chain_ratio"][q]) for q in qs}
+    assert (float(med[3].rstrip(";")), float(med[5])) == (
+        got["median_normalized_ratio"], got["median_normalized_chain_ratio"])
+    assert got["watch_over_1p5x_both"] == ["q_slow"]
+    assert "before believing): q_slow\n" in out
+
+
+def test_bench_line_trim_keeps_run_shape_and_contract_keys():
+    """An oversized payload trims to the driver's 1950-char budget;
+    cpus and default_parallelism survive it, and the driver-contract
+    keys come through unchanged."""
+    import bench
+
+    detail = {
+        "metric": "headline_query_set_seconds", "value": 276.0, "unit": "sec",
+        "queries": {f"headline_query_{i:02d}": 1.0 + i for i in range(23)},
+        "sf": 0.1, "runs_per_query": 3, "interleaved": True,
+        "cpus": 8, "default_parallelism": 8,
+        "calibration": {f"probe_{i}_per_pass": [0.123] * 40 for i in range(8)},
+        "vs_prev_normalized": {"watch_over_1p5x_both": ["q"] * 200},
+    }
+    for n_long in (0, 40):  # 40: past the floor, long query names go
+        detail["queries"].update({f"q{i:03d}_" + "x" * 60: 1.0 for i in range(n_long)})
+        line = bench.bench_line(detail)
+        out = json.loads(line)
+        assert len(line) <= 1950
+        assert (out["cpus"], out["default_parallelism"]) == (8, 8)
+        for key in ("metric", "value", "unit", "sf"):
+            assert out[key] == detail[key], key
+        assert "calibration" not in out and "vs_prev_normalized" not in out
+        assert (out["queries"] == detail["queries"]) == (not n_long)

@@ -490,8 +490,7 @@ def test_indicator_kernel_matches_window_reference(spark, batch_rows):
     for key, t, v in rows:
         by_key.setdefault(key, []).append(np.nan if v is None else v)
     for key, closes in by_key.items():
-        with np.errstate(invalid="ignore"):
-            macd = macd_columns(np.array(closes, dtype=np.float64))
+        macd = macd_columns(np.array(closes, dtype=np.float64))
         for t in range(len(closes)):
             want = window[(key, t)] + tuple(
                 None if np.isnan(col[t]) else _bits(col[t]) for col in macd

@@ -9,7 +9,7 @@ import pytest
 from airflow_kafka_spark_spark.plans.catalog import CATALOG
 
 from .conftest import SF_DIR
-from .oracle_utils import compare, duck_connection
+from .oracle_utils import compare, duck_connection, output_hash
 
 ORACLE_QUERIES = [name for name, q in CATALOG.items() if q.oracle is not None]
 
@@ -36,3 +36,18 @@ def test_rows_only_queries_run(spark):
     for name, q in CATALOG.items():
         if q.oracle is None:
             assert q.fn(spark, SF_DIR).count() > 0, name
+
+
+def test_output_hash_ignores_order_and_sees_one_value():
+    """The hash oracle_subset prints: the same rows in another row or
+    column order hash alike; one changed value (by one ULP) does not."""
+    import pandas as pd
+
+    pdf = pd.DataFrame(
+        {"k": ["a", "b", None], "v": [0.1 + 0.2, float("nan"), 3.0], "n": [1, 2, 3]}
+    )
+    shuffled = pdf.iloc[[2, 0, 1]][["n", "v", "k"]].reset_index(drop=True)
+    assert output_hash(shuffled) == output_hash(pdf)
+    changed = pdf.copy()
+    changed.loc[0, "v"] = 0.3
+    assert output_hash(changed) != output_hash(pdf)

@@ -866,3 +866,27 @@ def test_running_macd_cert_shuffle_hash_no_corpus_broadcast(spark):
         assert "events" not in sub and "EvalPython" not in sub, (
             f"corpus-scale side under BroadcastExchange:\n{sub}"
         )
+
+
+def test_plan_signature_counts_exchanges_joins_and_python_nodes(spark):
+    """bench.py records plan_signature for every headline query in
+    bench_detail.json: pin its counts on three tiny plans."""
+    from bench import plan_signature
+
+    from airflow_kafka_spark_spark.operators.indicators import with_indicators
+
+    grouped = spark.range(100).groupBy((F.col("id") % 3).alias("g")).count()
+    assert plan_signature(grouped) == {"exchange": 1, "reused_exchange": 0}
+
+    small = spark.range(10).withColumnRenamed("id", "k")
+    joined = spark.range(100).join(F.broadcast(small), F.col("id") == F.col("k"))
+    sig = plan_signature(joined)
+    assert sig["BroadcastHashJoin"] == 1, sig
+    assert "SortMergeJoin" not in sig and "ShuffledHashJoin" not in sig, sig
+
+    bars = spark.range(50).select(
+        (F.col("id") % 5).alias("k"), F.col("id").alias("t"),
+        F.col("id").cast("double").alias("close"),
+    )
+    sig = plan_signature(with_indicators(bars, ["k"], ["t"]))
+    assert sig["MapInArrow"] == 1 and sig["exchange"] == 1, sig

@@ -1276,13 +1276,11 @@ def test_resume_runs_chunked_equals_one_call(closes, data, ma, rsi, macd):
     ]
     flags = {"ma": ma, "rsi": rsi, "macd": macd}
     one_carry: dict = {}
-    with np.errstate(invalid="ignore"):  # inf - inf in the MACD line
-        want = _fold(keys, x, ok, [np.arange(n)], one_carry, flags)
+    want = _fold(keys, x, ok, [np.arange(n)], one_carry, flags)
     assert len(want) == 2 * ma + rsi + 4 * macd
     for shape, chunks in shapes.items():
         carry: dict = {}
-        with np.errstate(invalid="ignore"):
-            got = _fold(keys, x, ok, [c for c in chunks if len(c)], carry, flags)
+        got = _fold(keys, x, ok, [c for c in chunks if len(c)], carry, flags)
         for (gv, gm), (wv, wm) in zip(got, want):
             if wm is None:
                 assert _same_bits(gv, wv), shape
@@ -1292,3 +1290,24 @@ def test_resume_runs_chunked_equals_one_call(closes, data, ma, rsi, macd):
         assert carry.keys() == one_carry.keys(), shape
         for k in carry:
             assert _same_carry(carry[k], one_carry[k]), (shape, k)
+
+
+def test_indicator_step_is_silent_on_ieee_edge_closes():
+    """±inf and 1e308 closes have results the contract defines (inf,
+    NaN), so the indicator step computes them without a RuntimeWarning:
+    in an executor, a warning per Arrow batch on the worker's stderr."""
+    import warnings
+
+    from airflow_kafka_spark_spark.functions.ema import macd_columns
+    from airflow_kafka_spark_spark.operators.indicators import resume_runs
+
+    x = np.array([1e308, 1e308, np.inf, -np.inf, 1.0, 1e308, -1e308] * 4)
+    ok = np.ones(len(x), dtype=bool)
+    with warnings.catch_warnings():
+        warnings.simplefilter("error", RuntimeWarning)
+        windows, macd, _ = resume_runs(
+            x, ok, [0, 10, len(x)], [None, None], ma=True, rsi=True, macd=True
+        )
+        line, sig, hist = macd_columns(x)
+    assert np.isinf(windows[0][0][1]) and np.isnan(line[2]), (windows, line)
+    assert len(macd) == 4 and np.isnan(hist[3])
